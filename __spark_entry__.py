@@ -102,6 +102,21 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # ------------------------------------------------------- oracle-checked set
 
+_SIZE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
+               "t": 1 << 40, "p": 1 << 50}
+
+
+def _size_bytes(value: str, default: int = 128 << 20) -> int:
+    """A Spark byte-size conf value ("134217728", "128m", "128MB",
+    "1g") in bytes; ``default`` for anything unparsable or zero."""
+    import re
+
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", str(value).lower())
+    if not m or int(m.group(1)) == 0:
+        return default
+    return int(m.group(1)) * _SIZE_UNITS[m.group(2)]
+
+
 def q1_pricing_summary(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     # r8: the sf parquet files are single-row-group, so the scan is ONE
@@ -114,8 +129,8 @@ def q1_pricing_summary(spark, sf_dir):
     # added. The aggregation is exact decimal (order-independent), so
     # the result is bit-identical either way.
     cores = spark.sparkContext.defaultParallelism
-    max_split = int(spark.conf.get("spark.sql.files.maxPartitionBytes",
-                                   str(128 << 20)).rstrip("b"))
+    max_split = _size_bytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20)))
     n_splits = sum(
         -(-os.path.getsize(p.removeprefix("file:")) // max_split)
         for p in li.inputFiles())

@@ -58,7 +58,8 @@ def code_lengths(counts: np.ndarray, max_len: int = MAX_LEN) -> np.ndarray:
     Two-queue construction over the count-sorted alphabet, then the BITS
     adjustment of ITU-T T.81 K.3: repeatedly take a pair from the longest
     over-limit length, move one code up and rebalance, which preserves the
-    Kraft equality while capping depth.
+    Kraft equality while capping depth. Raises ValueError when more than
+    2^max_len symbols are present: no prefix code that short exists.
 
     Hot path is a compiled C kernel (native/kernels.c
     ``huff_code_lengths``, r8 — the two-queue merge is a data-dependent
@@ -85,6 +86,9 @@ def _code_lengths_py(counts: np.ndarray,
     m = len(present)
     if m == 0:
         return lens
+    if max_len < 0 or m > 1 << max_len:
+        raise ValueError(f"huffman: {m} symbols do not fit codes of at "
+                         f"most {max_len} bits")
     if m == 1:
         lens[present[0]] = 1
         return lens

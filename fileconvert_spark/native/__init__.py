@@ -569,7 +569,9 @@ def huff_code_lengths(counts, max_len: int):
     returns uint8[k] lens or None when unavailable. Byte-identical to
     the NumPy/Python path in huffman.code_lengths (property-tested) —
     the merge is a data-dependent sequential chain, so the Python loop
-    was ~4 ms/call at 4k symbols on the encode hot path (r8)."""
+    was ~4 ms/call at 4k symbols on the encode hot path (r8). Raises
+    ValueError when more than 2^max_len symbols are present (no prefix
+    code that short exists)."""
     import numpy as np
 
     lib = load()
@@ -580,6 +582,9 @@ def huff_code_lengths(counts, max_len: int):
     rc = lib.huff_code_lengths(
         c.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)), int(c.size),
         int(max_len), _u8p(lens))
+    if rc == -1:
+        raise ValueError(f"huffman: {int((c > 0).sum())} symbols do not "
+                         f"fit codes of at most {max_len} bits")
     if rc < 0:
         return None
     return lens[: c.size]

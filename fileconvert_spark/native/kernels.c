@@ -782,7 +782,9 @@ int64_t unpack_bits(const uint8_t *data, int64_t nbytes, int64_t n,
  * unvectorizable in NumPy, hence this kernel (r8: ~4 ms/call in Python
  * at 4k symbols, called once per eligible int stream on the encode hot
  * path). Fills lens_out[k] (0 = unused symbol); returns the number of
- * present symbols, or -1 on allocation failure (caller falls back).
+ * present symbols, -1 when more than 2^max_len symbols are present (no
+ * such code exists; caller raises), or -2 on allocation failure (caller
+ * falls back).
  */
 typedef struct { int64_t w; int64_t idx; } hclw;
 
@@ -797,6 +799,9 @@ int64_t huff_code_lengths(const int64_t *counts, int64_t k,
     int64_t m = 0, i;
     for (i = 0; i < k; i++) { lens_out[i] = 0; if (counts[i] > 0) m++; }
     if (m == 0) return 0;
+    /* past 2^max_len symbols Adjust_BITS would walk bits[] below index 0 */
+    if (max_len < 0 || (max_len < 62 && m > ((int64_t)1 << max_len)))
+        return -1;
     if (m == 1) {
         for (i = 0; i < k; i++) if (counts[i] > 0) { lens_out[i] = 1; break; }
         return 1;
@@ -809,7 +814,7 @@ int64_t huff_code_lengths(const int64_t *counts, int64_t k,
     int64_t *depth = (int64_t *)calloc((size_t)(m - 1), sizeof(int64_t));
     int64_t *raw = (int64_t *)calloc((size_t)m, sizeof(int64_t));
     int64_t *bits = NULL;
-    int64_t ret = -1;
+    int64_t ret = -2;
     if (!order || !leaf_w || !node_w || !kid0 || !kid1 || !depth || !raw)
         goto done;
     {

@@ -7,11 +7,11 @@ with codec auto-selection (functions/codecs.py), and emits one ``enc`` row
 per (partition, chunk, column). No RDDs, no per-row Python, no driver-side
 data movement.
 
-The decode executor is an ``applyInPandas`` grouped by (part_id, chunk_id):
-one shuffle of *compressed* bytes, then each group reconstructs its chunk's
-columns bit-identically. At 100 TB the shuffle moves only encoded payloads
-(typically 10-20x smaller than raw), and chunk groups are independent —
-parallelism = number of chunks.
+Decode is one chunk decoder (``decode_chunk``) with two callers:
+plans/manifest.py ``decode_table`` reads an encoded table part by part
+with no shuffle, and ``decode_df`` restores an in-memory ``encode_df``
+result after one shuffle of *compressed* bytes grouped by (part_id,
+chunk_id). Either way each chunk's columns come back bit-identically.
 
 Capability parity: reference = renesugar/FileConvert csv2parquet/parquet2csv
 two-pass pipeline (BASELINE.json line 6; checkout empty, SURVEY.md §0) —
@@ -556,24 +556,9 @@ def decode_column(codec: str, payload: bytes, dict_blob: bytes | None,
                 "bytes were corrupted at rest (expected "
                 f"{bytes(expect_sha).hex()[:16]}…, got {got.hex()[:16]}…)")
     if '"dp":1' in meta_json:
-        if page_dict is None:
-            raise DecodeError(
-                f"decode{where}: chunk references a part dictionary page "
-                "(meta dp=1) but no dictpage row was provided — encoded "
-                "rows were separated from their part file")
-        # chunk dict is a packed local->global map into the page; the
-        # page blob's sha rides in the (sha-covered) chunk meta, so the
-        # integrity envelope extends to the page bytes
-        meta_ps = json.loads(meta_json).get("ps")
-        page_vals = _page_values(page_dict, meta_ps, where)
-        from ..functions.bitpack import unpack_uints_auto
-
-        local_map, _ = unpack_uints_auto(memoryview(dict_blob))
-        if len(local_map) and int(local_map.max()) >= len(page_vals):
-            raise DecodeError(
-                f"decode{where}: dictionary-page map references value "
-                f"{int(local_map.max())} past page size {len(page_vals)}")
-        dict_blob = page_vals.take(pa.array(local_map.astype(np.int64)))
+        # chunk dict is a packed local->global map into the part's page
+        dict_blob = resolve_page_dict(page_dict, dict_blob,
+                                      json.loads(meta_json).get("ps"), where)
     try:
         out = _decode_column_checked(codec, payload, dict_blob, meta_json,
                                      n_rows, validity)
@@ -719,8 +704,20 @@ _PAGE_MAX_BYTES = 1 << 30   # never build a >1 GB page array in a worker
 _PAGE_CACHE: dict[str, pa.Array] = {}
 
 
-def _page_values(page_blob: bytes, expect_ps: str | None,
-                 where: str) -> pa.Array:
+def resolve_page_dict(page_blob: bytes | None, map_blob: bytes,
+                      expect_ps: str | None, where: str = "") -> pa.Array:
+    """A dp=1 chunk's own value dictionary: the part dictionary page's
+    values taken through the chunk's packed local->global map. The page
+    blob's sha rides in the (sha-covered) chunk meta as ``ps``, so the
+    integrity envelope extends to the page bytes. The one page resolver
+    for decode (decode_column) and compaction (plans/compact.py)."""
+    from ..functions.bitpack import unpack_uints_auto
+
+    if page_blob is None:
+        raise DecodeError(
+            f"decode{where}: chunk references a part dictionary page "
+            "(meta dp=1) but no dictpage row was provided — encoded "
+            "rows were separated from their part file")
     got_ps = hashlib.sha256(page_blob).hexdigest()
     if expect_ps is not None and got_ps != expect_ps:
         raise DecodeError(
@@ -735,7 +732,12 @@ def _page_values(page_blob: bytes, expect_ps: str | None,
         if len(_PAGE_CACHE) > 64:
             _PAGE_CACHE.clear()
         _PAGE_CACHE[got_ps] = vals
-    return vals
+    local_map, _ = unpack_uints_auto(memoryview(map_blob))
+    if len(local_map) and int(local_map.max()) >= len(vals):
+        raise DecodeError(
+            f"decode{where}: dictionary-page map references value "
+            f"{int(local_map.max())} past page size {len(vals)}")
+    return vals.take(pa.array(local_map.astype(np.int64)))
 
 
 def consolidate_part_dicts(fam_rows: list[dict], all_columns: list[str],
@@ -870,18 +872,35 @@ def consolidate_part_dicts(fam_rows: list[dict], all_columns: list[str],
     return out
 
 
-def decode_chunk_table(enc_tbl: pa.Table, column_order: list[str]) -> pa.Table:
-    """Decode one chunk's enc rows back into the original columns."""
-    by_col = {}
-    for row in enc_tbl.to_pylist():  # one C-level conversion, no as_py loop
-        by_col[row["column"]] = decode_column(
-            row["codec"], row["payload"], row["dict"], row["meta"],
-            row["n_rows"], row["validity"],
-            expect_sha=row.get("sha256_chunk"),
-            ctx=f"part={row['part_id']} chunk={row['chunk_id']} "
-                f"column={row['column']}")
-    arrays = [by_col[c] for c in column_order]
-    return pa.Table.from_arrays(arrays, names=column_order)
+def decode_chunk(rows: dict[str, dict], column_order: list[str],
+                 pages: dict[str, bytes] | None = None) -> pa.RecordBatch:
+    """One chunk's enc rows (column -> enc row dict) -> a RecordBatch of
+    the ``column_order`` columns, every column sha-checked by
+    decode_column. ``pages``: the part's dictionary-page blobs by column
+    (dp chunks). A missing column row raises DecodeError — the manifest
+    and the encoded rows disagree. The one chunk decoder for
+    decode_table's part reader and decode_df."""
+    missing = [c for c in column_order if c not in rows]
+    if missing:
+        row = next(iter(rows.values()))
+        raise DecodeError(
+            f"decode: incomplete chunk part_id={row['part_id']} "
+            f"chunk_id={row['chunk_id']} — missing encoded columns "
+            f"{missing} (have {sorted(rows)}); the manifest and the "
+            "encoded rows disagree (torn write or mixed manifests?)")
+    arrays = []
+    for c in column_order:
+        row = rows[c]
+        a = decode_column(row["codec"], row["payload"], row["dict"],
+                          row["meta"], row["n_rows"], row["validity"],
+                          expect_sha=row["sha256_chunk"],
+                          ctx=f"part={row['part_id']} "
+                              f"chunk={row['chunk_id']} column={c}",
+                          page_dict=(pages or {}).get(c))
+        if isinstance(a, pa.ChunkedArray):
+            a = a.combine_chunks()
+        arrays.append(a)
+    return pa.RecordBatch.from_arrays(arrays, names=column_order)
 
 
 def make_encode_fn(chunk_rows: int = DEFAULT_CHUNK_ROWS,
@@ -988,59 +1007,28 @@ def decode_df(enc_df, src_schema):
     to Arrow record batches — no pandas on the decode path, so every
     Arrow type the codecs support (incl. struct/map/list) flows through.
 
-    Part dictionary pages (consolidate_part_dicts): the (part, chunk)
-    grouping separates a dp chunk from its page row, so pages are split
-    off and LEFT-JOINED back onto chunk rows by (part_id, column) before
-    the repartition — the generic path pays the page bytes once per
-    referencing chunk in the shuffle (the narrow decode_table path reads
-    them in place for free; this fallback works on any enc DataFrame).
+    For in-memory encode_df output. Encoded table directories are read
+    by plans/manifest.py decode_table, which reads each part's
+    dictionary pages in place: page rows are skipped here, so a chunk
+    that references one (meta dp=1) raises DecodeError.
     """
-    from pyspark.sql import functions as F
-
     column_order = [f.name for f in src_schema.fields]
-    enc_df = enc_df.filter(F.col("chunk_id") != PAGE_CHUNK_ID).join(
-        enc_df.filter((F.col("chunk_id") == PAGE_CHUNK_ID)
-                      & F.col("dict").isNotNull())
-        .select("part_id", "column",
-                F.col("dict").alias("_page_dict")),
-        ["part_id", "column"], "left")
+    needed = set(column_order)
 
     def decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         groups: dict[tuple[int, int], dict[str, dict]] = {}
-        expected = len(column_order)
-
-        def build(cols: dict[str, dict]) -> pa.RecordBatch:
-            arrays = []
-            for c in column_order:
-                row = cols[c]
-                a = decode_column(row["codec"], row["payload"], row["dict"],
-                                  row["meta"], row["n_rows"], row["validity"],
-                                  expect_sha=row.get("sha256_chunk"),
-                                  ctx=f"part={row['part_id']} "
-                                      f"chunk={row['chunk_id']} column={c}",
-                                  page_dict=row.get("_page_dict"))
-                if isinstance(a, pa.ChunkedArray):
-                    a = a.combine_chunks()
-                arrays.append(a)
-            return pa.RecordBatch.from_arrays(arrays, names=column_order)
-
-        needed = set(column_order)
         for b in batches:
             for row in b.to_pylist():  # few rows per batch; blobs copy once
-                if row["column"] not in needed:
-                    continue  # decoding a projection of the encoded table
+                if (row["column"] not in needed
+                        or row["chunk_id"] == PAGE_CHUNK_ID):
+                    continue  # a projection, or a part dictionary page
                 key = (row["part_id"], row["chunk_id"])
                 cols = groups.setdefault(key, {})
                 cols[row["column"]] = row
-                if len(cols) == expected:  # chunk complete -> emit eagerly
-                    yield build(groups.pop(key))
-        for key, cols in groups.items():  # incomplete chunks are corruption
-            missing = needed - set(cols)
-            raise ValueError(
-                f"decode: chunk part_id={key[0]} chunk_id={key[1]} is "
-                f"incomplete — missing encoded columns {sorted(missing)} "
-                f"(have {sorted(cols)}); the manifest and the encoded rows "
-                "disagree (torn write or mixed manifests?)")
+                if len(cols) == len(needed):  # chunk complete -> emit
+                    yield decode_chunk(groups.pop(key), column_order)
+        for cols in groups.values():
+            decode_chunk(cols, column_order)  # incomplete: raises
 
     return (
         enc_df.repartition("part_id", "chunk_id")

@@ -76,10 +76,11 @@ def plan_buckets(
     # single TakeOrdered job (the previous shape paid a second full
     # weight scan, or a persisted cache, for the total). Only past the
     # cap (10^8-repo territory) does the exact total need its own
-    # aggregate; that branch persists `sizes` so the weight scan still
-    # runs once. Determinism is unchanged: the ordering is total on
-    # (bytes, key), and the heavy threshold filter applied driver-side
-    # selects exactly the rows the old filter-then-limit collected.
+    # aggregate, a second scan of the weights (the collect above has
+    # already run, so nothing cached now could be reused). Determinism
+    # is unchanged: the ordering is total on (bytes, key), and the heavy
+    # threshold filter applied driver-side selects exactly the rows the
+    # old filter-then-limit collected.
     driver_cap = 65536
     top = (sizes.orderBy(F.desc("bytes"), F.asc(key_col))
            .limit(driver_cap + 1))
@@ -90,14 +91,10 @@ def plan_buckets(
         all_rows = rows
     else:
         # key count exceeds the driver cap: pay the exact-total aggregate
-        # on a persisted frame (scan-once), keep the capped top list
-        sizes.persist()
-        try:
-            total_row = sizes.agg(
-                F.sum("bytes").alias("total"),
-                F.count("*").alias("n_keys")).collect()[0]
-        finally:
-            sizes.unpersist()
+        # (its own scan), keep the capped top list
+        total_row = sizes.agg(
+            F.sum("bytes").alias("total"),
+            F.count("*").alias("n_keys")).collect()[0]
         total = int(total_row["total"] or 0)
         n_keys = int(total_row["n_keys"])
         all_rows = rows[:driver_cap]

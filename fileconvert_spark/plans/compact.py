@@ -3,12 +3,12 @@ the engine format (SURVEY.md §2 B13/B14 lifecycle companion).
 
 Why it exists: the streaming incremental encoder (streaming/incremental.py)
 and any fine-bucketed job accrete SMALL part files over time. Decode-side
-task grouping (decode_table ``task_target_bytes``) already keeps read
-parallelism healthy, but the file COUNT itself still grows without bound —
-manifest-list size, listdir cost, object-store GET count, and per-file
-footer overhead all scale with parts, not bytes. Compaction merges runs of
-consecutive small parts into ~target-size parts WITHOUT decoding a single
-value:
+task grouping (decode_table packs consecutive parts into ~64 MiB tasks)
+already keeps read parallelism healthy, but the file COUNT itself still
+grows without bound — manifest-list size, listdir cost, object-store GET
+count, and per-file footer overhead all scale with parts, not bytes.
+Compaction merges runs of consecutive small parts into ~target-size parts
+WITHOUT decoding a single value:
 
 - chunk payloads move byte-identical (codecs are chunk-local by design);
 - part dictionary pages (format v4) are first expanded back into
@@ -60,7 +60,6 @@ import json
 import os
 import time
 
-import numpy as np
 import pyarrow as pa
 
 from . import fsio
@@ -70,13 +69,16 @@ from ..operators.encode import (
     PAGE_CHUNK_ID,
     chunk_integrity_sha,
     consolidate_part_dicts,
-    _page_values,
+    resolve_page_dict,
 )
 from .manifest import (
     MANIFEST_SPARK_SCHEMA,
     check_format_version,
     invalidate_manifest_list,
+    manifest_batch,
+    part_id_of,
     read_all_manifests,
+    read_table_meta,
     write_manifest_list,
     write_part_file,
 )
@@ -89,7 +91,6 @@ def _expand_dict_pages(tbl: pa.Table, src_pid: int) -> list[dict]:
     dropped and every dp-chunk's packed local->global map is materialized
     back into a chunk-local value dictionary (integrity sha recomputed —
     the page sha check runs first, so the envelope never weakens)."""
-    from ..functions.bitpack import unpack_uints_auto
     from ..functions.codecs import _flagged_blob_encode
 
     chunk_ids = tbl.column("chunk_id").to_pylist()
@@ -116,16 +117,10 @@ def _expand_dict_pages(tbl: pa.Table, src_pid: int) -> list[dict]:
         meta = json.loads(r["meta"])
         if meta.get("dp") != 1:
             continue
-        blob = pages.get(r["column"])
-        if blob is None:
-            raise ValueError(
-                f"compact: part {src_pid} chunk {r['chunk_id']} column "
-                f"{r['column']!r} references a dictionary page that is "
-                "missing from its part file")
-        vals = _page_values(blob, meta.get("ps"),
-                            f" [compact part {src_pid}]")
-        local_map, _ = unpack_uints_auto(memoryview(r["dict"]))
-        local_vals = vals.take(pa.array(local_map.astype(np.int64)))
+        local_vals = resolve_page_dict(
+            pages.get(r["column"]), r["dict"], meta.get("ps"),
+            f" [compact part {src_pid} chunk {r['chunk_id']} "
+            f"column {r['column']!r}]")
         new_dict = _flagged_blob_encode(local_vals)
         meta.pop("dp", None)
         meta.pop("ps", None)
@@ -185,14 +180,12 @@ def _merge_group(out_dir: str, new_pid: int, src_pids: list[int],
     # cross-part dictionary-page consolidation over the merged part: the
     # whole point of merging clustered small parts — value overlap that
     # per-part pages could not capture
-    if not os.environ.get("FCS_NO_DICTPAGES"):
-        fam = [r for r in merged if r["codec"] in DICT_FAMILY]
-        if fam:
-            new_rows = consolidate_part_dicts(fam, sorted(all_cols),
-                                              new_pid)
-            if new_rows is not None:
-                merged = [r for r in merged
-                          if r["codec"] not in DICT_FAMILY] + new_rows
+    fam = [r for r in merged if r["codec"] in DICT_FAMILY]
+    if fam:
+        new_rows = consolidate_part_dicts(fam, sorted(all_cols), new_pid)
+        if new_rows is not None:
+            merged = [r for r in merged
+                      if r["codec"] not in DICT_FAMILY] + new_rows
     tbl = pa.Table.from_pylist(merged, schema=ENC_ARROW_SCHEMA)
     if ki_cols:
         _merge_sidecars(out_dir, new_pid, src_pids, ki_cols)
@@ -201,14 +194,6 @@ def _merge_group(out_dir: str, new_pid: int, src_pids: list[int],
 
 
 def make_compact_kernel(out_dir: str, ki_cols: list[str] | None = None):
-    man_schema = pa.schema([
-        ("part_id", pa.int32()), ("n_rows", pa.int64()),
-        ("n_chunks", pa.int32()), ("raw_bytes", pa.int64()),
-        ("enc_bytes", pa.int64()), ("file_bytes", pa.int64()),
-        ("codec_map", pa.string()), ("sha256_part", pa.string()),
-        ("wall_ms", pa.int64()), ("status", pa.string()),
-    ])
-
     def fn(batches):
         t0 = time.time()
         rows = []
@@ -219,9 +204,7 @@ def make_compact_kernel(out_dir: str, ki_cols: list[str] | None = None):
                 rows.append(_merge_group(out_dir, new_pid, src_pids, t0,
                                          ki_cols=ki_cols))
         if rows:
-            arrays = [pa.array([r[f.name] for r in rows], type=f.type)
-                      for f in man_schema]
-            yield pa.RecordBatch.from_arrays(arrays, schema=man_schema)
+            yield manifest_batch(rows)
 
     return fn
 
@@ -242,13 +225,7 @@ def _remove_parts(out_dir: str, pids: list[int]) -> None:
         for name in fsio.listdir(idx_dir):
             # names are part-XXXXX.<col>.idx — parse the pid once
             # instead of prefix-scanning (O(files x pids) at 8192 parts)
-            if not name.endswith(".idx"):
-                continue
-            try:
-                pid = int(name.split("-", 1)[1].split(".", 1)[0])
-            except (IndexError, ValueError):
-                continue
-            if pid in doomed:
+            if name.endswith(".idx") and part_id_of(name) in doomed:
                 fsio.remove(os.path.join(idx_dir, name))
 
 
@@ -319,11 +296,8 @@ def compact_table(spark, out_dir: str, target_bytes: int = 64 << 20) -> dict:
         {"phase": "staging", "add": add, "remove": remove}).encode())
     invalidate_manifest_list(out_dir)
 
-    meta_path = os.path.join(out_dir, "_meta.json")
-    ki_cols: list[str] = []
-    if fsio.exists(meta_path):
-        ki_cols = list(json.loads(fsio.read_bytes(meta_path))
-                       .get("key_index_cols") or ())
+    ki_cols = list((read_table_meta(out_dir) or {})
+                   .get("key_index_cols") or ())
     pdf = spark.createDataFrame(
         [(int(p), json.dumps(g)) for p, g in plan],
         "new_pid int, src string").repartition(len(plan))

@@ -183,11 +183,10 @@ def encode_table_dedup(spark, df, out_dir: str, content_col: str = "content",
 def decode_table_dedup(spark, out_dir: str,
                        columns: list[str] | None = None,
                        predicate: tuple | list | None = None,
-                       task_target_bytes: int | None = None,
                        blob_pushdown_limit: int = 20_000):
     """Read a content-addressed store back as the original DataFrame.
 
-    ``columns``/``predicate``/``task_target_bytes`` behave as in
+    ``columns``/``predicate`` behave as in
     :func:`~.manifest.decode_table`, applied to the REF table (so
     part/chunk pruning works on the ref side's zone maps). Predicates
     may not name the content column — for ref rows it lives in the blob
@@ -235,8 +234,7 @@ def decode_table_dedup(spark, out_dir: str,
     if need_content and sha_col not in ref_cols:
         ref_cols.append(sha_col)
     refs = decode_table(spark, refs_dir, columns=ref_cols,
-                        predicate=predicate,
-                        task_target_bytes=task_target_bytes)
+                        predicate=predicate)
     if not need_content:
         return refs.select(*[c for c in want])
 
@@ -255,8 +253,7 @@ def decode_table_dedup(spark, out_dir: str,
         if len(head) <= blob_pushdown_limit:
             blob_pred = (sha_col, "in", [r[sha_col] for r in head])
     blob_content = "_fcs_blob_" + content_col
-    blobs = decode_table(spark, blobs_dir, predicate=blob_pred,
-                         task_target_bytes=task_target_bytes) \
+    blobs = decode_table(spark, blobs_dir, predicate=blob_pred) \
         .withColumnRenamed(content_col, blob_content)
     joined = refs.join(blobs, on=sha_col, how="left").withColumn(
         content_col, F.coalesce(F.col(content_col), F.col(blob_content)))

@@ -44,11 +44,35 @@ from ..operators.encode import (
     make_encode_fn,
 )
 
-MANIFEST_SPARK_SCHEMA = (
-    "part_id int, n_rows long, n_chunks int, raw_bytes long, enc_bytes long, "
-    "file_bytes long, codec_map string, sha256_part string, wall_ms long, "
-    "status string"
-)
+# one summary row per written part, yielded by the encode write kernel
+# and the compaction kernel; MANIFEST_SPARK_SCHEMA is the same schema as
+# the DDL string mapInArrow takes
+MANIFEST_ARROW_SCHEMA = pa.schema([
+    ("part_id", pa.int32()), ("n_rows", pa.int64()),
+    ("n_chunks", pa.int32()), ("raw_bytes", pa.int64()),
+    ("enc_bytes", pa.int64()), ("file_bytes", pa.int64()),
+    ("codec_map", pa.string()), ("sha256_part", pa.string()),
+    ("wall_ms", pa.int64()), ("status", pa.string()),
+])
+_DDL_TYPES = {"int32": "int", "int64": "long", "string": "string"}
+MANIFEST_SPARK_SCHEMA = ", ".join(
+    f"{f.name} {_DDL_TYPES[str(f.type)]}" for f in MANIFEST_ARROW_SCHEMA)
+
+
+def manifest_batch(rows: list[dict]) -> pa.RecordBatch:
+    """Manifest summary rows (write_part_file results) -> one batch."""
+    return pa.RecordBatch.from_arrays(
+        [pa.array([r[f.name] for r in rows], type=f.type)
+         for f in MANIFEST_ARROW_SCHEMA],
+        schema=MANIFEST_ARROW_SCHEMA)
+
+
+def part_id_of(name: str) -> int | None:
+    """Part id of a ``part-XXXXX.*`` file name or path; None otherwise."""
+    try:
+        return int(os.path.basename(name).split("-")[1].split(".")[0])
+    except (IndexError, ValueError):
+        return None
 
 
 MANIFEST_LIST = "_manifest_list.json"
@@ -69,6 +93,14 @@ FORMAT_VERSION = 4   # v4: part dictionary-page rows (chunk_id = -1) +
                      # dp/ps chunk meta (consolidate_part_dicts)
 
 
+def read_table_meta(out_dir: str) -> dict | None:
+    """The table's _meta.json, or None when the directory has none."""
+    path = os.path.join(out_dir, "_meta.json")
+    if not fsio.exists(path):
+        return None
+    return json.loads(fsio.read_bytes(path))
+
+
 def check_format_version(out_dir: str, meta: dict | None = None) -> None:
     """Raise ValueError unless the table at out_dir is FORMAT_VERSION.
 
@@ -84,10 +116,9 @@ def check_format_version(out_dir: str, meta: dict | None = None) -> None:
             "plans.compact.recover_compaction(out_dir) to roll it back "
             "or forward before reading/writing the table")
     if meta is None:
-        path = os.path.join(out_dir, "_meta.json")
-        if not fsio.exists(path):
+        meta = read_table_meta(out_dir)
+        if meta is None:
             return
-        meta = json.loads(fsio.read_bytes(path))
     ver = int(meta.get("format_version", 1))
     if ver != FORMAT_VERSION:
         raise ValueError(
@@ -196,21 +227,6 @@ def make_write_kernel(out_dir: str,
     point-lookup pruning on unclustered columns — written BEFORE the
     manifest so a done part always has its sidecars."""
 
-    man_schema = pa.schema(
-        [
-            ("part_id", pa.int32()),
-            ("n_rows", pa.int64()),
-            ("n_chunks", pa.int32()),
-            ("raw_bytes", pa.int64()),
-            ("enc_bytes", pa.int64()),
-            ("file_bytes", pa.int64()),
-            ("codec_map", pa.string()),
-            ("sha256_part", pa.string()),
-            ("wall_ms", pa.int64()),
-            ("status", pa.string()),
-        ]
-    )
-
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t0 = time.time()
         # per-call accumulator: a retried task starts a fresh one, so a
@@ -235,11 +251,9 @@ def make_write_kernel(out_dir: str,
             # part dictionary-page consolidation (see
             # operators/encode.py consolidate_part_dicts): only the
             # dict-family rows pay the to_pylist round-trip; other rows'
-            # payload bytes stay in Arrow. FCS_NO_DICTPAGES=1 disables
-            # (ops kill-switch / A-B sizing).
+            # payload bytes stay in Arrow.
             codec_l = tbl.column("codec").to_pylist()
-            if (not os.environ.get("FCS_NO_DICTPAGES")
-                    and _DICT_FAMILY & set(codec_l)):
+            if _DICT_FAMILY & set(codec_l):
                 import pyarrow.compute as _pc
 
                 mask = pa.array([c in _DICT_FAMILY for c in codec_l])
@@ -262,9 +276,7 @@ def make_write_kernel(out_dir: str,
             rows.append(write_part_file(out_dir, pid, tbl, t0))
 
         if rows:
-            arrays = [pa.array([r[f.name] for r in rows], type=f.type)
-                      for f in man_schema]
-            yield pa.RecordBatch.from_arrays(arrays, schema=man_schema)
+            yield manifest_batch(rows)
 
     return fn
 
@@ -570,16 +582,10 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
         # part bytes and shas. One JVM-side hash per row — no Python,
         # no extra shuffle; the tiebreak only costs comparisons inside
         # tie runs the sort already had to order arbitrarily.
-        # FCS_NO_SORT_TIEBREAK=1 drops the tiebreak (ops A/B switch:
-        # byte-reproducibility off, sort cost measurement)
-        if os.environ.get("FCS_NO_SORT_TIEBREAK"):
-            shuffled = shuffled.sortWithinPartitions("bucket", *cluster_by)
-        else:
-            tie = F.xxhash64(*[F.col(c) for c in df.columns])
-            shuffled = (shuffled.withColumn("_fcs_tie", tie)
-                        .sortWithinPartitions("bucket", *cluster_by,
-                                              "_fcs_tie")
-                        .drop("_fcs_tie"))
+        tie = F.xxhash64(*[F.col(c) for c in df.columns])
+        shuffled = (shuffled.withColumn("_fcs_tie", tie)
+                    .sortWithinPartitions("bucket", *cluster_by, "_fcs_tie")
+                    .drop("_fcs_tie"))
     man_df = shuffled.mapInArrow(
         make_write_kernel(out_dir, chunk_rows, chunk_bytes, "bucket",
                           zone_cols=zone_cols,
@@ -858,7 +864,7 @@ def _pred_ops_by_col(node, acc: dict | None = None) -> dict:
     return acc
 
 
-def _warn_non_pruning_predicates(out_dir: str, pcols: list,
+def _warn_non_pruning_predicates(meta: dict | None, pcols: list,
                                  pred=None) -> None:
     """One-line runtime warning (VERDICT r6 item 6) when a predicate
     column structurally cannot prune at PART level, so the user learns
@@ -868,13 +874,13 @@ def _warn_non_pruning_predicates(out_dir: str, pcols: list,
     the measured §4 case (BENCH/SCALE_r6.md, honest 0.93x) — their
     per-part ranges span the space, so pruning degrades to CHUNK level
     at best, and a column with no zone stats at all only gets the
-    exact row filter. Purely advisory — behavior is unchanged."""
+    exact row filter. Purely advisory — behavior is unchanged.
+    ``meta``: the table's _meta.json (None = no layout facts, no
+    warning)."""
     import warnings
 
-    meta_path = os.path.join(out_dir, "_meta.json")
-    if not fsio.exists(meta_path):
+    if meta is None:
         return
-    meta = json.loads(fsio.read_bytes(meta_path))
     key_col = meta.get("key_col")
     zone_cols = meta.get("zone_cols")
     indexed = set(meta.get("key_index_cols") or ())
@@ -904,10 +910,14 @@ def _warn_non_pruning_predicates(out_dir: str, pcols: list,
                 f"re-encode with key_col={pcol!r}", stacklevel=3)
 
 
-def decode_table(spark, out_dir: str, narrow: bool = True,
+# decode task-group size: consecutive parts pack into tasks of about this
+# many bytes, floored so at least 4 groups per core exist
+DECODE_TASK_BYTES = 64 << 20
+
+
+def decode_table(spark, out_dir: str,
                  columns: list[str] | None = None,
-                 predicate: tuple | list | None = None,
-                 task_target_bytes: int | None = None):
+                 predicate: tuple | list | None = None):
     """Read an encoded table directory back as the original DataFrame.
 
     Concurrency contract (ADVICE r7): the table directory is
@@ -920,18 +930,16 @@ def decode_table(spark, out_dir: str, narrow: bool = True,
     readers, or treat a missing-part read error during a known
     compaction as "compaction in progress — retry".
 
-    narrow=True (default): one task per part file, each decoding its own
-    chunks in place — NO shuffle at all; decode parallelism = number of
-    parts. This is the plan shape that survives 100 TB: the enc layout is
-    chunk-aligned by construction, so decode is embarrassingly parallel.
-    narrow=False falls back to the generic applyInPandas group decode
-    (works on any enc DataFrame regardless of layout).
+    Plan shape: each task decodes whole part files in place — NO shuffle
+    at all. The enc layout is chunk-aligned by construction, so decode
+    is embarrassingly parallel; every chunk is sha-checked and decoded
+    by operators/encode.py decode_chunk, with the part's dictionary
+    pages read from the same file.
 
     ``columns``: decode only a projection — the engine-format equivalent
     of parquet column pruning. Non-selected columns' payload rows are
-    filtered at the parquet read (narrow: pyarrow filter pushdown per
-    part; wide: a catalyst filter the scan pushes down), so their bytes
-    never reach a codec.
+    filtered at the parquet read (pyarrow filter pushdown per part), so
+    their bytes never reach a codec.
 
     ``predicate``: ``(col, op, value)`` with op one of
     ``=,<,<=,>,>=,in`` (``in`` takes a collection of values), a
@@ -944,11 +952,11 @@ def decode_table(spark, out_dir: str, narrow: bool = True,
     reads exactly the parts holding either repo. Each chunk's
     meta carries [min, max] bounds for string/int/float columns
     (operators/encode.py _zone_stats), and each part's MANIFEST carries
-    the part-level fold of those bounds. Pruning happens at two levels
-    on the narrow path: (1) the driver reads the (consolidated)
-    manifest list and drops excluded parts before they become tasks —
-    the Iceberg manifest-pruning shape, so a selective predicate scales
-    with matching parts, not total parts; (2) surviving parts read the
+    the part-level fold of those bounds. Pruning happens at two levels:
+    (1) the driver reads the (consolidated) manifest list and drops
+    excluded parts before they become tasks — the Iceberg
+    manifest-pruning shape, so a selective predicate scales with
+    matching parts, not total parts; (2) surviving parts read the
     predicate column's (tiny) meta rows and drop excluded chunks. A
     part whose every chunk is excluded is skipped whole — no payload
     bytes read at all. Within a surviving part, excluded chunks are dropped by a
@@ -964,28 +972,30 @@ def decode_table(spark, out_dir: str, narrow: bool = True,
     part; a predicate on an unclustered column degrades gracefully to
     the plain filtered decode.
 
-    ``task_target_bytes``: decode task granularity. One task per part
-    pays a fixed per-task cost (scheduling, Python-worker Arrow stream
-    setup, parquet footer read) that dominates the wall when an
-    operator mis-sizes buckets into 10^4+ tiny parts (measured r5:
-    decode+verify 32 s at 1024 parts -> 90 s at 8192 on the same
-    bytes). The driver therefore greedily packs CONSECUTIVE parts
-    (preserving cluster_by key locality) into task groups of about
-    this many bytes, using the per-part file sizes the manifest list
-    already carries. Default None = auto: 64 MiB, floored so at least
-    4x defaultParallelism groups exist (never under-parallelize a
-    big decode). An explicit value is exact (no parallelism floor);
-    0 disables grouping (one task per part, the pre-r6 shape).
+    Task granularity: one task per part pays a fixed per-task cost
+    (scheduling, Python-worker Arrow stream setup, parquet footer read)
+    that dominates the wall when an operator mis-sizes buckets into
+    10^4+ tiny parts (measured r5: decode+verify 32 s at 1024 parts ->
+    90 s at 8192 on the same bytes). The driver therefore greedily
+    packs CONSECUTIVE parts (preserving cluster_by key locality) into
+    task groups of about DECODE_TASK_BYTES, using the per-part file
+    sizes the manifest list already carries, with the target floored so
+    at least 4x defaultParallelism groups exist (never under-parallelize
+    a big decode).
+
+    The table's _meta.json, _schema.json and manifest list are each
+    read once per call.
     """
     from pyspark.sql.types import StructType
 
-    from ..operators.encode import decode_df
+    from ..operators.encode import decode_chunk
+    from .keyindex import part_may_match
 
-    check_format_version(out_dir)  # fail "format too old", not "corrupt"
-    schema = StructType.fromJson(
-        json.loads(fsio.read_bytes(os.path.join(out_dir, "_schema.json")))
-    )
-    all_names = {f.name for f in schema.fields}
+    meta = read_table_meta(out_dir)
+    check_format_version(out_dir, meta)  # fail "format too old", not "corrupt"
+    full_schema = StructType.fromJson(
+        json.loads(fsio.read_bytes(os.path.join(out_dir, "_schema.json"))))
+    all_names = set(full_schema.names)
     # normalize into the boolean predicate tree (validates shape/ops)
     pred = normalize_predicate(predicate)
     pcols_all = sorted(pred_columns(pred))
@@ -995,32 +1005,23 @@ def decode_table(spark, out_dir: str, narrow: bool = True,
         if columns is not None and pcol not in columns:
             raise ValueError(
                 "decode_table: predicate column must be in the projection")
-    n_full = len(schema.fields)
+    schema = full_schema
     if columns is not None:
         missing = set(columns) - all_names
         if missing:
             raise ValueError(f"decode_table: unknown columns {sorted(missing)}")
-        schema = StructType([f for f in schema.fields if f.name in columns])
+        schema = StructType([f for f in full_schema.fields
+                             if f.name in columns])
+    column_order = schema.names
     data_dir = os.path.join(out_dir, "data")
+    files = [os.path.join(data_dir, f) for f in fsio.listdir(data_dir)
+             if f.endswith(".parquet")]
+    manifests = {int(m["part_id"]): m for m in read_all_manifests(out_dir)}
 
-    def _exact_filter(df):
-        return df.filter(predicate_column_expr(pred)) if pred else df
-
-    if not narrow:
-        from pyspark.sql import functions as F
-
-        enc_df = spark.read.parquet(data_dir)
-        if columns is not None:
-            enc_df = enc_df.filter(F.col("column").isin(list(columns)))
-        return _exact_filter(decode_df(enc_df, schema))
-
-    files = [
-        os.path.join(data_dir, f)
-        for f in fsio.listdir(data_dir)
-        if f.endswith(".parquet")
-    ]
+    ki_cols: frozenset = frozenset()
+    ki_types: dict = {}
     if pred:
-        _warn_non_pruning_predicates(out_dir, pcols_all, pred)
+        _warn_non_pruning_predicates(meta, pcols_all, pred)
         # manifest pruning (Iceberg pattern, r5): every part manifest
         # carries part-level zone bounds per zone column; one driver-side
         # read of the (consolidated) manifest list drops excluded parts
@@ -1033,198 +1034,124 @@ def decode_table(spark, out_dir: str, narrow: bool = True,
         # evidence never prunes. AND: a part survives only if EVERY
         # branch may-match; OR: it survives if ANY branch may-match
         # (union of keeps over the same bounds — see _may_match_part).
-        zones_by_part = {
-            int(m["part_id"]): m.get("zones") or {}
-            for m in read_all_manifests(out_dir)
-        }
+        def _zones_may_match(path: str) -> bool:
+            m = manifests.get(part_id_of(path))
+            return m is None or _may_match_part(pred, m.get("zones") or {})
 
-        kept_files = []
-        for p in files:
-            stem = os.path.basename(p)
-            try:
-                pid = int(stem.split("-")[1].split(".")[0])
-            except (IndexError, ValueError):
-                kept_files.append(p)
-                continue
-            zb = zones_by_part.get(pid)
-            if zb is None or _may_match_part(pred, zb):
-                kept_files.append(p)
-        files = kept_files
-    column_order = [f.name for f in schema.fields]
-    wanted = set(column_order)
+        files = [p for p in files if _zones_may_match(p)]
+
+        # key-index point-lookup pruning (plans/keyindex.py): active only
+        # when the table was encoded with key_index_cols AND the
+        # predicate has =/in leaves on one of them. Probed at TASK level
+        # inside _decode_part — index bytes scale with rows-per-part, so
+        # a driver-side pass would re-grow the O(parts)-reads problem
+        # the manifest list solved (same placement economics as Parquet
+        # blooms).
+        eq_cols = {c for c, ops in _pred_ops_by_col(pred).items()
+                   if ops & {"=", "in"}}
+        ki_cols = frozenset((meta or {}).get("key_index_cols") or ()) \
+            & eq_cols
+        # column -> canonical probe type ('string'|'int') from the table
+        # schema: probes that don't match the column type exactly can
+        # never refute (keyindex.probe_hashes)
+        _int_t = {"integer", "long", "short", "byte"}
+        for f in full_schema.fields:
+            if f.name in ki_cols:
+                tn = f.dataType.typeName()
+                ki_types[f.name] = ("string" if tn == "string"
+                                    else "int" if tn in _int_t else tn)
 
     # task-group coalescing (r6, see docstring): pack consecutive parts
-    # into ~task_target_bytes tasks so decode wall tracks bytes, not
-    # part count. Sizes come from the manifest list (one consolidated
-    # read); a part without a manifest counts as a full target (its own
+    # into ~target-byte tasks so decode wall tracks bytes, not part
+    # count. A part without a manifest counts as a full target (its own
     # group) — grouping is a performance layer, never a correctness one.
-    auto = task_target_bytes is None
-    target = (64 << 20) if auto else int(task_target_bytes)
-    if target and len(files) > 1:
-        sizes = {int(m["part_id"]): int(m.get("file_bytes") or 0)
-                 for m in read_all_manifests(out_dir)}
-
-        def _fsize(p: str) -> int:
-            stem = os.path.basename(p)
-            try:
-                pid = int(stem.split("-")[1].split(".")[0])
-            except (IndexError, ValueError):
-                return target
-            return sizes.get(pid, target)
-
-        fsizes = [_fsize(p) for p in files]
-        if auto:
-            # parallelism floor: at least 4 groups per core so a big
-            # decode still saturates the cluster
-            par = max(spark.sparkContext.defaultParallelism, 1)
-            target = max(min(target, sum(fsizes) // (4 * par)), 1)
-        groups: list[list[str]] = []
-        cur: list[str] = []
-        cur_b = 0
-        for p, sz in zip(files, fsizes):
-            cur.append(p)
-            cur_b += max(sz, 1)
-            if cur_b >= target:
-                groups.append(cur)
-                cur, cur_b = [], 0
-        if cur:
+    fsizes = []
+    for p in files:
+        m = manifests.get(part_id_of(p))
+        fsizes.append(DECODE_TASK_BYTES if m is None
+                      else int(m.get("file_bytes") or 0))
+    par = max(spark.sparkContext.defaultParallelism, 1)
+    target = max(min(DECODE_TASK_BYTES, sum(fsizes) // (4 * par)), 1)
+    groups: list[list[str]] = []
+    cur: list[str] = []
+    cur_b = 0
+    for p, sz in zip(files, fsizes):
+        cur.append(p)
+        cur_b += max(sz, 1)
+        if cur_b >= target:
             groups.append(cur)
-    else:
-        groups = [[p] for p in files]
+            cur, cur_b = [], 0
+    if cur:
+        groups.append(cur)
     fdf = spark.createDataFrame([("\n".join(g),) for g in groups],
                                 "paths string") \
         .repartition(max(len(groups), 1))
+    flt = [("column", "in", sorted(column_order))] \
+        if len(column_order) < len(all_names) else None
 
-    def decode_file_arrow(batches):
+    def _decode_part(path):
+        part_flt = flt
+        pid = part_id_of(path)
+        if ki_cols and pid is not None and not part_may_match(
+                pred, out_dir, pid, ki_cols, ki_types):
+            return  # no probe hash in this part's key set
+        if pred:
+            # zone-map pass: the predicate columns' meta rows are
+            # tiny; excluded chunks are dropped via the chunk_id
+            # filter (skips decode cost; their payload bytes are
+            # still read unless the WHOLE part prunes — row
+            # groups are per-column, see decode_table docstring).
+            # AND/OR follow _may_match_chunk: a chunk survives an
+            # AND only if every branch may-match, an OR if any
+            # branch does.
+            zmeta = fsio.read_parquet(
+                path, filters=[("column", "in", pcols_all)],
+                columns=["column", "chunk_id", "meta"])
+            stats: dict[tuple, dict] = {}
+            chunk_ids = set()
+            for col, cid, mj in zip(
+                    zmeta.column("column").to_pylist(),
+                    zmeta.column("chunk_id").to_pylist(),
+                    zmeta.column("meta").to_pylist()):
+                if int(cid) == PAGE_CHUNK_ID:
+                    continue  # page rows carry no zone stats
+                stats[(col, int(cid))] = json.loads(mj)
+                chunk_ids.add(int(cid))
+
+            keep = [cid for cid in sorted(chunk_ids)
+                    if _may_match_chunk(pred, stats, cid)]
+            if not keep:
+                return  # whole part pruned
+            if len(keep) < len(chunk_ids):
+                # page rows (chunk_id = PAGE_CHUNK_ID) must survive
+                # any chunk pruning — dp chunks decode through them
+                part_flt = (part_flt or []) + [
+                    ("chunk_id", "in", keep + [PAGE_CHUNK_ID])]
+        # one C-level conversion for the whole part file instead of
+        # per-cell .as_py() round trips through Python objects
+        by_chunk: dict[int, dict[str, dict]] = {}
+        pages: dict[str, bytes] = {}
+        for row in fsio.read_parquet(path, filters=part_flt).to_pylist():
+            if row["chunk_id"] == PAGE_CHUNK_ID:
+                if row["dict"] is not None:
+                    pages[row["column"]] = row["dict"]
+            else:
+                by_chunk.setdefault(row["chunk_id"], {})[row["column"]] = row
+        for cid in sorted(by_chunk):
+            yield decode_chunk(by_chunk[cid], column_order, pages)
+
+    def decode_groups(batches):
         # mapInArrow: decoded chunks go back to the JVM as Arrow batches
         # directly — no pandas materialization on the decode hot path;
         # each incoming row is one task GROUP of newline-joined part
-        # paths (see task_target_bytes)
-        flt = [("column", "in", sorted(wanted))] if len(wanted) < n_full \
-            else None
+        # paths
         for b in batches:
-            for paths_val in b.column(0):
-                paths = paths_val.as_py().split("\n")
-                yield from _decode_paths(paths, flt)
+            for paths in b.column(0).to_pylist():
+                for path in paths.split("\n"):
+                    yield from _decode_part(path)
 
-    # key-index point-lookup pruning (plans/keyindex.py): active only
-    # when the table was encoded with key_index_cols AND the predicate
-    # has =/in leaves on one of them. Probed at TASK level inside
-    # _decode_paths — index bytes scale with rows-per-part, so a
-    # driver-side pass would re-grow the O(parts)-reads problem the
-    # manifest list solved (same placement economics as Parquet blooms).
-    ki_cols: frozenset = frozenset()
-    ki_types: dict = {}
-    if pred:
-        meta_path = os.path.join(out_dir, "_meta.json")
-        if fsio.exists(meta_path):
-            tmeta = json.loads(fsio.read_bytes(meta_path))
-            declared = frozenset(tmeta.get("key_index_cols") or ())
-            if declared:
-                def _eq_cols(node):
-                    if node[0] in ("and", "or"):
-                        out = set()
-                        for s in node[1]:
-                            out |= _eq_cols(s)
-                        return out
-                    _, c, op, _v = node
-                    return {c} if op in ("=", "in") else set()
-
-                ki_cols = declared & frozenset(_eq_cols(pred))
-                # column -> canonical probe type ('string'|'int') from
-                # the table schema: probes that don't match the column
-                # type exactly can never refute (keyindex.probe_hashes)
-                _int_t = {"integer", "long", "short", "byte"}
-                full_schema = StructType.fromJson(json.loads(
-                    fsio.read_bytes(os.path.join(out_dir,
-                                                 "_schema.json"))))
-                for f in full_schema.fields:
-                    if f.name in ki_cols:
-                        tn = f.dataType.typeName()
-                        ki_types[f.name] = ("string" if tn == "string"
-                                            else "int" if tn in _int_t
-                                            else tn)
-
-    def _decode_paths(paths, flt):
-        from ..operators.encode import decode_column
-        from . import fsio as fsio2
-        from .keyindex import part_may_match
-
-        for path in paths:
-            part_flt = list(flt) if flt else None
-            if ki_cols:
-                stem = os.path.basename(path)
-                try:
-                    pid = int(stem.split("-")[1].split(".")[0])
-                except (IndexError, ValueError):
-                    pid = None
-                if pid is not None and not part_may_match(
-                        pred, out_dir, pid, ki_cols, ki_types):
-                    continue  # no probe hash in this part's key set
-            if pred:
-                # zone-map pass: the predicate columns' meta rows are
-                # tiny; excluded chunks are dropped via the chunk_id
-                # filter (skips decode cost; their payload bytes are
-                # still read unless the WHOLE part prunes — row
-                # groups are per-column, see decode_table docstring).
-                # AND/OR follow _may_match_chunk: a chunk survives an
-                # AND only if every branch may-match, an OR if any
-                # branch does.
-                zmeta = fsio2.read_parquet(
-                    path, filters=[("column", "in", pcols_all)],
-                    columns=["column", "chunk_id", "meta"])
-                stats: dict[tuple, dict] = {}
-                chunk_ids = set()
-                for col, cid, mj in zip(
-                        zmeta.column("column").to_pylist(),
-                        zmeta.column("chunk_id").to_pylist(),
-                        zmeta.column("meta").to_pylist()):
-                    if int(cid) == PAGE_CHUNK_ID:
-                        continue  # page rows carry no zone stats
-                    stats[(col, int(cid))] = json.loads(mj)
-                    chunk_ids.add(int(cid))
-
-                keep = [cid for cid in sorted(chunk_ids)
-                        if cid != PAGE_CHUNK_ID
-                        and _may_match_chunk(pred, stats, cid)]
-                if not keep:
-                    continue  # whole part pruned
-                if len(keep) < len(chunk_ids):
-                    # page rows (chunk_id = PAGE_CHUNK_ID) must survive
-                    # any chunk pruning — dp chunks decode through them
-                    part_flt = (part_flt or []) + [
-                        ("chunk_id", "in", keep + [PAGE_CHUNK_ID])]
-            enc_tbl = fsio2.read_parquet(path, filters=part_flt)
-            # one C-level conversion for the whole part file instead of
-            # per-cell .as_py() round trips through Python objects
-            enc_rows = enc_tbl.to_pylist()
-            by_chunk: dict[int, list[dict]] = {}
-            pages: dict[str, bytes] = {}
-            for row in enc_rows:
-                if row["chunk_id"] == PAGE_CHUNK_ID:
-                    if row["dict"] is not None:
-                        pages[row["column"]] = row["dict"]
-                    continue
-                by_chunk.setdefault(row["chunk_id"], []).append(row)
-            for cid in sorted(by_chunk):
-                cols = {
-                    row["column"]: decode_column(
-                        row["codec"], row["payload"], row["dict"],
-                        row["meta"], row["n_rows"], row["validity"],
-                        expect_sha=row.get("sha256_chunk"),
-                        ctx=f"part={row['part_id']} chunk={cid} "
-                            f"column={row['column']}",
-                        page_dict=pages.get(row["column"]))
-                    for row in by_chunk[cid]
-                }
-                arrays = [
-                    cols[c].combine_chunks()
-                    if isinstance(cols[c], pa.ChunkedArray) else cols[c]
-                    for c in column_order
-                ]
-                yield pa.RecordBatch.from_arrays(arrays, names=column_order)
-
-    return _exact_filter(fdf.mapInArrow(decode_file_arrow, schema=schema))
+    dec = fdf.mapInArrow(decode_groups, schema=schema)
+    return dec.filter(predicate_column_expr(pred)) if pred else dec
 
 
 def snappy_baseline_bytes(df, baseline_dir: str) -> int:

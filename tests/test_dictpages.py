@@ -1,6 +1,6 @@
 """Part dictionary-page consolidation (consolidate_part_dicts):
-profit gating, roundtrip through both decode paths, predicate pruning
-with pages present, and page-integrity failure modes."""
+profit gating, roundtrip through decode_table, predicate pruning with
+pages present, and page-integrity failure modes."""
 
 import json
 import os
@@ -125,19 +125,17 @@ def test_pages_present_and_roundtrip_narrow(spark, paged_table):
     assert rep["value_mismatches"] == 0 and rep["sha_mismatches"] == 0
 
 
-def test_pages_roundtrip_wide_path(spark, paged_table):
-    from fileconvert_spark.plans.manifest import decode_table
+def test_decode_df_names_missing_page(spark, paged_table):
+    """decode_df skips page rows, so a paged table's raw enc rows fail
+    with a DecodeError naming the missing dictionary page — never
+    silently wrong values. Only decode_table reads a part's pages."""
+    from fileconvert_spark.operators.encode import decode_df
 
     df, out = paged_table
-    wide = decode_table(spark, out, narrow=False)
-    assert wide.count() == df.count()
-    cols = sorted(df.columns)
-    agg = lambda d: d.select(  # noqa: E731 - order-free content hash
-        F.sha2(F.concat_ws("\x01", *[F.col(c) for c in cols]), 256)
-        .alias("h")).agg(F.count(F.lit(1)),
-                         F.sum(F.conv(F.substring("h", 1, 8), 16, 10)
-                               .cast("long"))).first()
-    assert agg(wide) == agg(decode_table(spark, out))
+    enc = spark.read.parquet(os.path.join(out, "data"))
+    with pytest.raises(Exception,
+                       match=r"DecodeError[\s\S]*part dictionary page"):
+        decode_df(enc, df.schema).collect()
 
 
 def test_pages_survive_predicate_pruning(spark, paged_table):

@@ -70,10 +70,8 @@ def test_encode_table_job(spark, corpus_df, tmp_path):
     assert all(m["status"] == "done" for m in manifests)
     assert {m["part_id"] for m in manifests} == scan_done_parts(out)
 
-    dec = decode_table(spark, out)  # narrow (shuffle-free) path
+    dec = decode_table(spark, out)
     assert_roundtrip(corpus_df, dec, KEYS)
-    dec_wide = decode_table(spark, out, narrow=False)  # grouped fallback
-    assert_roundtrip(corpus_df, dec_wide, KEYS)
 
     # size gate: engine bytes (actual parquet files, incl. all metadata)
     # must not exceed the reference Parquet/Snappy write of the same data
@@ -527,21 +525,19 @@ def test_sampled_bucket_plan_balances_and_is_deterministic(spark, corpus_df):
 
 def test_decode_projection(spark, corpus_df, tmp_path):
     """Column pruning on the engine's own format: decoding a 2-column
-    projection must return exactly those columns (both decode paths) and
-    reject unknown names."""
+    projection must return exactly those columns and reject unknown
+    names."""
     out = str(tmp_path / "enc_proj")
     encode_table(spark, corpus_df, out, n_buckets=4)
 
-    for narrow in (True, False):
-        dec = decode_table(spark, out, narrow=narrow,
-                           columns=["path", "content"])
-        assert dec.columns == ["path", "content"]
-        o = corpus_df.select("path", "content").alias("o")
-        d = dec.alias("d")
-        bad = (o.join(d, F.col("o.path") == F.col("d.path"), "full_outer")
-               .filter(~F.col("o.content").eqNullSafe(F.col("d.content")))
-               .count())
-        assert bad == 0, f"narrow={narrow}"
+    dec = decode_table(spark, out, columns=["path", "content"])
+    assert dec.columns == ["path", "content"]
+    o = corpus_df.select("path", "content").alias("o")
+    d = dec.alias("d")
+    bad = (o.join(d, F.col("o.path") == F.col("d.path"), "full_outer")
+           .filter(~F.col("o.content").eqNullSafe(F.col("d.content")))
+           .count())
+    assert bad == 0
 
     with pytest.raises(ValueError, match="unknown columns"):
         decode_table(spark, out, columns=["nope"])
@@ -657,8 +653,8 @@ def test_full_user_journey_csv_to_engine_and_back(spark, tmp_path):
 
 def test_decode_table_detects_at_rest_corruption(spark, corpus_df, tmp_path):
     """VERDICT r3 item 5, end-to-end: flip one payload byte inside a part
-    file on disk — BOTH decode paths must raise with the integrity error
-    and the chunk context, never return wrong values silently."""
+    file on disk — decode must raise with the integrity error and the
+    chunk context, never return wrong values silently."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest
@@ -676,9 +672,59 @@ def test_decode_table_detects_at_rest_corruption(spark, corpus_df, tmp_path):
                          pa.array(payloads, type=pa.binary()))
     pq.write_table(tbl, part, compression="none")
 
-    for narrow in (True, False):
-        with pytest.raises(Exception, match="integrity sha mismatch"):
-            decode_table(spark, enc_dir, narrow=narrow).collect()
+    with pytest.raises(Exception, match="integrity sha mismatch"):
+        decode_table(spark, enc_dir).collect()
+
+
+def test_decode_table_incomplete_chunk_raises(spark, corpus_df, tmp_path):
+    """A part file that lost one column's row for one chunk fails with
+    the incomplete-chunk error naming that column, not a bare KeyError."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    import pytest
+
+    from fileconvert_spark.plans.manifest import decode_table, encode_table
+
+    enc_dir = str(tmp_path / "enc")
+    encode_table(spark, corpus_df, enc_dir, n_buckets=2)
+    part = os.path.join(enc_dir, "data", "part-00000.parquet")
+    tbl = pq.read_table(part)
+    drop = pc.and_(pc.equal(tbl["column"], "lang"),
+                   pc.equal(tbl["chunk_id"], 0))
+    assert pc.sum(drop.cast("int64")).as_py() == 1
+    pq.write_table(tbl.filter(pc.invert(drop)), part, compression="none")
+
+    with pytest.raises(Exception, match=r"incomplete chunk part_id=0 "
+                       r"chunk_id=0 — missing encoded columns \['lang'\]"):
+        decode_table(spark, enc_dir).collect()
+
+
+def test_predicate_decode_reads_table_metadata_once(spark, corpus_df,
+                                                    tmp_path, monkeypatch):
+    """A predicate decode on a key-indexed table plans from ONE read each
+    of _meta.json, _schema.json and the manifest list."""
+    from collections import Counter
+
+    from fileconvert_spark.plans import fsio
+    from fileconvert_spark.plans.manifest import decode_table, encode_table
+
+    out = str(tmp_path / "enc_ki")
+    encode_table(spark, corpus_df, out, n_buckets=4,
+                 key_index_cols=("path",))
+    reads: Counter = Counter()
+    real = fsio.read_bytes
+
+    def counting(path):
+        reads[os.path.basename(path)] += 1
+        return real(path)
+
+    monkeypatch.setattr(fsio, "read_bytes", counting)
+    path = corpus_df.select("path").first()["path"]
+    dec = decode_table(spark, out, predicate=("path", "=", path))
+    assert {n: reads[n] for n in ("_meta.json", "_schema.json",
+                                  "_manifest_list.json")} == {
+        "_meta.json": 1, "_schema.json": 1, "_manifest_list.json": 1}
+    assert dec.count() == corpus_df.filter(F.col("path") == path).count()
 
 
 def test_zone_map_predicate_pushdown(spark, corpus_df, tmp_path):
@@ -1053,8 +1099,8 @@ def test_decode_task_grouping(spark, tmp_path):
     """r6: tiny parts coalesce into byte-targeted task groups at the
     driver (decode wall must track bytes, not part count — the measured
     ~8 ms/part fixed cost at 8192 parts). Grouping is a performance
-    layer only: rows, values, predicates, and projections are identical
-    across group sizes, and 0 disables it (one task per part)."""
+    layer only: rows, values, predicates, and projections come through
+    a group exactly."""
     from fileconvert_spark.plans.manifest import decode_table, encode_table
 
     rows = [(i, i // 100, f"doc {i} body " * 5) for i in range(6400)]
@@ -1064,29 +1110,17 @@ def test_decode_task_grouping(spark, tmp_path):
                  key_col="grp", salt_cols=("doc_id",), weight_col="text",
                  cluster_by=("doc_id",))
 
-    # explicit huge target -> all 64 parts in ONE task group
-    one = decode_table(spark, out, task_target_bytes=1 << 40)
-    assert one.rdd.getNumPartitions() == 1
-    assert one.count() == 6400
-    # explicit 0 -> pre-r6 shape, one task per part
-    per_part = decode_table(spark, out, task_target_bytes=0)
-    assert per_part.rdd.getNumPartitions() == 64
-    # auto: grouped between the two extremes, never fewer than needed
+    # grouped between one task and one task per part
     auto = decode_table(spark, out)
     assert 1 <= auto.rdd.getNumPartitions() <= 64
-
-    # values identical across granularities (sorted compare)
-    a = sorted(one.collect())
-    b = sorted(per_part.collect())
-    assert a == b
+    # decoded rows equal the source rows (sorted compare)
+    assert sorted(auto.collect()) == sorted(df.collect())
 
     # predicates prune per-part THROUGH a group: same exact rows
-    got = decode_table(spark, out, predicate=("doc_id", "<", 200),
-                       task_target_bytes=1 << 40)
+    got = decode_table(spark, out, predicate=("doc_id", "<", 200))
     assert got.count() == 200
     got2 = decode_table(spark, out, columns=["doc_id", "grp"],
-                        predicate=("doc_id", "<", 200),
-                        task_target_bytes=1 << 40)
+                        predicate=("doc_id", "<", 200))
     assert got2.count() == 200 and sorted(got2.columns) == ["doc_id", "grp"]
 
 

@@ -390,17 +390,39 @@ def test_unpack_bits_kernel_truncation_raises():
 @settings(max_examples=150, deadline=None)
 @given(st.lists(st.integers(min_value=0, max_value=100000),
                 max_size=600),
-       st.integers(min_value=5, max_value=16))
+       st.integers(min_value=0, max_value=16))
 def test_huff_code_lengths_kernel_matches_python(counts, max_len):
     """huff_code_lengths (r8) must reproduce the Python two-queue +
     T.81 Adjust_BITS construction exactly — same lengths for every
-    symbol, including stable tie-breaking on equal counts."""
+    symbol, including stable tie-breaking on equal counts. Pairs with
+    more than 2^max_len present symbols have no valid code: both paths
+    raise ValueError instead of returning Kraft-invalid lengths (the C
+    path used to corrupt the heap there)."""
     from fileconvert_spark.functions import huffman
 
     c = np.array(counts, dtype=np.int64)
+    if int((c > 0).sum()) > 1 << max_len:
+        with pytest.raises(ValueError, match="do not fit"):
+            native.huff_code_lengths(c, max_len)
+        with pytest.raises(ValueError, match="do not fit"):
+            huffman._code_lengths_py(c, max_len)
+        return
     got = native.huff_code_lengths(c, max_len)
     want = huffman._code_lengths_py(c, max_len)
     assert np.array_equal(got, want)
+    present = got[c > 0].astype(np.int64)
+    assert np.sum(2.0 ** -present) <= 1.0  # Kraft
+
+
+@requires_native
+def test_huff_code_lengths_infeasible_raises():
+    """64 equal counts cannot fit 5-bit codes (32 at most): a clean
+    ValueError from the public API, never a process abort."""
+    from fileconvert_spark.functions import huffman
+
+    with pytest.raises(ValueError, match="do not fit"):
+        huffman.code_lengths(np.full(64, 10), 5)
+    assert int(huffman.code_lengths(np.full(32, 10), 5).max()) == 5
 
 
 @requires_native

@@ -115,3 +115,27 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 1
     assert all(r["sha_mismatches"] == 0 for r in rows)
+
+
+def test_size_bytes_parses_spark_size_strings():
+    sb = entry_mod._size_bytes
+    assert sb("128m") == sb("128MB") == sb("134217728") == 128 << 20
+    assert sb("1g") == 1 << 30 and sb("64k") == 64 << 10
+    assert sb("nonsense") == sb("0") == sb("1.5g") == 128 << 20
+
+
+def test_q1_accepts_size_suffixed_max_partition_bytes(spark, duck):
+    """A session that sets spark.sql.files.maxPartitionBytes with a size
+    suffix ("128m") must not fail q1, and q1 still matches its oracle."""
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "128m")
+    try:
+        sdf = QUERIES["q1_pricing_summary"](spark, SF_DIR)
+        _compare("q1_pricing_summary", sdf,
+                 duck.sql(ORACLES["q1_pricing_summary"]))
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
