@@ -145,6 +145,25 @@ def _flagged_blob_decode(blob) -> pa.Array:
     return fsst.fsst_decode_array(body[4 + tlen :], table_blob)
 
 
+def _count_byte(arr: pa.Array, sep: str) -> int:
+    """Occurrences of the one-byte ASCII ``sep`` in a null-free string
+    array: one NumPy count over the value-buffer span its offsets cover.
+    Equals ``pc.sum(pc.count_substring(arr, sep))``, because an ASCII
+    byte never occurs inside a multi-byte UTF-8 sequence."""
+    if pa.types.is_large_string(arr.type):
+        arr = arr.cast(pa.string())
+    if len(arr) == 0:
+        return 0
+    offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32,
+                            count=len(arr) + 1, offset=arr.offset * 4)
+    lo, hi = int(offsets[0]), int(offsets[-1])
+    if hi == lo:  # all values empty: the data buffer may be absent
+        return 0
+    return int(np.count_nonzero(
+        np.frombuffer(arr.buffers()[2], dtype=np.uint8, count=hi - lo,
+                      offset=lo) == ord(sep)))
+
+
 def _string_buffers(arr: pa.Array) -> tuple[np.ndarray, int]:
     """(lengths, total_bytes) of a null-free string array, zero-copy."""
     if pa.types.is_large_string(arr.type):
@@ -563,12 +582,30 @@ def select_and_encode_str(arr: pa.Array,
     # ratios are dedup-driven — a row sample systematically overestimates
     # them). The prep is kept and reused by the winner's actual encode.
     pre_by_codec: dict[str, dict] = {}
+    # a segment dictionary under this share of the raw bytes "clearly
+    # wins": the FSST trial below is then skipped
+    clear_win = 0.35 * n_bytes
 
-    def _sepdict_est(sep: str, name: str) -> float:
+    def _sepdict_best() -> float:
+        return min(est.get("linedict", 1e18), est.get("pathdict", 1e18))
+
+    def _sepdict_est(sep: str, name: str) -> None:
         pre = _sepdict_prepare(arr, sep)
+        seg_dict = pre["de"].dictionary
+        _, uniq_bytes = _string_buffers(seg_dict)
+        # exact lower bound on the estimate below: FSST codes each symbol
+        # of <= MAX_SYMBOL_LEN bytes as one byte, so the blob costs at
+        # least uniq_bytes / MAX_SYMBOL_LEN, and the packed payload >= 0.
+        # A trial whose bound already loses is skipped (no pack, no FSST
+        # estimate) unless its estimate could still flip the clear-win
+        # gate of the FSST trial. The trial never writes the worker
+        # cache, so skipping it leaves every encoded byte unchanged.
+        floor = uniq_bytes / fsst.MAX_SYMBOL_LEN + 2 * len(seg_dict)
+        if floor > min(est.values()) and (
+                floor >= clear_win or _sepdict_best() < clear_win):
+            return
         _sepdict_pack(pre)  # exact index/count payload, kept for the winner
         pre_by_codec[name] = pre
-        _, uniq_bytes = _string_buffers(pre["uniques"])
         kk = max(pre["k"], 1)
         if uniq_bytes >= _FSST_BLOB_MIN:
             # trial-FSST the segment dictionary (same sampling optimism as
@@ -595,15 +632,13 @@ def select_and_encode_str(arr: pa.Array,
             blob = uniq_bytes * min(blob_ratio, 1.0)
         else:
             blob = float(uniq_bytes)
-        return len(pre["payload"]) + blob + kk * 2
+        est[name] = len(pre["payload"]) + blob + kk * 2
 
     if allow_linedict and st["avg_len"] >= 8:
         # a segment dictionary only beats a whole-value dictionary when
         # values actually split: require >= 1 separator per value on avg
-        if st["avg_len"] >= 40:
-            n_nl = pc.sum(pc.count_substring(arr, "\n")).as_py() or 0
-            if n_nl >= n:
-                est["linedict"] = _sepdict_est("\n", "linedict")
+        if st["avg_len"] >= 40 and _count_byte(arr, "\n") >= n:
+            _sepdict_est("\n", "linedict")
         # path-shaped values: '/'-separated components are low-cardinality
         # even when whole values are unique. The exact full-chunk trial is
         # real work (split + dictionary_encode + pack), so pre-filter
@@ -612,15 +647,14 @@ def select_and_encode_str(arr: pa.Array,
         # the sampled segments are almost all unique — a sample *over*states
         # uniqueness, so >=0.95 unique in-sample means the full chunk can't
         # dedup enough for a segment dictionary to win.
-        n_slash = pc.sum(pc.count_substring(arr, "/")).as_py() or 0
-        if n_slash >= n:
+        if _count_byte(arr, "/") >= n:
             probe = arr.slice(0, min(n, 256))
             segs = pc.split_pattern(probe, "/")
             flat = segs.values if isinstance(segs, pa.ListArray) \
                 else segs.combine_chunks().values
             nseg = len(flat)
             if nseg == 0 or len(pc.unique(flat)) < 0.95 * nseg:
-                est["pathdict"] = _sepdict_est("/", "pathdict")
+                _sepdict_est("/", "pathdict")
 
     # hex-pack: hash-like columns (commits, digests) — 2 chars/byte exact
     # (hex_ok computed above, shared with the dict blob estimate)
@@ -634,8 +668,7 @@ def select_and_encode_str(arr: pa.Array,
     # already estimates below what an FSST table (<=255 symbols of <=8
     # bytes) can realistically reach on text, saving a training pass.
     fsst_table = None
-    linedict_clearly_wins = min(est.get("linedict", 1e18),
-                                est.get("pathdict", 1e18)) < 0.35 * n_bytes
+    linedict_clearly_wins = _sepdict_best() < clear_win
     if k > max(4, n // 16) and st["avg_len"] >= 4 and not linedict_clearly_wins:
         fkey = f"{cache_key}/fsst" if cache_key else None
         cached = cache.get(fkey) if cache and fkey else None

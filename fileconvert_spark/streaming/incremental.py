@@ -30,8 +30,16 @@ class _state_partitions:
     The count is part of a CHECKPOINT's identity — these operators run
     fresh AvailableNow queries with fresh checkpoints, which is the only
     reason resizing per call is safe. The session conf is restored on
-    exit (the streaming query has consumed it by then: AvailableNow
-    planning happens inside awaitTermination, before this block ends).
+    exit, also when the body raises (the streaming query has consumed it
+    by then: AvailableNow planning happens inside awaitTermination,
+    before this block ends).
+
+    Contract: single-threaded use of the session. The setting is
+    session-wide, so while the block is open any other query planned on
+    the same SparkSession, e.g. from another thread, sees the stream's
+    state partition count too. Run concurrent streams on separate
+    sessions (``spark.newSession()``); nested or sequential blocks on one
+    thread each restore the value they found on entry.
     """
 
     def __init__(self, spark: SparkSession, path: str,
@@ -62,9 +70,9 @@ class _state_partitions:
             else:
                 self.target = max(8, min(sess, int(nbytes // (8 << 20))
                                          or 8))
-        self.prev = spark.conf.get("spark.sql.shuffle.partitions")
 
     def __enter__(self) -> "_state_partitions":
+        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
         self.spark.conf.set("spark.sql.shuffle.partitions",
                             str(self.target))
         return self

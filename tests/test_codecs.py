@@ -326,3 +326,43 @@ def test_fsst_walk_seg_chop_is_transparent(monkeypatch):
     p2, b2 = fsst.fsst_encode_array(arr, table)
     assert fsst.fsst_decode_array(p1, b1).equals(arr)
     assert fsst.fsst_decode_array(p2, b2).equals(arr)
+
+
+@pytest.mark.parametrize("sep", ["\n", "/"])
+def test_count_byte_matches_count_substring(sep):
+    import pyarrow.compute as pc
+
+    vals = ["a/b\nc", "π/≈\n✓", "日本/語\n\n", "", "🎉/🎊/", "//\n/",
+            "no separators", "é" * 40 + "/\n" * 3]
+    base = pa.array(vals * 7, type=pa.string())
+    cases = [
+        base,
+        base.slice(3),                       # offset > 0
+        base.slice(5, 17),                   # offset > 0, short tail
+        base.slice(4, 1),                    # single empty string
+        pa.array([], type=pa.string()),
+        pa.array(["", "", ""], type=pa.string()),  # no value bytes
+        pa.array(["", "", "a/\n"], type=pa.string()).slice(0, 2),
+        pa.array(vals, type=pa.large_string()),
+    ]
+    for arr in cases:
+        want = pc.sum(pc.count_substring(arr, sep)).as_py() or 0
+        assert codecs._count_byte(arr, sep) == want, (arr, sep)
+
+
+def test_pathdict_trial_pruned_on_multiline_content(monkeypatch):
+    """On codefiles content, linedict's estimate beats the exact lower
+    bound of the '/'-segment trial, so only linedict is packed and
+    FSST-estimated; the chunk still selects linedict."""
+    from fileconvert_spark.corpus import make_codefiles
+
+    packed = []
+    real_pack = codecs._sepdict_pack
+    monkeypatch.setattr(codecs, "_sepdict_pack",
+                        lambda pre: packed.append(pre["sep"]) or real_pack(pre))
+    content = pa.array(make_codefiles(8000, seed=411)["content"][:500],
+                       type=pa.string())
+    assert codecs._count_byte(content, "/") >= len(content)
+    codec, *_ = codecs.select_and_encode_str(content)
+    assert codec == "linedict"
+    assert packed == ["\n"]

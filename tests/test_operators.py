@@ -858,6 +858,7 @@ def test_incremental_encode_stream(spark, tmp_path):
     df.limit(250).write.mode("overwrite").parquet(str(src / "batch1"))
     out = str(tmp_path / "stream_enc")
     ckpt = str(tmp_path / "ckpt")
+    parts_before = spark.conf.get("spark.sql.shuffle.partitions")
     incremental_encode(spark, str(src / "batch1"), out, df.schema, ckpt)
     total = sum(m["n_rows"] for e in os.listdir(out)
                 for m in read_all_manifests(os.path.join(out, e)))
@@ -867,6 +868,34 @@ def test_incremental_encode_stream(spark, tmp_path):
     total2 = sum(m["n_rows"] for e in os.listdir(out)
                  for m in read_all_manifests(os.path.join(out, e)))
     assert total2 == 250
+    # both streams resized the state partitions only while they ran
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts_before
+
+
+def test_state_partitions_restores_session_conf(spark, tmp_path,
+                                                monkeypatch):
+    """Sequential _state_partitions blocks each leave
+    spark.sql.shuffle.partitions at the value found on entry, also when
+    the body raises."""
+    from fileconvert_spark.streaming.incremental import _state_partitions
+
+    monkeypatch.delenv("FCS_STREAM_STATE_PARTS", raising=False)
+    key = "spark.sql.shuffle.partitions"
+    original = spark.conf.get(key)
+    src = tmp_path / "events.bin"
+    src.write_bytes(b"x" * 1024)
+    try:
+        spark.conf.set(key, "13")
+        with _state_partitions(spark, str(src)):
+            assert spark.conf.get(key) == "8"  # small input: floor of 8
+        assert spark.conf.get(key) == "13"
+        with pytest.raises(RuntimeError, match="stream failed"):
+            with _state_partitions(spark, str(src), override=5):
+                assert spark.conf.get(key) == "5"
+                raise RuntimeError("stream failed")
+        assert spark.conf.get(key) == "13"
+    finally:
+        spark.conf.set(key, original)
 
 
 def test_icebergish_snapshot(spark, tmp_path, docs):

@@ -384,3 +384,35 @@ def test_gif_corruption_never_silent(cut, xor, pos):
         assert px.size == f * gw * gh
     except (ValueError, NotImplementedError):
         pass
+
+
+# runs of one repeated 8-byte symbol: the best case FSST can reach, where
+# every code byte stands for a full MAX_SYMBOL_LEN-byte symbol
+_symbol_runs = st.builds(
+    lambda sym, reps, tail: sym * reps + tail,
+    st.text(alphabet=st.characters(min_codepoint=0x20, max_codepoint=0x7E),
+            min_size=8, max_size=8),
+    st.integers(0, 200), st.text(max_size=3))
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(st.one_of(text_value, _symbol_runs), max_size=60),
+       st.booleans())
+def test_fsst_output_never_below_symbol_length_bound(strs, reuse_table):
+    """Selection prunes segment-dictionary trials on the bound
+    fsst bytes >= raw_bytes / MAX_SYMBOL_LEN; it must hold for any input,
+    trained or reused table, and for the sampled ratio estimate."""
+    from fileconvert_spark.functions import fsst
+
+    arr = pa.array(strs, type=pa.string())
+    _, raw = codecs._string_buffers(arr)
+    table = fsst.train("".join(strs).encode(),
+                       lengths=[len(s.encode()) for s in strs]) \
+        if reuse_table and raw else None
+    payload, table_blob = fsst.fsst_encode_array(arr, table)
+    assert all(len(s) <= fsst.MAX_SYMBOL_LEN
+               for s in fsst.deserialize_table(table_blob))
+    _, hdr = fsst.fsst_payload_header(memoryview(payload))
+    assert len(payload) - hdr >= raw / fsst.MAX_SYMBOL_LEN
+    ratio, _tbl = fsst.estimate_ratio(arr, 64, table=table)
+    assert ratio >= 1 / fsst.MAX_SYMBOL_LEN
