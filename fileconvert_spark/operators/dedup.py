@@ -474,7 +474,7 @@ def simhash_components(df: DataFrame, id_col: str, text_col: str = "text",
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b", max_iter: int = 25,
-                         small_graph_edges: int | None = None) -> DataFrame:
+                         small_graph_edges: int = 1 << 21) -> DataFrame:
     """Connected components over a near-dup pair graph -> (id, component),
     component = min node id in the cluster. This is the keeper-selection
     step of dedup: keep ``id == component``, drop the rest.
@@ -500,14 +500,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     single-task). Results are identical by construction: both paths
     compute component = min node id. Default 1<<21 edges (~32 MB of
     (src, dst) int64 pairs in one task — comfortably executor-sized);
-    env FCS_CC_SMALL_EDGES overrides, 0 disables (always iterate).
+    0 disables (always iterate).
     """
-    import os
     import warnings
-
-    if small_graph_edges is None:
-        small_graph_edges = int(os.environ.get("FCS_CC_SMALL_EDGES",
-                                               1 << 21))
 
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     sym = edges.union(edges.select(F.col("dst").alias("src"),

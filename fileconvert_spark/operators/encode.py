@@ -58,7 +58,8 @@ ENC_SPARK_SCHEMA = (
 )
 
 DEFAULT_CHUNK_ROWS = 65536
-DEFAULT_CHUNK_BYTES = 32 << 20
+DEFAULT_CHUNK_BYTES = 32 << 20  # a chunk flushes at whichever limit
+                                # (rows or Arrow bytes) it reaches first
 
 # arrow types reconstructible from their str() name (fast path)
 _TYPE_REGISTRY: dict[str, pa.DataType] = {
@@ -740,8 +741,7 @@ def resolve_page_dict(page_blob: bytes | None, map_blob: bytes,
     return vals.take(pa.array(local_map.astype(np.int64)))
 
 
-def consolidate_part_dicts(fam_rows: list[dict], all_columns: list[str],
-                           part_id: int) -> list[dict] | None:
+def consolidate_part_dicts(rows: list[dict], part_id: int) -> list[dict]:
     """Write-time per-part dictionary-page consolidation.
 
     Chunks of one part re-store their value dictionaries independently
@@ -763,13 +763,13 @@ def consolidate_part_dicts(fam_rows: list[dict], all_columns: list[str],
     meta ``dp`` = 1 and ``ps`` = sha256 of the page blob (chunk
     integrity extends to the page), with dict = the packed map.
 
-    ``fam_rows``: this part's enc rows whose codec is in DICT_FAMILY.
-    Returns None when no column profits — the common case on
-    chunk-local value distributions (e.g. commit hashes whose repeats
-    never straddle chunks: measured union == sum there, a guaranteed
-    loss skipped before the page is even encoded). Otherwise returns
-    the full replacement set: every fam row (rewritten or not) plus one
-    page row per column in ``all_columns`` (placeholder dict=None for
+    ``rows``: every enc row of the part; only rows whose codec is in
+    DICT_FAMILY are rewritten (in place). Returns ``rows`` unchanged
+    when no column profits — the common case on chunk-local value
+    distributions (e.g. commit hashes whose repeats never straddle
+    chunks: measured union == sum there, a guaranteed loss skipped
+    before the page is even encoded). Otherwise returns ``rows`` plus
+    one page row per column of the part (placeholder dict=None for
     non-consolidated columns, keeping per-column enc-row counts uniform
     so the per-COLUMN row-group alignment that page-skipping projection
     relies on survives).
@@ -782,7 +782,7 @@ def consolidate_part_dicts(fam_rows: list[dict], all_columns: list[str],
     )
 
     by_col: dict[str, list[dict]] = {}
-    for r in fam_rows:
+    for r in rows:
         if r["codec"] in DICT_FAMILY and r["dict"] is not None:
             by_col.setdefault(r["column"], []).append(r)
 
@@ -847,9 +847,9 @@ def consolidate_part_dicts(fam_rows: list[dict], all_columns: list[str],
                               + len(meta_json))
 
     if not pages:
-        return None
-    out = list(fam_rows)
-    for col in all_columns:
+        return rows
+    out = list(rows)
+    for col in sorted({r["column"] for r in rows}):
         pg = pages.get(col)
         meta_json = json.dumps({"k": pg["k"]} if pg else {},
                                separators=(",", ":"))
@@ -904,7 +904,6 @@ def decode_chunk(rows: dict[str, dict], column_order: list[str],
 
 
 def make_encode_fn(chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                   chunk_bytes: int = DEFAULT_CHUNK_BYTES,
                    part_id_col: str | None = None,
                    cache_ns: str | None = None,
                    zone_cols: frozenset | None = None,
@@ -973,7 +972,8 @@ def make_encode_fn(chunk_rows: int = DEFAULT_CHUNK_ROWS,
                 bufs.setdefault(pid, []).append(sub)
                 rows[pid] = rows.get(pid, 0) + sub.num_rows
                 byts[pid] = byts.get(pid, 0) + sub.nbytes
-                if rows[pid] >= chunk_rows or byts[pid] >= chunk_bytes:
+                if (rows[pid] >= chunk_rows
+                        or byts[pid] >= DEFAULT_CHUNK_BYTES):
                     yield flush(pid)
         for pid, buf in list(bufs.items()):
             if buf:
@@ -983,7 +983,6 @@ def make_encode_fn(chunk_rows: int = DEFAULT_CHUNK_ROWS,
 
 
 def encode_df(df, chunk_rows: int = DEFAULT_CHUNK_ROWS,
-              chunk_bytes: int = DEFAULT_CHUNK_BYTES,
               part_id_col: str | None = None,
               cache_ns: str | None = None):
     """DataFrame -> enc DataFrame (one row per partition x chunk x column)."""
@@ -992,7 +991,7 @@ def encode_df(df, chunk_rows: int = DEFAULT_CHUNK_ROWS,
         # shares the FSST cache namespace, other jobs never collide
         cache_ns = uuid.uuid4().hex[:12]
     return df.mapInArrow(
-        make_encode_fn(chunk_rows, chunk_bytes, part_id_col, cache_ns),
+        make_encode_fn(chunk_rows, part_id_col, cache_ns),
         ENC_SPARK_SCHEMA,
     )
 

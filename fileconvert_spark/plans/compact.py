@@ -63,9 +63,7 @@ import time
 import pyarrow as pa
 
 from . import fsio
-from ..functions.codecs import DICT_FAMILY
 from ..operators.encode import (
-    ENC_ARROW_SCHEMA,
     PAGE_CHUNK_ID,
     chunk_integrity_sha,
     consolidate_part_dicts,
@@ -162,7 +160,6 @@ def _merge_group(out_dir: str, new_pid: int, src_pids: list[int],
                  t0: float, ki_cols: list[str] | None = None) -> dict:
     """Executor-side: merge one run of source parts into part new_pid."""
     merged: list[dict] = []
-    all_cols: set[str] = set()
     offset = 0
     for pid in src_pids:
         path = os.path.join(out_dir, "data", f"part-{pid:05d}.parquet")
@@ -174,22 +171,15 @@ def _merge_group(out_dir: str, new_pid: int, src_pids: list[int],
             max_cid = max(max_cid, cid)
             r["chunk_id"] = cid + offset
             r["part_id"] = new_pid
-            all_cols.add(r["column"])
         offset += max_cid + 1
         merged.extend(rows)
+    if ki_cols:
+        _merge_sidecars(out_dir, new_pid, src_pids, ki_cols)
     # cross-part dictionary-page consolidation over the merged part: the
     # whole point of merging clustered small parts — value overlap that
     # per-part pages could not capture
-    fam = [r for r in merged if r["codec"] in DICT_FAMILY]
-    if fam:
-        new_rows = consolidate_part_dicts(fam, sorted(all_cols), new_pid)
-        if new_rows is not None:
-            merged = [r for r in merged
-                      if r["codec"] not in DICT_FAMILY] + new_rows
-    tbl = pa.Table.from_pylist(merged, schema=ENC_ARROW_SCHEMA)
-    if ki_cols:
-        _merge_sidecars(out_dir, new_pid, src_pids, ki_cols)
-    return write_part_file(out_dir, new_pid, tbl, t0,
+    return write_part_file(out_dir, new_pid,
+                           consolidate_part_dicts(merged, new_pid), t0,
                            extra={"src_parts": [int(p) for p in src_pids]})
 
 

@@ -77,14 +77,13 @@ def encode_table_dedup(spark, df, out_dir: str, content_col: str = "content",
                        blob_buckets: int | None = None,
                        resume: bool = True,
                        stats_sample_fraction: float = 1.0,
-                       cluster_by: tuple[str, ...] | None = None,
-                       zone_maps: bool | tuple[str, ...] | None = None) -> dict:
+                       cluster_by: tuple[str, ...] | None = None) -> dict:
     """Encode ``df`` as a hybrid content-addressed store at ``out_dir``.
 
     ``content_col`` is the deduplicated payload column; every other
     argument mirrors :func:`~.manifest.encode_table` and applies to the
-    ref table (``cluster_by``/``zone_maps`` drive ref-side predicate
-    pruning exactly as for a plain table). ``blob_buckets`` sizes the
+    ref table (``cluster_by`` drives ref-side predicate pruning exactly
+    as for a plain table). ``blob_buckets`` sizes the
     blob table separately (default: auto from deduped bytes).
 
     Resume: both sub-tables are ordinary encoded tables, so a killed
@@ -139,7 +138,7 @@ def encode_table_dedup(spark, df, out_dir: str, content_col: str = "content",
         spark, refs, refs_dir, n_buckets=n_buckets, resume=resume,
         key_col=key_col, salt_cols=salt_cols, weight_col=content_col,
         stats_sample_fraction=stats_sample_fraction,
-        cluster_by=cluster_by, zone_maps=zone_maps)
+        cluster_by=cluster_by)
 
     # source-byte accounting (reporting only): the ref table's raw bytes
     # swap dup rows' content for a 64-char sha the source never had, so

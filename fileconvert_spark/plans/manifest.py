@@ -34,9 +34,7 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from . import fsio
-from ..functions.codecs import DICT_FAMILY as _DICT_FAMILY
 from ..operators.encode import (
-    DEFAULT_CHUNK_BYTES,
     DEFAULT_CHUNK_ROWS,
     ENC_ARROW_SCHEMA,
     PAGE_CHUNK_ID,
@@ -217,7 +215,6 @@ def _merge_intervals(ivs: list[list], cap: int = 32) -> list[list]:
 
 def make_write_kernel(out_dir: str,
                       chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                      chunk_bytes: int = DEFAULT_CHUNK_BYTES,
                       part_id_col: str = "bucket",
                       zone_cols: frozenset | None = None,
                       key_index_cols: frozenset | None = None):
@@ -234,38 +231,19 @@ def make_write_kernel(out_dir: str,
         # sidecar (extra hashes would only weaken pruning, never decode
         # wrongly — but fresh is fresh)
         ki_acc: dict | None = {} if key_index_cols else None
-        encode_fn = make_encode_fn(chunk_rows, chunk_bytes, part_id_col,
+        encode_fn = make_encode_fn(chunk_rows, part_id_col,
                                    cache_ns=out_dir, zone_cols=zone_cols,
                                    key_index_cols=key_index_cols,
                                    key_index_acc=ki_acc)
-        per_part: dict[int, list[pa.RecordBatch]] = {}
+        per_part: dict[int, list[dict]] = {}
         for enc_batch in encode_fn(batches):
-            pid = int(enc_batch.column(0)[0].as_py())
-            per_part.setdefault(pid, []).append(enc_batch)
+            for r in enc_batch.to_pylist():
+                per_part.setdefault(r["part_id"], []).append(r)
 
         fsio.makedirs(os.path.join(out_dir, "data"))
         fsio.makedirs(os.path.join(out_dir, "manifests"))
-        rows: list[dict] = []
-        for pid, enc_batches in per_part.items():
-            tbl = pa.Table.from_batches(enc_batches)
-            # part dictionary-page consolidation (see
-            # operators/encode.py consolidate_part_dicts): only the
-            # dict-family rows pay the to_pylist round-trip; other rows'
-            # payload bytes stay in Arrow.
-            codec_l = tbl.column("codec").to_pylist()
-            if _DICT_FAMILY & set(codec_l):
-                import pyarrow.compute as _pc
-
-                mask = pa.array([c in _DICT_FAMILY for c in codec_l])
-                new_rows = consolidate_part_dicts(
-                    tbl.filter(mask).to_pylist(),
-                    sorted(set(tbl.column("column").to_pylist())), pid)
-                if new_rows is not None:
-                    tbl = pa.concat_tables([
-                        tbl.filter(_pc.invert(mask)),
-                        pa.Table.from_pylist(new_rows,
-                                             schema=ENC_ARROW_SCHEMA),
-                    ])
+        manifests: list[dict] = []
+        for pid, rows in per_part.items():
             if key_index_cols:
                 from .keyindex import write_part_index
 
@@ -273,22 +251,24 @@ def make_write_kernel(out_dir: str,
                     write_part_index(out_dir, pid, col,
                                      (ki_acc.get(pid) or {}).get(col,
                                                                  set()))
-            rows.append(write_part_file(out_dir, pid, tbl, t0))
+            manifests.append(write_part_file(
+                out_dir, pid, consolidate_part_dicts(rows, pid), t0))
 
-        if rows:
-            yield manifest_batch(rows)
+        if manifests:
+            yield manifest_batch(manifests)
 
     return fn
 
 
-def write_part_file(out_dir: str, pid: int, tbl: pa.Table, t0: float,
+def write_part_file(out_dir: str, pid: int, rows: list[dict], t0: float,
                     extra: dict | None = None) -> dict:
-    """Write one part's enc-row table + per-part manifest JSON; returns
-    the manifest as a flat dict (codec_map JSON-encoded) ready for a
-    MANIFEST_SPARK_SCHEMA row. Shared by the encode write kernel and
-    plans/compact.py so footer discipline and part-level zone folding
-    have one source of truth. ``extra`` keys are merged into the
-    manifest JSON only (lineage like src_parts)."""
+    """Write one part's enc rows (dicts of ENC_ARROW_SCHEMA fields) +
+    per-part manifest JSON; returns the manifest as a flat dict
+    (codec_map JSON-encoded) ready for a MANIFEST_SPARK_SCHEMA row.
+    Shared by the encode write kernel and plans/compact.py so footer
+    discipline and part-level zone folding have one source of truth.
+    ``extra`` keys are merged into the manifest JSON only (lineage like
+    src_parts)."""
     data_path = os.path.join(out_dir, "data", f"part-{pid:05d}.parquet")
     # Sort enc rows by (column, chunk_id) and align row groups to
     # one COLUMN each (every chunk emits every column, so each
@@ -299,9 +279,9 @@ def write_part_file(out_dir: str, pid: int, tbl: pa.Table, t0: float,
     # discarding them — at 10 GB this took the 2-of-5-column
     # decode from ~8.8 s (row-level filter, all bytes read) to
     # page-skipping (see BENCH/SCALE_r4.md addendum 3).
-    tbl = tbl.sort_by([("column", "ascending"),
-                       ("chunk_id", "ascending")])
-    rows_per_col = len(set(tbl.column("chunk_id").to_pylist()))
+    rows = sorted(rows, key=lambda r: (r["column"], r["chunk_id"]))
+    chunk_ids = [r["chunk_id"] for r in rows]
+    rows_per_col = len(set(chunk_ids))
     # compression=NONE: our codecs, not parquet's, account for size;
     # attempt-unique tmp + move (fsio) so speculative/zombie task
     # attempts can never corrupt a part whose manifest says done.
@@ -318,27 +298,23 @@ def write_part_file(out_dir: str, pid: int, tbl: pa.Table, t0: float,
     # amortizes and the projection win dominates.
     per_col_rgs = rows_per_col >= 4
     file_bytes = fsio.write_parquet_atomic(
-        tbl, data_path, compression="none",
-        row_group_size=rows_per_col if per_col_rgs else max(
-            tbl.num_rows, 1),
+        pa.Table.from_pylist(rows, schema=ENC_ARROW_SCHEMA), data_path,
+        compression="none",
+        row_group_size=rows_per_col if per_col_rgs else max(len(rows), 1),
         write_statistics=["column"],
         use_dictionary=["column", "codec"],
     )
 
-    chunk_ids = tbl.column("chunk_id").to_pylist()
-    columns = tbl.column("column").to_pylist()
-    codecs_used = tbl.column("codec").to_pylist()
-    n_rows_per = tbl.column("n_rows").to_pylist()
-    raw_b = sum(tbl.column("raw_bytes").to_pylist())
-    enc_b = sum(tbl.column("enc_bytes").to_pylist())
-    shas = tbl.column("sha256_chunk").to_pylist()
+    raw_b = sum(r["raw_bytes"] for r in rows)
+    enc_b = sum(r["enc_bytes"] for r in rows)
     n_chunks = len({cid for cid in chunk_ids
                     if cid != PAGE_CHUNK_ID})
-    n_rows = sum(n for c, cid, n in zip(columns, chunk_ids,
-                                        n_rows_per)
-                 if c == columns[0] and cid != PAGE_CHUNK_ID)
-    codec_map = dict(Counter(f"{c}:{k}" for c, k in zip(columns, codecs_used)))
-    sha_part = hashlib.sha256(b"".join(shas)).hexdigest()
+    n_rows = sum(r["n_rows"] for r in rows
+                 if r["column"] == rows[0]["column"]
+                 and r["chunk_id"] != PAGE_CHUNK_ID)
+    codec_map = dict(Counter(f"{r['column']}:{r['codec']}" for r in rows))
+    sha_part = hashlib.sha256(
+        b"".join(r["sha256_chunk"] for r in rows)).hexdigest()
     wall_ms = int((time.time() - t0) * 1000)
     # part-level zone bounds (Iceberg manifest-pruning pattern):
     # fold each zone column's per-chunk [min, max] into a CAPPED
@@ -358,11 +334,11 @@ def write_part_file(out_dir: str, pid: int, tbl: pa.Table, t0: float,
     zones: dict[str, list] = {}
     col_iv: dict[str, list] = {}
     complete: dict[str, bool] = {}
-    for c, cid, mj in zip(columns, chunk_ids,
-                          tbl.column("meta").to_pylist()):
-        if cid == PAGE_CHUNK_ID:
+    for r in rows:
+        c = r["column"]
+        if r["chunk_id"] == PAGE_CHUNK_ID:
             continue  # page rows carry no zone stats by design
-        meta_d = json.loads(mj)
+        meta_d = json.loads(r["meta"])
         zs = meta_d.get("zs")
         if zs is None:
             complete[c] = False
@@ -406,13 +382,8 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
                  salt_cols: tuple[str, ...] = ("path", "commit"),
                  weight_col: str = "content",
                  chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                 chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-                 derived_cols: dict | None = None,
                  stats_sample_fraction: float = 1.0,
-                 bpe_text_col: str | None = None,
-                 bpe_merges: int = 128,
                  cluster_by: tuple[str, ...] | None = None,
-                 zone_maps: bool | tuple[str, ...] | None = None,
                  key_index_cols: tuple[str, ...] | None = None) -> dict:
     """Encode a table to out_dir with manifests; returns job summary.
 
@@ -434,52 +405,29 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
     full-corpus read; a few percent sample plans the same buckets. Pinned
     in _meta.json so resume re-derives byte-identical assignments.
 
-    ``derived_cols``: extra columns computed in-pipeline before encoding
-    (e.g. ``{"content_len": F.length("content")}``) — the
-    frame-of-reference / delta integer targets of SURVEY.md §2 B7; they
-    round-trip like any other column.
+    Zone maps: the ``cluster_by`` columns plus ``key_col`` carry
+    per-chunk [min, max] bounds for decode_table(predicate=...); without
+    ``cluster_by`` no column does — on unclustered data every chunk's
+    bounds span the whole range and never prune, so they would be pure
+    metadata cost (~50 B/chunk/column; VERDICT r4 item 3 measured +0.6%
+    of the snappy baseline for zero pruning power). Decoding on a column
+    without bounds degrades to the exact catalyst filter — never wrong,
+    just unpruned.
 
-    ``bpe_text_col``: also train-and-store a BPE vocab over this column
-    as table metadata (``_bpe_merges.txt``; see train_and_store_bpe) —
-    encode-once, so downstream token counting loads instead of retrains.
-    Resume keeps an existing vocab untouched.
-
-    ``zone_maps``: which columns carry per-chunk [min, max] zone-map
-    bounds for decode_table(predicate=...). None (default) = the
-    ``cluster_by`` columns plus ``key_col`` when clustering is on, else
-    NO columns: on unclustered data every chunk's bounds span the whole
-    range and never prune, so the bounds are pure metadata cost (~50
-    B/chunk/column — VERDICT r4 item 3 measured them at +0.6% of the
-    snappy baseline for zero pruning power). True = every column;
-    False/() = none; a tuple = exactly those columns. Decoding a table
-    without bounds on the predicate column degrades gracefully to the
-    exact catalyst filter — never wrong, just unpruned. Pinned in
-    _meta.json (table identity, like n_buckets) so resumed parts carry
-    the same stats.
+    Resume: ``n_buckets``, ``key_col``, ``salt_cols``, ``weight_col``,
+    ``stats_sample_fraction``, the zone-map columns and
+    ``key_index_cols`` are the table's identity and come from its
+    _meta.json, whatever the caller passes: bucketing a missing part any
+    other way would duplicate some rows and lose others.
     """
     from pyspark.sql import functions as F
 
     from ..operators.partitioning import plan_buckets, repartition_by_bucket
 
     t0 = time.time()
-    for name, col in (derived_cols or {}).items():
-        df = df.withColumn(name, col)
     fsio.makedirs(out_dir)
-    # bucketing is part of the table's identity: resuming with a different
-    # n_buckets (or different sampled stats) would re-bucket rows and
-    # duplicate them across old/new parts
     meta_path = os.path.join(out_dir, "_meta.json")
     pinned = None
-    # resolve the zone-map column set (see docstring); () = none
-    if zone_maps is None:
-        zone_cols = (frozenset(cluster_by) | {key_col}) if cluster_by \
-            else frozenset()
-    elif zone_maps is True:
-        zone_cols = None  # every column
-    elif zone_maps is False:
-        zone_cols = frozenset()
-    else:
-        zone_cols = frozenset(zone_maps)
     ki_cols = frozenset(key_index_cols or ())
     if ki_cols:
         schema_by_name = {f.name: f for f in df.schema.fields}
@@ -504,11 +452,19 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
                 "buckets whose rows already live inside merged parts "
                 "(duplicates); encode into a fresh directory instead")
         pinned = meta["n_buckets"]
+        key_col = meta["key_col"]
+        salt_cols = tuple(meta["salt_cols"])
+        weight_col = meta["weight_col"]
         stats_sample_fraction = float(meta.get("stats_sample_fraction", 1.0))
+        # "all" is pinned by tables written when every column could
+        # carry zone bounds
         zc = meta.get("zone_cols", "none")
         zone_cols = None if zc == "all" else frozenset(zc if zc != "none"
                                                        else ())
         ki_cols = frozenset(meta.get("key_index_cols") or ())
+    else:
+        zone_cols = (frozenset(cluster_by) | {key_col}) if cluster_by \
+            else frozenset()
 
     t_plan = time.time()
     dfb, plan_info = plan_buckets(df, pinned if pinned is not None else n_buckets,
@@ -540,8 +496,7 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
              "n_buckets": n_buckets, "key_col": key_col,
              "salt_cols": list(salt_cols), "weight_col": weight_col,
              "stats_sample_fraction": stats_sample_fraction,
-             "zone_cols": ("all" if zone_cols is None
-                           else sorted(zone_cols)),
+             "zone_cols": sorted(zone_cols),
              "key_index_cols": sorted(ki_cols)}).encode())
     fsio.write_bytes_atomic(os.path.join(out_dir, "_schema.json"),
                             df.schema.json().encode())
@@ -555,9 +510,6 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
     # survive a crash mid-run — per-part manifests take over until the
     # new list is written at completion
     invalidate_manifest_list(out_dir)
-
-    if bpe_text_col is not None:
-        train_and_store_bpe(df, out_dir, bpe_text_col, n_merges=bpe_merges)
 
     # ``cluster_by``: opt-in within-bucket sort (no extra shuffle — a
     # per-task sort after the bucket exchange) that CLUSTERS chunk values
@@ -587,7 +539,7 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
                     .sortWithinPartitions("bucket", *cluster_by, "_fcs_tie")
                     .drop("_fcs_tie"))
     man_df = shuffled.mapInArrow(
-        make_write_kernel(out_dir, chunk_rows, chunk_bytes, "bucket",
+        make_write_kernel(out_dir, chunk_rows, "bucket",
                           zone_cols=zone_cols,
                           key_index_cols=ki_cols or None),
         MANIFEST_SPARK_SCHEMA,
@@ -676,8 +628,8 @@ def load_bpe_vocab(out_dir: str) -> list[tuple[str, str]]:
     path = os.path.join(out_dir, BPE_VOCAB_FILE)
     if not fsio.exists(path):
         raise FileNotFoundError(
-            f"no {BPE_VOCAB_FILE} in {out_dir}; encode with "
-            "bpe_text_col=... or call train_and_store_bpe first")
+            f"no {BPE_VOCAB_FILE} in {out_dir}; call "
+            "train_and_store_bpe on the table first")
     return deserialize_merges(fsio.read_bytes(path).decode())
 
 

@@ -24,8 +24,8 @@ class _state_partitions:
     32 state partitions and 0.86 s with 8 — the delta is pure store
     overhead). Scale-adaptive, not a local constant: one state partition
     per ~8 MB of input, floored at 8 and capped at the session setting,
-    so multi-GB inputs keep the full session width. Env
-    FCS_STREAM_STATE_PARTS pins an explicit count (ops override).
+    so multi-GB inputs keep the full session width. ``override`` pins
+    an explicit count.
 
     The count is part of a CHECKPOINT's identity — these operators run
     fresh AvailableNow queries with fresh checkpoints, which is the only
@@ -48,11 +48,8 @@ class _state_partitions:
 
         self.spark = spark
         sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        env = os.environ.get("FCS_STREAM_STATE_PARTS")
         if override is not None:
             self.target = int(override)
-        elif env:
-            self.target = int(env)
         else:
             nbytes = 0
             try:

@@ -155,7 +155,7 @@ def test_float_predicate_decode_on_alp_column(spark, tmp_path):
     out = str(tmp_path / "enc")
     encode_table(spark, df, out, n_buckets=8, key_col="k",
                  salt_cols=("k",), weight_col="k",
-                 cluster_by=("amount",), zone_maps=("amount", "k"))
+                 cluster_by=("amount",))
     got = decode_table(spark, out,
                        predicate=("amount", "<=", 123.45)).count()
     want = df.filter(df.amount <= 123.45).count()

@@ -57,9 +57,10 @@ def test_empty_and_edge_inputs():
 
 
 def test_vocab_persists_with_encoded_table(spark, tmp_path):
-    """VERDICT r3 item 2: encode_table(bpe_text_col=...) trains ONCE and
-    stores _bpe_merges.txt as table metadata; load_bpe_vocab reads it
-    back identical, resume keeps it untouched, and the sample is
+    """VERDICT r3 item 2: train_and_store_bpe on an encoded table trains
+    ONCE and stores _bpe_merges.txt as table metadata; load_bpe_vocab
+    reads it back identical, a resumed encode plus a second
+    train_and_store_bpe keeps it untouched, and the sample is
     order-independent (hash-rank, not input order)."""
     import os
 
@@ -71,7 +72,8 @@ def test_vocab_persists_with_encoded_table(spark, tmp_path):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = str(tmp_path / "enc")
     encode_table(spark, df, out, n_buckets=2, key_col="doc_id",
-                 salt_cols=(), weight_col="text", bpe_text_col="text")
+                 salt_cols=(), weight_col="text")
+    train_and_store_bpe(df, out, "text")
     vocab_path = os.path.join(out, BPE_VOCAB_FILE)
     assert os.path.exists(vocab_path)
     merges = load_bpe_vocab(out)
@@ -80,7 +82,9 @@ def test_vocab_persists_with_encoded_table(spark, tmp_path):
     # resume: re-encoding must not retrain (file content byte-stable)
     before = open(vocab_path, "rb").read()
     encode_table(spark, df, out, key_col="doc_id", salt_cols=(),
-                 weight_col="text", bpe_text_col="text")
+                 weight_col="text")
+    train_and_store_bpe(df.orderBy(F.desc("doc_id")), out, "text",
+                        n_merges=8)
     assert open(vocab_path, "rb").read() == before
 
     # order independence: a reshuffled input trains the same vocab

@@ -44,8 +44,7 @@ def test_consolidation_fires_on_overlapping_dicts():
     rows = _fam_rows(_shared_line_chunks())
     assert all(r["codec"] == "linedict" for r in rows)
     old_total = sum(r["enc_bytes"] for r in rows)
-    new = consolidate_part_dicts(list(rows), ["text"], 7)
-    assert new is not None
+    new = consolidate_part_dicts(list(rows), 7)
     pages = [r for r in new if r["chunk_id"] == PAGE_CHUNK_ID]
     chunks = [r for r in new if r["chunk_id"] != PAGE_CHUNK_ID]
     assert len(pages) == 1 and pages[0]["codec"] == PAGE_CODEC
@@ -72,12 +71,14 @@ def test_consolidation_skips_disjoint_dicts():
     chunks = [[f"c{c}token{r}unique {r*7%13}\nsecond{c}_{r}"
                for r in range(400)] for c in range(3)]
     rows = _fam_rows(chunks)
-    assert consolidate_part_dicts(list(rows), ["text"], 7) is None
+    before = [dict(r) for r in rows]
+    assert consolidate_part_dicts(rows, 7) is rows
+    assert rows == before
 
 
 def test_missing_page_raises():
     rows = _fam_rows(_shared_line_chunks())
-    new = consolidate_part_dicts(list(rows), ["text"], 7)
+    new = consolidate_part_dicts(list(rows), 7)
     chunk = next(r for r in new if r["chunk_id"] != PAGE_CHUNK_ID)
     with pytest.raises(Exception, match="dictpage row"):
         decode_column(chunk["codec"], chunk["payload"], chunk["dict"],
@@ -87,7 +88,7 @@ def test_missing_page_raises():
 
 def test_corrupt_page_raises():
     rows = _fam_rows(_shared_line_chunks())
-    new = consolidate_part_dicts(list(rows), ["text"], 7)
+    new = consolidate_part_dicts(list(rows), 7)
     page = next(r for r in new if r["chunk_id"] == PAGE_CHUNK_ID)
     chunk = next(r for r in new if r["chunk_id"] != PAGE_CHUNK_ID)
     bad = bytearray(page["dict"])

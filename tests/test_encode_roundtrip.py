@@ -105,6 +105,27 @@ def test_resume_skips_done_parts(spark, corpus_df, tmp_path):
     assert_roundtrip(corpus_df, dec, KEYS)
 
 
+def test_resume_keeps_pinned_bucketing(spark, corpus_df, tmp_path):
+    """Resume plans buckets with the key, salts and weight pinned in
+    _meta.json, not with the caller's: bucketing a missing part by a
+    different key would duplicate some rows and lose others."""
+    from fileconvert_spark.plans import manifest as mf
+
+    out = str(tmp_path / "enc")
+    encode_table(spark, corpus_df, out, n_buckets=4, key_col="lang")
+    victim = sorted(scan_done_parts(out))[0]
+    os.remove(os.path.join(out, "data", f"part-{victim:05d}.parquet"))
+    os.remove(os.path.join(out, "manifests", f"part-{victim:05d}.json"))
+    os.remove(os.path.join(out, mf.MANIFEST_LIST))
+
+    s2 = encode_table(spark, corpus_df, out, n_buckets=4)
+    assert s2["parts_encoded_this_run"] == 1
+    dec = decode_table(spark, out)
+    assert dec.count() == corpus_df.count()
+    assert dec.exceptAll(corpus_df).count() == 0
+    assert corpus_df.exceptAll(dec).count() == 0
+
+
 def test_torn_manifest_is_reencoded(spark, corpus_df, tmp_path):
     """A torn per-part manifest models an executor crash MID-JOB — in
     that state the consolidated manifest list does not exist yet (it is
@@ -167,14 +188,14 @@ def test_derived_int_columns_roundtrip(spark, corpus_df, tmp_path):
     """In-pipeline derived ints (FoR/delta targets) round-trip and agree
     with recomputation on the decoded data."""
     out = str(tmp_path / "enc_derived")
-    encode_table(
-        spark, corpus_df, out, n_buckets=4,
-        derived_cols={
-            "content_len": F.coalesce(F.length("content"), F.lit(0)).cast("long"),
-            "n_lines": F.size(F.split(F.coalesce(F.col("content"), F.lit("")), "\n"))
-            .cast("long"),
-        },
-    )
+    derived = (
+        corpus_df
+        .withColumn("content_len",
+                    F.coalesce(F.length("content"), F.lit(0)).cast("long"))
+        .withColumn("n_lines",
+                    F.size(F.split(F.coalesce(F.col("content"), F.lit("")),
+                                   "\n")).cast("long")))
+    encode_table(spark, derived, out, n_buckets=4)
     dec = decode_table(spark, out)
     assert "content_len" in dec.columns and "n_lines" in dec.columns
     bad = dec.filter(
@@ -586,7 +607,7 @@ def test_decode_projection(spark, corpus_df, tmp_path):
 
 
 def test_bpe_token_counts_as_derived_engine_column(spark, corpus_df, tmp_path):
-    """Tokenization integrates with the engine via derived_cols: a
+    """Tokenization integrates with the engine as a derived column: a
     trained-BPE token count rides through the int codecs and decodes to
     exactly the recomputed value."""
     from fileconvert_spark.functions.bpe import train_bpe
@@ -597,10 +618,9 @@ def test_bpe_token_counts_as_derived_engine_column(spark, corpus_df, tmp_path):
     merges = train_bpe(sample, n_merges=64)
     out = str(tmp_path / "enc_bpe")
     encode_table(
-        spark, corpus_df, out, n_buckets=4,
-        derived_cols={"n_tok_bpe": token_count_bpe_learned(
-            F.coalesce(F.col("content"), F.lit("")), merges)},
-    )
+        spark, corpus_df.withColumn("n_tok_bpe", token_count_bpe_learned(
+            F.coalesce(F.col("content"), F.lit("")), merges)),
+        out, n_buckets=4)
     dec = decode_table(spark, out)
     bad = dec.filter(
         token_count_bpe_learned(F.coalesce(F.col("content"), F.lit("")),
@@ -942,7 +962,7 @@ def test_predicate_conjunction_decode(spark, tmp_path):
     out = str(tmp_path / "enc_conj")
     encode_table(spark, df, out, n_buckets=8,
                  key_col="grp", salt_cols=("doc_id",), weight_col="text",
-                 cluster_by=("doc_id",), zone_maps=("doc_id", "grp", "src"))
+                 cluster_by=("doc_id",))
 
     cases = [
         [("doc_id", "<", 3000), ("grp", ">=", 1)],
@@ -1016,7 +1036,7 @@ def test_predicate_in_list_decode(spark, tmp_path):
     out = str(tmp_path / "enc_in")
     encode_table(spark, df, out, n_buckets=8,
                  key_col="grp", salt_cols=("doc_id",), weight_col="text",
-                 cluster_by=("doc_id",), zone_maps=("doc_id", "grp"))
+                 cluster_by=("doc_id",))
 
     got = decode_table(spark, out, predicate=("grp", "in", [1, 5]))
     assert got.count() == df.filter(F.col("grp").isin(1, 5)).count()
@@ -1046,7 +1066,7 @@ def test_predicate_disjunction_decode(spark, tmp_path):
     out = str(tmp_path / "enc_disj")
     encode_table(spark, df, out, n_buckets=8,
                  key_col="grp", salt_cols=("doc_id",), weight_col="text",
-                 cluster_by=("doc_id",), zone_maps=("doc_id", "grp", "src"))
+                 cluster_by=("doc_id",))
 
     def want(expr):
         return df.filter(expr).count()

@@ -872,14 +872,12 @@ def test_incremental_encode_stream(spark, tmp_path):
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts_before
 
 
-def test_state_partitions_restores_session_conf(spark, tmp_path,
-                                                monkeypatch):
+def test_state_partitions_restores_session_conf(spark, tmp_path):
     """Sequential _state_partitions blocks each leave
     spark.sql.shuffle.partitions at the value found on entry, also when
     the body raises."""
     from fileconvert_spark.streaming.incremental import _state_partitions
 
-    monkeypatch.delenv("FCS_STREAM_STATE_PARTS", raising=False)
     key = "spark.sql.shuffle.partitions"
     original = spark.conf.get(key)
     src = tmp_path / "events.bin"
