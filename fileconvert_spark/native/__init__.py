@@ -269,6 +269,22 @@ def _u8p(a):
     return a.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8))
 
 
+# The kernels trust their arguments: an out-of-range index reads or
+# writes past a buffer. The wrappers below check every bound a kernel
+# relies on and raise ValueError, so no caller can crash a Python worker
+# or get silently wrong output.
+
+def _check_doc_counts(counts, n_vals: int, what: str) -> None:
+    """Kernels that walk ``counts[d]`` values per doc through one flat
+    array of ``n_vals`` values."""
+    if counts.size and int(counts.min()) < 0:
+        raise ValueError(f"{what}: negative per-doc count")
+    total = int(counts.sum())
+    if total > n_vals:
+        raise ValueError(
+            f"{what}: counts sum to {total} but only {n_vals} values given")
+
+
 def fsst_encode(arr, lengths, tables, hash_bits: int, walk_seg: int):
     """C greedy FSST parse; returns (enc bytes, enc_lengths) or None when
     the native library is unavailable. ``tables`` is the
@@ -319,6 +335,9 @@ def winnow_select(vals, counts, w: int):
         return None
     vals = np.ascontiguousarray(vals, dtype=np.uint64)
     counts = np.ascontiguousarray(counts, dtype=np.int64)
+    _check_doc_counts(counts, vals.size, "winnow")
+    if w < 1:
+        raise ValueError(f"winnow: window {w} < 1")
     out = np.empty(max(vals.size, 1), dtype=np.int64)
     p_i64 = ctypes.POINTER(ctypes.c_int64)
     m = lib.winnow_select(
@@ -355,7 +374,8 @@ def slab_word_hashes(buf, doc_starts):
 def slab_gram_hashes(wh, wc, ngram: int, short_doc_gram: bool, total: int):
     """C rolling word-n-gram hashes; returns gram hashes uint64[total] or
     None when unavailable. ``total`` is the exact gram count the caller
-    derives from ``wc`` (asserted against the kernel's own count)."""
+    derives from ``wc``; a different count raises ValueError before the
+    kernel runs, since it would overrun the buffer."""
     import numpy as np
 
     lib = load()
@@ -363,14 +383,21 @@ def slab_gram_hashes(wh, wc, ngram: int, short_doc_gram: bool, total: int):
         return None
     wh = np.ascontiguousarray(wh, dtype=np.uint64)
     wc = np.ascontiguousarray(wc, dtype=np.int64)
+    _check_doc_counts(wc, wh.size, "slab_gram_hashes")
+    if ngram < 1:
+        raise ValueError(f"slab_gram_hashes: ngram {ngram} < 1")
+    # the kernel writes exactly this many grams into a total-sized buffer
+    grams = int(np.maximum(wc - (ngram - 1), 0).sum())
+    if short_doc_gram:
+        grams += int(((wc > 0) & (wc < ngram)).sum())
+    if grams != total:
+        raise ValueError(f"slab_gram_hashes: {grams} grams, not {total}")
     out = np.empty(max(total, 1), dtype=np.uint64)
     p_i64 = ctypes.POINTER(ctypes.c_int64)
     p_u64 = ctypes.POINTER(ctypes.c_uint64)
-    m = lib.slab_gram_hashes(
+    lib.slab_gram_hashes(
         wh.ctypes.data_as(p_u64), wc.ctypes.data_as(p_i64), wc.size,
         ngram, 1 if short_doc_gram else 0, out.ctypes.data_as(p_u64))
-    if m != total:
-        return None  # defensive: count mismatch -> NumPy path decides
     return out[:total]
 
 
@@ -385,6 +412,9 @@ def winnow_fps(vals, counts, w: int):
         return None
     vals = np.ascontiguousarray(vals, dtype=np.uint64)
     counts = np.ascontiguousarray(counts, dtype=np.int64)
+    _check_doc_counts(counts, vals.size, "winnow")
+    if w < 1:
+        raise ValueError(f"winnow: window {w} < 1")
     out_fps = np.empty(max(vals.size, 1), dtype=np.uint64)
     out_nfp = np.empty(max(counts.size, 1), dtype=np.int64)
     p_i64 = ctypes.POINTER(ctypes.c_int64)
@@ -468,6 +498,7 @@ def oph_minhash(gh, counts, n_hashes: int, densify_c):
         return None
     gh = np.ascontiguousarray(gh, dtype=np.uint64)
     counts = np.ascontiguousarray(counts, dtype=np.int64)
+    _check_doc_counts(counts, gh.size, "oph_minhash")
     nd = counts.size
     out = np.empty((max(nd, 1), n_hashes), dtype=np.uint64)
     lib.oph_minhash(
@@ -489,6 +520,7 @@ def simhash_batch(wh, wc):
         return None
     wh = np.ascontiguousarray(wh, dtype=np.uint64)
     wc = np.ascontiguousarray(wc, dtype=np.int64)
+    _check_doc_counts(wc, wh.size, "simhash_batch")
     nd = wc.size
     out = np.empty(max(nd, 1), dtype=np.uint64)
     lib.simhash_batch(
@@ -517,6 +549,19 @@ def huff_decode(payload, lut_sym, lut_len, table_bits: int, seg_off,
     lut_len = np.ascontiguousarray(lut_len, dtype=np.uint8)
     seg_off = np.ascontiguousarray(seg_off, dtype=np.int64)
     n_seg = seg_off.size - 1
+    # the kernel reads a (table_bits + 7)-bit window from a 32-bit load
+    if not 1 <= table_bits <= 25:
+        raise ValueError(f"huffman: table_bits {table_bits} not in 1..25")
+    if min(lut_sym.size, lut_len.size) < 1 << table_bits:
+        raise ValueError(f"huffman: LUT of {min(lut_sym.size, lut_len.size)}"
+                         f" entries is smaller than 2^{table_bits}")
+    if n_seg < 0 or seg_syms < 1 or not 0 <= n <= n_seg * seg_syms:
+        raise ValueError(f"huffman: {n} symbols do not fit {max(n_seg, 0)}"
+                         f" segments of {seg_syms}")
+    if n_seg and (seg_off[0] < 0 or seg_off[-1] > payload.size
+                  or bool((np.diff(seg_off) < 0).any())):
+        raise ValueError("huffman: segment offsets outside the payload "
+                         f"of {payload.size} bytes")
     out = np.empty(max(int(n_seg * seg_syms), 1), dtype=np.uint32)
     rc = lib.huff_decode(
         _u8p(buf),
@@ -545,6 +590,14 @@ def huff_encode(v, sym_len, codes, seg_syms: int):
     sym_len = np.ascontiguousarray(sym_len, dtype=np.uint8)
     codes = np.ascontiguousarray(codes, dtype=np.uint32)
     n = v.size
+    if seg_syms < 1:
+        raise ValueError(f"huffman.encode: seg_syms {seg_syms} < 1")
+    if codes.size < sym_len.size:
+        raise ValueError(f"huffman.encode: {codes.size} codes for "
+                         f"{sym_len.size} symbols")
+    if n and (int(v.min()) < 0 or int(v.max()) >= sym_len.size):
+        raise ValueError("huffman.encode: symbol outside "
+                         f"0..{sym_len.size - 1}")
     n_seg = max(1, -(-n // seg_syms))
     # every code is <= MAX_LEN (16) bits -> 2 bytes/symbol + per-segment
     # alignment byte bounds the output exactly
@@ -593,7 +646,8 @@ def huff_code_lengths(counts, max_len: int):
 def pack_bits(vals, width: int):
     """C fixed-width MSB-first bit-pack; returns bytes or None when the
     kernel is unavailable. Byte-identical to bitpack.pack_uints's
-    np.packbits matrix path (property-tested)."""
+    np.packbits matrix path (property-tested). Raises ValueError when a
+    value does not fit ``width`` bits."""
     import numpy as np
 
     lib = load()
@@ -601,6 +655,11 @@ def pack_bits(vals, width: int):
         return None
     v = np.ascontiguousarray(vals, dtype=np.uint64)
     n = v.size
+    if not 0 <= width <= 64:
+        raise ValueError(f"pack_bits: width {width} not in 0..64")
+    if n and width < 64 and int(v.max()) >> width:
+        raise ValueError(f"pack_bits: value {int(v.max())} does not fit "
+                         f"{width} bits")
     cap = (n * width + 7) // 8 + 8
     out = np.empty(cap, dtype=np.uint8)
     rc = lib.pack_bits(
@@ -620,6 +679,8 @@ def unpack_bits(data, width: int, n: int):
     lib = load()
     if lib is None:
         return None
+    if not 0 <= width <= 64 or n < 0:
+        raise ValueError(f"unpack_bits: {n} x {width}-bit values")
     buf = np.frombuffer(data, dtype=np.uint8)
     out = np.empty(max(n, 1), dtype=np.uint64)
     rc = lib.unpack_bits(

@@ -183,14 +183,16 @@ def _merge_group(out_dir: str, new_pid: int, src_pids: list[int],
                            extra={"src_parts": [int(p) for p in src_pids]})
 
 
-def make_compact_kernel(out_dir: str, ki_cols: list[str] | None = None):
+def make_compact_kernel(out_dir: str, plan: list[tuple[int, list[int]]],
+                        ki_cols: list[str] | None = None):
+    """mapInArrow kernel over ``spark.range(len(plan))``: each id row
+    merges ``plan[id]`` = (new part id, source part ids)."""
     def fn(batches):
         t0 = time.time()
         rows = []
         for b in batches:
-            for i in range(b.num_rows):
-                new_pid = int(b.column(0)[i].as_py())
-                src_pids = json.loads(b.column(1)[i].as_py())
+            for i in b.column(0).to_pylist():
+                new_pid, src_pids = plan[i]
                 rows.append(_merge_group(out_dir, new_pid, src_pids, t0,
                                          ki_cols=ki_cols))
         if rows:
@@ -288,11 +290,10 @@ def compact_table(spark, out_dir: str, target_bytes: int = 64 << 20) -> dict:
 
     ki_cols = list((read_table_meta(out_dir) or {})
                    .get("key_index_cols") or ())
-    pdf = spark.createDataFrame(
-        [(int(p), json.dumps(g)) for p, g in plan],
-        "new_pid int, src string").repartition(len(plan))
-    man_rows = pdf.mapInArrow(make_compact_kernel(out_dir, ki_cols),
-                              MANIFEST_SPARK_SCHEMA).collect()
+    # one task per merge group, straight from a range: no exchange stage
+    man_rows = spark.range(len(plan), numPartitions=len(plan)).mapInArrow(
+        make_compact_kernel(out_dir, plan, ki_cols),
+        MANIFEST_SPARK_SCHEMA).collect()
     if len(man_rows) != len(plan):
         raise RuntimeError(
             f"compact_table: {len(plan)} groups planned but "

@@ -933,7 +933,13 @@ def decode_table(spark, out_dir: str,
     task groups of about DECODE_TASK_BYTES, using the per-part file
     sizes the manifest list already carries, with the target floored so
     at least 4x defaultParallelism groups exist (never under-parallelize
-    a big decode).
+    a big decode). The r5 figures were measured while every Python task
+    also re-read each zip directory on sys.path (~0.15-0.20 s of worker
+    CPU per task); the engine now skips that in its workers (see
+    ``fileconvert_spark._skip_worker_zip_rereads``), so the per-task
+    cost they show is an upper bound. The groups are the partitions of
+    ``spark.range(len(groups))``; the kernel looks each id up in the
+    group list, so no exchange stage runs before the decode.
 
     The table's _meta.json, _schema.json and manifest list are each
     read once per call.
@@ -1035,9 +1041,6 @@ def decode_table(spark, out_dir: str,
             cur, cur_b = [], 0
     if cur:
         groups.append(cur)
-    fdf = spark.createDataFrame([("\n".join(g),) for g in groups],
-                                "paths string") \
-        .repartition(max(len(groups), 1))
     flt = [("column", "in", sorted(column_order))] \
         if len(column_order) < len(all_names) else None
 
@@ -1095,14 +1098,15 @@ def decode_table(spark, out_dir: str,
     def decode_groups(batches):
         # mapInArrow: decoded chunks go back to the JVM as Arrow batches
         # directly — no pandas materialization on the decode hot path;
-        # each incoming row is one task GROUP of newline-joined part
-        # paths
+        # each incoming id row names one task GROUP of part paths
         for b in batches:
-            for paths in b.column(0).to_pylist():
-                for path in paths.split("\n"):
+            for i in b.column(0).to_pylist():
+                for path in groups[i]:
                     yield from _decode_part(path)
 
-    dec = fdf.mapInArrow(decode_groups, schema=schema)
+    # one task per group, straight from a range: no exchange stage
+    dec = spark.range(len(groups), numPartitions=max(len(groups), 1)) \
+        .mapInArrow(decode_groups, schema=schema)
     return dec.filter(predicate_column_expr(pred)) if pred else dec
 
 

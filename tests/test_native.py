@@ -438,3 +438,144 @@ def test_huff_code_lengths_kernel_skewed_large_alphabet():
     want = huffman._code_lengths_py(c, 16)
     assert np.array_equal(got, want)
     assert int(got.max()) <= 16
+
+
+# ---------------------------------------------------------------------
+# Argument validation: the kernels trust their bounds, so the wrappers
+# must raise ValueError first. Everything below runs in a child process,
+# so a regression that crashes a kernel fails one test instead of
+# killing pytest.
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_CRASH_CASES = {
+    # returned b'' — silently dropped the values
+    "pack_bits_nonzero_at_width_0":
+        "native.pack_bits(np.array([1, 2], np.uint64), 0)",
+    # SIGSEGV: symbol indexes far past sym_len
+    "huff_encode_symbol_past_alphabet":
+        "native.huff_encode(np.array([0, 1 << 40], np.int64),"
+        " np.ones(2, np.uint8), np.arange(2, dtype=np.uint32), 64)",
+    # free(): invalid size — counts walk past vals
+    "winnow_select_counts_past_vals":
+        "native.winnow_select(np.arange(4, dtype=np.uint64),"
+        " np.array([3, 1 << 40]), 2)",
+    # returned zeros — read past a 16-entry LUT
+    "huff_decode_table_bits_past_lut":
+        "native.huff_decode(np.zeros(8, np.uint8), np.zeros(16, np.uint32),"
+        " np.ones(16, np.uint8), 16, np.array([0, 8]), 64, 10)",
+    # returned zeros — read past the payload
+    "huff_decode_seg_off_past_payload":
+        "native.huff_decode(np.zeros(8, np.uint8), np.zeros(16, np.uint32),"
+        " np.ones(16, np.uint8), 4, np.array([0, 1 << 20]), 64, 10)",
+    # SIGSEGV: per-doc counts walk past the hash array
+    "oph_minhash_counts_past_hashes":
+        "native.oph_minhash(np.arange(4, dtype=np.uint64),"
+        " np.array([3, 1 << 40]), 8, 7)",
+    "simhash_batch_counts_past_hashes":
+        "native.simhash_batch(np.arange(4, dtype=np.uint64),"
+        " np.array([3, 1 << 40]))",
+    "slab_gram_hashes_counts_past_hashes":
+        "native.slab_gram_hashes(np.arange(4, dtype=np.uint64),"
+        " np.array([3, 1 << 40]), 3, True, 5)",
+    # wrote 98 grams into a buffer sized for the 1 the caller claimed
+    "slab_gram_hashes_wrong_total":
+        "native.slab_gram_hashes(np.arange(100, dtype=np.uint64),"
+        " np.array([100]), 3, True, 1)",
+}
+
+
+def _run_child(code: str):
+    import subprocess
+    import sys
+
+    return subprocess.run([sys.executable, "-c", code], cwd=_ROOT,
+                          capture_output=True, text=True, timeout=300)
+
+
+@requires_native
+@pytest.mark.parametrize("case", sorted(_CRASH_CASES))
+def test_native_bad_arguments_raise_value_error(case):
+    r = _run_child(
+        "import numpy as np\n"
+        "from fileconvert_spark import native\n"
+        "try:\n"
+        f"    {_CRASH_CASES[case]}\n"
+        "except ValueError as e:\n"
+        "    print('ValueError:', e)\n")
+    assert r.returncode == 0, (r.returncode, r.stderr[-2000:])
+    assert r.stdout.startswith("ValueError:"), r.stdout
+
+
+_REJECT = settings(max_examples=60, deadline=None, database=None)
+
+
+@_REJECT
+@given(st.integers(min_value=-8, max_value=80),
+       st.lists(st.integers(min_value=0, max_value=2**64 - 1),
+                min_size=1, max_size=40))
+def _prop_pack_bits_rejects(width, vals):
+    v = np.array(vals, dtype=np.uint64)
+    if 0 <= width <= 64:
+        if width < 64:
+            v[-1] |= np.uint64(1) << np.uint64(width)
+        else:
+            width = 65
+    with pytest.raises(ValueError):
+        native.pack_bits(v, width)
+
+
+@_REJECT
+@given(st.integers(min_value=1, max_value=64),
+       st.lists(st.integers(min_value=0, max_value=63), max_size=200),
+       st.integers(min_value=-(1 << 40), max_value=1 << 40))
+def _prop_huff_encode_rejects(k, vals, bad):
+    if 0 <= bad < k:
+        bad += k
+    v = np.array(vals + [bad], dtype=np.int64) % max(k, 1)
+    v[-1] = bad
+    with pytest.raises(ValueError):
+        native.huff_encode(v, np.full(k, 6, np.uint8),
+                           np.arange(k, dtype=np.uint32), 64)
+
+
+@_REJECT
+@given(st.lists(st.integers(min_value=0, max_value=2**64 - 1),
+                max_size=100),
+       st.lists(st.integers(min_value=0, max_value=50), min_size=1,
+                max_size=20),
+       st.integers(min_value=1, max_value=10))
+def _prop_winnow_select_rejects(vals, counts, w):
+    c = np.array(counts, dtype=np.int64)
+    c[-1] += max(len(vals) - int(c.sum()), 0) + 1
+    with pytest.raises(ValueError):
+        native.winnow_select(np.array(vals, dtype=np.uint64), c, w)
+
+
+@_REJECT
+@given(st.integers(min_value=1, max_value=12),
+       st.integers(min_value=0, max_value=64),
+       st.booleans(),
+       st.integers(min_value=1, max_value=1 << 30))
+def _prop_huff_decode_rejects(lut_bits, n_payload, past_lut, over):
+    lut = 1 << lut_bits
+    table_bits, end = lut_bits, n_payload
+    if past_lut:
+        table_bits = lut_bits + 1 + over % 30
+    else:
+        end = n_payload + over
+    with pytest.raises(ValueError):
+        native.huff_decode(np.zeros(n_payload, np.uint8),
+                           np.zeros(lut, np.uint32), np.ones(lut, np.uint8),
+                           table_bits, np.array([0, end]), 64, 10)
+
+
+@requires_native
+@pytest.mark.parametrize("prop", ["pack_bits", "huff_encode",
+                                  "winnow_select", "huff_decode"])
+def test_native_rejects_invalid_arguments_property(prop):
+    """Hypothesis property per entry point: generated out-of-bounds
+    arguments raise ValueError, never crash or return garbage."""
+    r = _run_child(f"from tests.test_native import _prop_{prop}_rejects\n"
+                   f"_prop_{prop}_rejects()\n")
+    assert r.returncode == 0, (r.returncode, r.stderr[-3000:])
