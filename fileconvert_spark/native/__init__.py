@@ -285,6 +285,15 @@ def _check_doc_counts(counts, n_vals: int, what: str) -> None:
             f"{what}: counts sum to {total} but only {n_vals} values given")
 
 
+def _check_table(a, dtype, min_size: int, what: str) -> None:
+    """A lookup table the kernel reads through a typed pointer."""
+    if (a.dtype != dtype or not a.flags.c_contiguous
+            or a.size < min_size):
+        raise ValueError(
+            f"{what}: need a contiguous {dtype.__name__} array of >= "
+            f"{min_size} entries")
+
+
 def fsst_encode(arr, lengths, tables, hash_bits: int, walk_seg: int):
     """C greedy FSST parse; returns (enc bytes, enc_lengths) or None when
     the native library is unavailable. ``tables`` is the
@@ -297,12 +306,28 @@ def fsst_encode(arr, lengths, tables, hash_bits: int, walk_seg: int):
         return None
     lut12, ones, h3 = tables
     n = len(arr)
+    lengths = np.ascontiguousarray(lengths, dtype=np.int64)
+    if lengths.size and int(lengths.min()) < 0:
+        raise ValueError("fsst_encode: negative string length")
+    if int(lengths.sum()) > n:
+        raise ValueError(
+            f"fsst_encode: lengths sum to {int(lengths.sum())} but only "
+            f"{n} bytes given")
+    if walk_seg < 1:
+        raise ValueError(f"fsst_encode: walk_seg {walk_seg} < 1")
+    _check_table(lut12, np.uint16, 1 << 16, "fsst_encode lut12")
+    _check_table(ones, np.uint16, 256, "fsst_encode ones")
+    if h3 is not None:
+        if not 1 <= hash_bits <= 32:
+            raise ValueError(f"fsst_encode: hash_bits {hash_bits} not in 1..32")
+        # two hash ways of 2**hash_bits slots each
+        _check_table(h3[0], np.uint64, 2 << hash_bits, "fsst_encode sym_t")
+        _check_table(h3[1], np.uint16, 2 << hash_bits, "fsst_encode lc_t")
     padded = np.empty(n + 8, dtype=np.uint8)    # memcpy reads 8 past pos
     padded[:n] = arr
     padded[n:] = 0
     out = np.empty(2 * max(n, 1), dtype=np.uint8)
     enc_lens = np.empty(max(len(lengths), 1), dtype=np.int64)
-    lengths = np.ascontiguousarray(lengths, dtype=np.int64)
     p_i64 = ctypes.POINTER(ctypes.c_int64)
     p_u16 = ctypes.POINTER(ctypes.c_uint16)
     p_u64 = ctypes.POINTER(ctypes.c_uint64)
@@ -361,6 +386,10 @@ def slab_word_hashes(buf, doc_starts):
     buf = np.ascontiguousarray(buf, dtype=np.uint8)
     doc_starts = np.ascontiguousarray(doc_starts, dtype=np.int64)
     nd = doc_starts.size
+    # the kernel assigns each word to the last doc starting at or before
+    # it; out-of-order starts would silently misattribute words
+    if nd > 1 and bool((doc_starts[1:] < doc_starts[:-1]).any()):
+        raise ValueError("slab_word_hashes: doc_starts not ascending")
     out_wh = np.empty((buf.size + 1) // 2 + 1, dtype=np.uint64)
     out_wc = np.empty(max(nd, 1), dtype=np.int64)
     p_i64 = ctypes.POINTER(ctypes.c_int64)
@@ -439,6 +468,15 @@ def jpeg_entropy_decode(data, n_mcus, sched, dc_sel, ac_sel, coefs,
     if lib is None or not hasattr(lib, "jpeg_entropy_decode"):
         return None
     n_comp = max(sched) + 1
+    if min(sched) < 0 or n_comp > 16:
+        raise ValueError(f"JPEG: component index outside 0..15 in {sched}")
+    end_block = start_block + max(n_mcus, 0) * len(sched)
+    if start_block < 0 or not (
+            coefs.dtype == np.int32 and coefs.flags.c_contiguous
+            and coefs.size >= end_block * 64):
+        raise ValueError(
+            "JPEG: coefs must be a contiguous int32 array holding 64 "
+            f"coefficients for blocks {start_block}..{end_block}")
     # flatten the huffman tables: per component, DC then AC —
     # mincode/maxcode/valptr are 17 int64 each, vals up to 256 bytes
     minc = np.zeros((n_comp, 2, 17), dtype=np.int64)
@@ -447,6 +485,7 @@ def jpeg_entropy_decode(data, n_mcus, sched, dc_sel, ac_sel, coefs,
     vals = np.zeros((n_comp, 2, 256), dtype=np.uint8)
     for ci in set(sched):
         for ti, tab in ((0, dc_sel[ci]), (1, ac_sel[ci])):
+            _check_jpeg_huff(tab)
             minc[ci, ti] = tab.mincode
             maxc[ci, ti] = tab.maxcode
             vptr[ci, ti] = tab.valptr
@@ -468,6 +507,24 @@ def jpeg_entropy_decode(data, n_mcus, sched, dc_sel, ac_sel, coefs,
     return int(rc)
 
 
+def _check_jpeg_huff(tab) -> None:
+    """The kernel reads ``vals[valptr[ln] + code - mincode[ln]]`` for a
+    code of length ln at most maxcode[ln]; that stays inside ``vals``
+    only for the canonical table its code counts imply (T.81 F.2.2.3)
+    and a ``vals`` holding every code's value."""
+    code = k = 0
+    for ln in range(1, 17):
+        n = int(tab.maxcode[ln]) - code + 1 if tab.maxcode[ln] >= 0 else 0
+        if tab.mincode[ln] != code or tab.valptr[ln] != k or n < 0:
+            raise ValueError(
+                f"JPEG: huffman table not canonical at code length {ln}")
+        code = (code + n) << 1
+        k += n
+    if k > tab.vals.size:
+        raise ValueError(
+            f"JPEG: huffman table has {k} codes but {tab.vals.size} values")
+
+
 def png_defilter(data, filters, w: int, ch: int):
     """C PNG defilter; returns (h, w*ch) uint8 or None when unavailable.
     Callers pre-validate filter bytes (the kernel's error return is
@@ -479,7 +536,13 @@ def png_defilter(data, filters, w: int, ch: int):
         return None
     data = np.ascontiguousarray(data, dtype=np.uint8)
     filters = np.ascontiguousarray(filters, dtype=np.uint8)
+    if ch < 1 or data.ndim != 2 or data.shape[1] != w * ch:
+        raise ValueError(
+            f"PNG: data shape {data.shape} is not rows of w*ch = {w}*{ch} "
+            "bytes")
     h = data.shape[0]
+    if filters.size < h:
+        raise ValueError(f"PNG: {filters.size} row filters for {h} rows")
     out = np.empty((h, w * ch), dtype=np.uint8)
     rc = lib.png_defilter(_u8p(data), _u8p(filters), h, w, ch, _u8p(out))
     if rc != 0:

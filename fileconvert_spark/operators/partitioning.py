@@ -36,14 +36,13 @@ def plan_buckets(
     key_col: str = "repo",
     salt_cols: tuple[str, ...] = ("path", "commit"),
     weight_col: str = "content",
-    target_bucket_bytes: int = DEFAULT_BUCKET_BYTES,
     stats_sample_fraction: float = 1.0,
 ) -> tuple[DataFrame, dict]:
     """Assign a ``bucket`` column balancing bytes, salting hot keys.
 
     ``n_buckets=None``: sized from the measured total — enough buckets that
     every core has >=1 (and up to 4x cores for stragglers), but never so
-    many that buckets fall under ``target_bucket_bytes`` (tiny chunks hurt
+    many that buckets fall under ``DEFAULT_BUCKET_BYTES`` (tiny chunks hurt
     both codec ratio and per-task fixed costs).
 
     ``stats_sample_fraction < 1``: weigh keys on a seeded Bernoulli row
@@ -101,7 +100,7 @@ def plan_buckets(
 
     if n_buckets is None:
         cores = spark.sparkContext.defaultParallelism
-        by_size = max(1, total // target_bucket_bytes)
+        by_size = max(1, total // DEFAULT_BUCKET_BYTES)
         n_buckets = int(max(cores, min(cores * 4, by_size)))
     if total == 0 or n_keys == 0:
         return df.withColumn(

@@ -74,6 +74,7 @@ from .manifest import (
     check_format_version,
     invalidate_manifest_list,
     manifest_batch,
+    pack_consecutive,
     part_id_of,
     read_all_manifests,
     read_table_meta,
@@ -232,29 +233,14 @@ def _stamp_compacted(out_dir: str) -> None:
 
 def plan_groups(manifests: list[dict], target_bytes: int) -> list[list[int]]:
     """Runs of CONSECUTIVE part ids whose file_bytes pack to about
-    target_bytes (consecutive = cluster_by key locality and zone
-    tightness survive the merge). Parts already >= target stand alone."""
+    target_bytes (manifest.pack_consecutive; consecutive = cluster_by key
+    locality and zone tightness survive the merge). Parts already >=
+    target stand alone."""
     by_pid = {int(m["part_id"]): int(m.get("file_bytes") or 0)
               for m in manifests}
-    groups: list[list[int]] = []
-    cur: list[int] = []
-    cur_b = 0
-    for pid in sorted(by_pid):
-        sz = by_pid[pid]
-        if sz >= target_bytes:
-            if cur:
-                groups.append(cur)
-                cur, cur_b = [], 0
-            groups.append([pid])
-            continue
-        cur.append(pid)
-        cur_b += max(sz, 1)
-        if cur_b >= target_bytes:
-            groups.append(cur)
-            cur, cur_b = [], 0
-    if cur:
-        groups.append(cur)
-    return groups
+    pids = sorted(by_pid)
+    return [[pids[i] for i in g] for g in
+            pack_consecutive([by_pid[p] for p in pids], target_bytes)]
 
 
 def compact_table(spark, out_dir: str, target_bytes: int = 64 << 20) -> dict:

@@ -167,29 +167,14 @@ def invalidate_manifest_list(out_dir: str) -> None:
 
 
 def scan_done_parts(out_dir: str) -> set[int]:
-    """Buckets already encoded (manifest=done AND data file present).
-
-    Fast path: a valid consolidated manifest list answers in one read +
-    one listdir; otherwise every per-part manifest is read.
-    """
-    listed = _load_manifest_list(out_dir)
-    if listed is not None:
-        return {int(m["part_id"]) for m in listed
-                if m.get("status") == "done"}
-    mdir = os.path.join(out_dir, "manifests")
-    done: set[int] = set()
-    for name in fsio.listdir(mdir):
-        if not name.endswith(".json"):
-            continue
-        try:
-            m = json.loads(fsio.read_bytes(os.path.join(mdir, name)))
-        except (json.JSONDecodeError, OSError):
-            continue  # torn write -> re-encode that bucket
-        if m.get("status") == "done" and fsio.exists(
-            os.path.join(out_dir, "data", f"part-{m['part_id']:05d}.parquet")
-        ):
-            done.add(int(m["part_id"]))
-    return done
+    """Buckets already encoded: manifest status done AND data file
+    listed under ``data/``. The manifests come from read_all_manifests
+    (one read when the consolidated list is valid, else the per-part
+    scan, where a torn manifest drops its part)."""
+    data_files = set(fsio.listdir(os.path.join(out_dir, "data")))
+    return {int(m["part_id"]) for m in read_all_manifests(out_dir)
+            if m.get("status") == "done"
+            and f"part-{int(m['part_id']):05d}.parquet" in data_files}
 
 
 def _merge_intervals(ivs: list[list], cap: int = 32) -> list[list]:
@@ -215,11 +200,11 @@ def _merge_intervals(ivs: list[list], cap: int = 32) -> list[list]:
 
 def make_write_kernel(out_dir: str,
                       chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                      part_id_col: str = "bucket",
                       zone_cols: frozenset | None = None,
                       key_index_cols: frozenset | None = None):
     """mapInArrow kernel: encode + write per-bucket parquet + manifest,
-    yielding one manifest summary row per bucket. ``key_index_cols``:
+    yielding one manifest summary row per bucket (the input's ``bucket``
+    column names each row's part). ``key_index_cols``:
     also write per-part key-hash sidecars (plans/keyindex.py) for
     point-lookup pruning on unclustered columns — written BEFORE the
     manifest so a done part always has its sidecars."""
@@ -231,7 +216,7 @@ def make_write_kernel(out_dir: str,
         # sidecar (extra hashes would only weaken pruning, never decode
         # wrongly — but fresh is fresh)
         ki_acc: dict | None = {} if key_index_cols else None
-        encode_fn = make_encode_fn(chunk_rows, part_id_col,
+        encode_fn = make_encode_fn(chunk_rows, "bucket",
                                    cache_ns=out_dir, zone_cols=zone_cols,
                                    key_index_cols=key_index_cols,
                                    key_index_acc=ki_acc)
@@ -539,8 +524,7 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
                     .sortWithinPartitions("bucket", *cluster_by, "_fcs_tie")
                     .drop("_fcs_tie"))
     man_df = shuffled.mapInArrow(
-        make_write_kernel(out_dir, chunk_rows, "bucket",
-                          zone_cols=zone_cols,
+        make_write_kernel(out_dir, chunk_rows, zone_cols=zone_cols,
                           key_index_cols=ki_cols or None),
         MANIFEST_SPARK_SCHEMA,
     )
@@ -862,8 +846,35 @@ def _warn_non_pruning_predicates(meta: dict | None, pcols: list,
                 f"re-encode with key_col={pcol!r}", stacklevel=3)
 
 
+def pack_consecutive(sizes: list, target: int) -> list[list[int]]:
+    """Pack items into runs of consecutive indices of about ``target``
+    bytes, order kept (consecutive parts keep cluster_by key locality
+    and tight zones). An item of ``target`` or more, or of unknown size
+    (None), stands alone; smaller items pack until their run reaches
+    ``target``. Shared by decode task groups and compaction merges."""
+    groups: list[list[int]] = []
+    cur: list[int] = []
+    cur_b = 0
+    for i, sz in enumerate(sizes):
+        if sz is None or sz >= target:
+            if cur:
+                groups.append(cur)
+                cur, cur_b = [], 0
+            groups.append([i])
+            continue
+        cur.append(i)
+        cur_b += max(sz, 1)
+        if cur_b >= target:
+            groups.append(cur)
+            cur, cur_b = [], 0
+    if cur:
+        groups.append(cur)
+    return groups
+
+
 # decode task-group size: consecutive parts pack into tasks of about this
-# many bytes, floored so at least 4 groups per core exist
+# many bytes, floored so at least 4 groups per core exist (see
+# decode_table "Task granularity")
 DECODE_TASK_BYTES = 64 << 20
 
 
@@ -924,20 +935,19 @@ def decode_table(spark, out_dir: str,
     part; a predicate on an unclustered column degrades gracefully to
     the plain filtered decode.
 
-    Task granularity: one task per part pays a fixed per-task cost
-    (scheduling, Python-worker Arrow stream setup, parquet footer read)
-    that dominates the wall when an operator mis-sizes buckets into
-    10^4+ tiny parts (measured r5: decode+verify 32 s at 1024 parts ->
-    90 s at 8192 on the same bytes). The driver therefore greedily
+    Task granularity: every task pays a fixed cost (scheduling, Python
+    worker Arrow stream setup, parquet footer read). On ``local[2]``, a
+    no-op ``mapInArrow`` task over ``spark.range`` costs ~53 ms of a
+    core when the worker has already imported the engine, ~270 ms when
+    it has not, against ~4 ms for a JVM-only range task. So the driver
     packs CONSECUTIVE parts (preserving cluster_by key locality) into
-    task groups of about DECODE_TASK_BYTES, using the per-part file
-    sizes the manifest list already carries, with the target floored so
-    at least 4x defaultParallelism groups exist (never under-parallelize
-    a big decode). The r5 figures were measured while every Python task
-    also re-read each zip directory on sys.path (~0.15-0.20 s of worker
-    CPU per task); the engine now skips that in its workers (see
-    ``fileconvert_spark._skip_worker_zip_rereads``), so the per-task
-    cost they show is an upper bound. The groups are the partitions of
+    task groups of about DECODE_TASK_BYTES with ``pack_consecutive``,
+    using the per-part file sizes the manifest list already carries,
+    with the target floored so at least 4x defaultParallelism groups
+    exist (never under-parallelize a big decode). Measured on ``local[2]`` with the
+    100k-file codefiles corpus, grouped vs one task per part: 1024 parts
+    3.6-4.0 s vs 47.2-48.5 s; 256 parts 1.47-1.53 s vs 9.1-9.4 s; 8
+    parts 0.67-0.86 s vs 0.71-0.84 s. The groups are the partitions of
     ``spark.range(len(groups))``; the kernel looks each id up in the
     group list, so no exchange stage runs before the decode.
 
@@ -1019,28 +1029,18 @@ def decode_table(spark, out_dir: str,
                 ki_types[f.name] = ("string" if tn == "string"
                                     else "int" if tn in _int_t else tn)
 
-    # task-group coalescing (r6, see docstring): pack consecutive parts
-    # into ~target-byte tasks so decode wall tracks bytes, not part
-    # count. A part without a manifest counts as a full target (its own
-    # group) — grouping is a performance layer, never a correctness one.
+    # task groups (see docstring): consecutive parts pack into
+    # ~target-byte tasks so decode wall tracks bytes, not part count. A
+    # part without a manifest has no known size and gets its own group —
+    # grouping is a performance layer, never a correctness one.
     fsizes = []
     for p in files:
         m = manifests.get(part_id_of(p))
-        fsizes.append(DECODE_TASK_BYTES if m is None
-                      else int(m.get("file_bytes") or 0))
+        fsizes.append(None if m is None else int(m.get("file_bytes") or 0))
     par = max(spark.sparkContext.defaultParallelism, 1)
-    target = max(min(DECODE_TASK_BYTES, sum(fsizes) // (4 * par)), 1)
-    groups: list[list[str]] = []
-    cur: list[str] = []
-    cur_b = 0
-    for p, sz in zip(files, fsizes):
-        cur.append(p)
-        cur_b += max(sz, 1)
-        if cur_b >= target:
-            groups.append(cur)
-            cur, cur_b = [], 0
-    if cur:
-        groups.append(cur)
+    known = sum(sz for sz in fsizes if sz is not None)
+    target = max(min(DECODE_TASK_BYTES, known // (4 * par)), 1)
+    groups = [[files[i] for i in g] for g in pack_consecutive(fsizes, target)]
     flt = [("column", "in", sorted(column_order))] \
         if len(column_order) < len(all_names) else None
 

@@ -84,8 +84,38 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _ship_package(spark)
+    return spark
+
+
+def job_session(app_name: str) -> tuple[SparkSession, bool]:
+    """Session for the ``jobs/`` entry points; returns (spark, owned).
+
+    No master is set: under spark-submit the existing driver and its
+    submit-time settings win, and an active session (an embedding caller,
+    pytest) is reused. ``owned`` is True only when this call started the
+    session, so the job stops only what it created. The memory default
+    only takes effect when this process launches the JVM: under plain
+    ``python jobs/<job>.py`` the local-mode driver (which is every
+    executor) would otherwise start with a 1 GB heap and OOM on multi-GB
+    inputs.
+    """
+    owned = SparkSession.getActiveSession() is None
+    spark = (
+        SparkSession.builder.appName(app_name)
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("WARN")
+    _ship_package(spark)
+    return spark, owned
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Make executors able to import fileconvert_spark from any cwd;
+    under spark-submit --py-files the zip is already shipped."""
     try:
         spark.sparkContext.addPyFile(_package_zip())
-    except Exception:
-        pass  # already added in a reused session
-    return spark
+    except Exception:  # noqa: BLE001 - already added in a reused session
+        pass

@@ -29,21 +29,6 @@ import sys
 # under spark-submit --py-files the zip provides the package instead
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
-
-def _ship_package(spark) -> None:
-    """Make executors able to import fileconvert_spark under plain
-    ``python jobs/<job>.py`` from any cwd; under spark-submit --py-files
-    the zip is already shipped and addPyFile is a harmless no-op retry."""
-    from fileconvert_spark.session import _package_zip
-
-    try:
-        spark.sparkContext.addPyFile(_package_zip())
-    except Exception:  # noqa: BLE001 - already added in a reused session
-        pass
-
-
 def main(argv: list[str]) -> int:
     target_mb = 64
     recover = False
@@ -75,16 +60,9 @@ def main(argv: list[str]) -> int:
         print(json.dumps({"recover": outcome}))
         return 0
 
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = (
-        SparkSession.builder.appName("fcs-compact")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    _ship_package(spark)
+    from fileconvert_spark.session import job_session
+
+    spark, owned = job_session("fcs-compact")
 
     from fileconvert_spark.plans.compact import compact_table
 
@@ -94,7 +72,7 @@ def main(argv: list[str]) -> int:
         print(f"compact_job: {e}", file=sys.stderr)
         return 1
     finally:
-        if not preexisting:
+        if owned:
             spark.stop()
     print(json.dumps(res))
     return 0

@@ -37,21 +37,6 @@ import sys
 # under spark-submit --py-files the zip provides the package instead
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
-
-def _ship_package(spark) -> None:
-    """Make executors able to import fileconvert_spark under plain
-    ``python jobs/<job>.py`` from any cwd; under spark-submit --py-files
-    the zip is already shipped and addPyFile is a harmless no-op retry."""
-    from fileconvert_spark.session import _package_zip
-
-    try:
-        spark.sparkContext.addPyFile(_package_zip())
-    except Exception:  # noqa: BLE001 - already added in a reused session
-        pass
-
-
 def _schema_caster(enc_dir: str):
     """Value caster resolved against the encoded table's own column types
     (_schema.json) — NOT try-int-then-float guessing: a string column
@@ -184,20 +169,9 @@ def main(argv: list[str]) -> int:
         print(f"decode_job: {e}", file=sys.stderr)
         return 2
 
-    # Local-mode memory defaults: under plain `python jobs/<job>.py` the
-    # driver JVM (which in local mode IS every executor) would start with
-    # a 1 GB heap and OOM on multi-GB inputs. These configs only take
-    # effect when this process launches the JVM — under spark-submit the
-    # driver already exists and submit-time settings win.
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = (
-        SparkSession.builder.appName("fcs-decode")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    _ship_package(spark)
+    from fileconvert_spark.session import job_session
+
+    spark, owned = job_session("fcs-decode")
 
     from fileconvert_spark.operators.verify import multiset_roundtrip_report
     from fileconvert_spark.plans.manifest import decode_table
@@ -221,7 +195,7 @@ def main(argv: list[str]) -> int:
         print(json.dumps({k: (str(v) if not isinstance(v, (int, bool)) else v)
                           for k, v in report.items()}))
         rc = 0 if report["fingerprint_match"] else 1
-    if not preexisting:  # embedded callers keep their session
+    if owned:  # embedded callers keep their session
         spark.stop()
     return rc
 

@@ -32,21 +32,6 @@ import sys
 # under spark-submit --py-files the zip provides the package instead
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
-
-def _ship_package(spark) -> None:
-    """Make executors able to import fileconvert_spark under plain
-    ``python jobs/<job>.py`` from any cwd; under spark-submit --py-files
-    the zip is already shipped and addPyFile is a harmless no-op retry."""
-    from fileconvert_spark.session import _package_zip
-
-    try:
-        spark.sparkContext.addPyFile(_package_zip())
-    except Exception:  # noqa: BLE001 - already added in a reused session
-        pass
-
-
 def main(argv: list[str]) -> int:
     cluster_by: tuple[str, ...] | None = None
     key_index_cols: tuple[str, ...] | None = None
@@ -81,20 +66,9 @@ def main(argv: list[str]) -> int:
     weight_col = argv[6] if len(argv) > 6 else "content"
     stats_sample_fraction = float(argv[7]) if len(argv) > 7 else 1.0
 
-    # Local-mode memory defaults: under plain `python jobs/<job>.py` the
-    # driver JVM (which in local mode IS every executor) would start with
-    # a 1 GB heap and OOM on multi-GB inputs. These configs only take
-    # effect when this process launches the JVM — under spark-submit the
-    # driver already exists and submit-time settings win.
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = (
-        SparkSession.builder.appName("fcs-encode")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    _ship_package(spark)
+    from fileconvert_spark.session import job_session
+
+    spark, owned = job_session("fcs-encode")
 
     from fileconvert_spark.plans.manifest import encode_table
 
@@ -113,7 +87,7 @@ def main(argv: list[str]) -> int:
                            cluster_by=cluster_by,
                            key_index_cols=key_index_cols)
     print(json.dumps(summary))
-    if not preexisting:  # embedded callers keep their session
+    if owned:  # embedded callers keep their session
         spark.stop()
     return 0
 

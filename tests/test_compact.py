@@ -19,6 +19,7 @@ from fileconvert_spark.plans.compact import (
 from fileconvert_spark.plans.manifest import (
     decode_table,
     encode_table,
+    pack_consecutive,
     read_all_manifests,
 )
 
@@ -56,6 +57,16 @@ def test_plan_groups_packs_consecutive():
     assert flat == sorted(flat)
     assert [10] in groups
     assert all(len(g) <= 4 for g in groups)
+
+
+def test_pack_consecutive_order_big_and_unknown_parts():
+    """The one packer behind decode task groups and compaction merges:
+    order kept, a part >= target alone, and a part of unknown size (no
+    manifest) in its own group rather than closing the run before it."""
+    sizes = [100, 100, 500, 100, None, 100, 100, 100, 100]
+    assert pack_consecutive(sizes, 250) == [
+        [0, 1], [2], [3], [4], [5, 6, 7], [8]]
+    assert pack_consecutive([], 250) == []
 
 
 def test_compact_roundtrip_and_part_count(spark, encoded_small_parts):

@@ -482,6 +482,36 @@ _CRASH_CASES = {
     "slab_gram_hashes_wrong_total":
         "native.slab_gram_hashes(np.arange(100, dtype=np.uint64),"
         " np.array([100]), 3, True, 1)",
+    # SIGSEGV: string lengths walk far past the byte buffer
+    "fsst_encode_lengths_past_buffer":
+        "native.fsst_encode(np.zeros(4, np.uint8), np.array([1 << 40]),"
+        " (np.zeros(1 << 16, np.uint16), np.zeros(256, np.uint16), None),"
+        " 12, 1024)",
+    # returned garbage — read past a 16-entry LUT
+    "fsst_encode_short_lut":
+        "native.fsst_encode(np.full(64, 255, np.uint8), np.array([64]),"
+        " (np.zeros(16, np.uint16), np.zeros(256, np.uint16), None),"
+        " 12, 1024)",
+    # returned rows read 8 MiB past an 8-byte buffer
+    "png_defilter_rows_past_data":
+        "native.png_defilter(np.zeros(8, np.uint8), np.zeros(8, np.uint8),"
+        " 1 << 20, 1)",
+    # SIGSEGV: wrote 4000 coefficient blocks into a 1-block array
+    "jpeg_entropy_decode_coefs_too_small":
+        "from fileconvert_spark.operators.jpeg import _Huff\n"
+        "t = _Huff([1] + [0] * 15, b'\\x00')\n"
+        "native.jpeg_entropy_decode(bytes(1000), 4000, [0], [t], [t],"
+        " np.zeros((1, 64), np.int32), 0)",
+    # returned a block — decoded code '1' from a value the table lacks
+    "jpeg_entropy_decode_codes_past_values":
+        "from fileconvert_spark.operators.jpeg import _Huff\n"
+        "t = _Huff([2] + [0] * 15, b'\\x00')\n"
+        "native.jpeg_entropy_decode(b'\\xff' * 8, 1, [0], [t], [t],"
+        " np.zeros((1, 64), np.int32), 0)",
+    # returned counts — words silently credited to the wrong doc
+    "slab_word_hashes_unsorted_doc_starts":
+        "native.slab_word_hashes(np.frombuffer(b'a b c', np.uint8),"
+        " np.array([4, 0]))",
 }
 
 
@@ -496,11 +526,12 @@ def _run_child(code: str):
 @requires_native
 @pytest.mark.parametrize("case", sorted(_CRASH_CASES))
 def test_native_bad_arguments_raise_value_error(case):
+    body = "".join(f"    {line}\n"
+                   for line in _CRASH_CASES[case].split("\n"))
     r = _run_child(
         "import numpy as np\n"
         "from fileconvert_spark import native\n"
-        "try:\n"
-        f"    {_CRASH_CASES[case]}\n"
+        f"try:\n{body}"
         "except ValueError as e:\n"
         "    print('ValueError:', e)\n")
     assert r.returncode == 0, (r.returncode, r.stderr[-2000:])
