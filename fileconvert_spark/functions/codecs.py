@@ -17,9 +17,11 @@ output must be <= the reference's Parquet/Snappy size.
 
 No Spark imports; every function operates on a single null-free chunk
 (validity handled by the wrapper in operators/encode.py). No per-row Python
-in any hot path — Arrow C++ (dictionary_encode / take / split_pattern /
-binary_join) and NumPy do the work; FSST's token scan is bounded by
-compressed size (see functions/fsst.py).
+in any hot path — Arrow C++ (dictionary_encode / split_pattern) and NumPy
+do the work; FSST's token scan is bounded by compressed size (see
+functions/fsst.py). Decode of the dictionary codecs is one gather-join
+(_gather_strings): a C kernel when available, Arrow take / binary_join
+otherwise.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from .. import native
 from . import fsst, huffman
 from .bitpack import (
     U32,
@@ -255,10 +258,41 @@ def enc_dict_str(arr: pa.Array, de: pa.Array | None = None,
     return payload, dict_blob, {"k": k}
 
 
+def _gather_strings(uniques: pa.Array, idx: np.ndarray,
+                    counts: np.ndarray | None = None,
+                    sep: str = "") -> pa.Array:
+    """The decode gather of every dictionary codec: row i is
+    ``sep.join(uniques[idx[j]])`` over its run of ``counts[i]`` indices,
+    or ``uniques[idx[i]]`` when ``counts`` is None. The C kernel
+    (native.str_gather_join) writes each output string once, straight
+    from the dictionary. Without it (FCS_NO_NATIVE=1, no toolchain) Arrow
+    ``take`` (+ ``binary_join``) gives the same array. Both raise on an
+    index outside the dictionary."""
+    k = len(uniques)
+    offsets = np.frombuffer(uniques.buffers()[1], dtype=np.int32,
+                            count=k + 1, offset=uniques.offset * 4) \
+        if k else np.zeros(1, dtype=np.int32)
+    data = uniques.buffers()[2] if k else None
+    data = np.frombuffer(data, dtype=np.uint8) if data is not None else \
+        np.empty(0, dtype=np.uint8)
+    got = native.str_gather_join(offsets, data, idx, counts, sep.encode())
+    if got is not None:
+        out_offs, out_data = got
+        return pa.StringArray.from_buffers(
+            len(out_offs) - 1, pa.py_buffer(out_offs),
+            pa.py_buffer(out_data))
+    values = pc.take(uniques, pa.array(np.asarray(idx).astype(np.int64)))
+    if counts is None:
+        return values
+    offs = np.zeros(len(counts) + 1, dtype=np.int32)
+    np.cumsum(counts, out=offs[1:])
+    lst = pa.ListArray.from_arrays(pa.array(offs, type=pa.int32()), values)
+    return pc.binary_join(lst, sep)
+
+
 def dec_dict_str(payload, dict_blob, meta, n):
     idx, _ = unpack_uints_auto(memoryview(payload))
-    uniques = _flagged_blob_decode(dict_blob)
-    return pc.take(uniques, pa.array(idx.astype(np.int64)))
+    return _gather_strings(_flagged_blob_decode(dict_blob), idx)
 
 
 def enc_rle_str(arr: pa.Array):
@@ -280,7 +314,7 @@ def dec_rle_str(payload, dict_blob, meta, n):
     run_values = _flagged_blob_decode(dict_blob)
     idx = np.repeat(np.arange(len(run_lengths), dtype=np.int64),
                     run_lengths.astype(np.int64))
-    return pc.take(run_values, pa.array(idx))
+    return _gather_strings(run_values, idx)
 
 
 def enc_fsst_str(arr: pa.Array, table: list[bytes] | None = None):
@@ -388,12 +422,12 @@ def dec_linedict_str(payload, dict_blob, meta, n):
     buf = memoryview(payload)
     counts, consumed = unpack_uints_auto(buf)
     idx, _ = unpack_uints_auto(buf[consumed:])
-    uniques = _flagged_blob_decode(dict_blob)
-    values = pc.take(uniques, pa.array(idx.astype(np.int64)))
-    offs = np.zeros(n + 1, dtype=np.int32)
-    offs[1:] = np.cumsum(counts).astype(np.int32)
-    lst = pa.ListArray.from_arrays(pa.array(offs, type=pa.int32()), values)
-    return pc.binary_join(lst, meta.get("sep", "\n"))
+    if len(idx) != meta["nl"]:
+        raise ValueError(f"{len(idx)} segment indices, meta says "
+                         f"{meta['nl']}")
+    native.check_runs(counts, len(idx), "linedict: segment counts")
+    return _gather_strings(_flagged_blob_decode(dict_blob), idx, counts,
+                           meta.get("sep", "\n"))
 
 
 # --------------------------------------------------------------------------

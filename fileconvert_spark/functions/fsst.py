@@ -499,13 +499,25 @@ def _escape_mask(enc: np.ndarray) -> np.ndarray:
 
 def decode_buffer(enc: bytes, enc_lengths: np.ndarray,
                   table: list[bytes]) -> tuple[bytes, np.ndarray]:
-    """Decode; returns (decoded bytes, decoded per-string lengths)."""
+    """Decode; returns (decoded bytes, decoded per-string lengths).
+
+    The NumPy path; fsst_decode_array runs the C kernel
+    (native.fsst_decode) when it is available. String k gets the tokens
+    that START inside its ``enc_lengths[k]`` bytes. Raises ValueError,
+    as the kernel does, when a length is negative, the lengths do not
+    sum to ``len(enc)``, or the stream ends in an ESCAPE."""
+    from .. import native
+
     m = len(enc)
     n_str = len(enc_lengths)
+    el = native.check_runs(enc_lengths, m, "fsst_decode: enc_lengths")
     if m == 0:
         return b"", np.zeros(n_str, dtype=np.int64)
     arr = np.frombuffer(enc, dtype=np.uint8)
     esc = _escape_mask(arr)
+    if esc[-1]:
+        raise ValueError("fsst_decode: stream ends in an ESCAPE with no "
+                         "literal byte")
     # token starts = everything that is not a marker-consumed literal
     tok_start = np.ones(m, dtype=bool)
     tok_start[1:] = ~esc[:-1]
@@ -536,7 +548,7 @@ def decode_buffer(enc: bytes, enc_lengths: np.ndarray,
     # per-string decoded lengths from the per-token cumulative output ends:
     # string k covers tokens [searchsorted(order, enc_offs[k]), ...)
     enc_offs = np.zeros(n_str + 1, dtype=np.int64)
-    np.cumsum(enc_lengths, out=enc_offs[1:])
+    np.cumsum(el, out=enc_offs[1:])
     bound_tok = np.searchsorted(order, enc_offs)
     cum = np.concatenate([[0], out_end])[bound_tok]
     dec_lengths = np.diff(cum)
@@ -585,19 +597,30 @@ def fsst_payload_header(payload: memoryview) -> tuple[int, int]:
 
 
 def fsst_decode_array(payload: bytes | memoryview, table_blob: bytes) -> pa.Array:
+    """Inverse of fsst_encode_array: the C token walk
+    (native.fsst_decode) when the library is available, else
+    decode_buffer; both give the same array or raise the same
+    ValueError."""
+    from .. import native
     from .bitpack import unpack_uints_framed
 
     payload = memoryview(payload)
     n = _U32.unpack_from(payload, 0)[0]
     enc_lengths, consumed = unpack_uints_framed(payload[4:])
-    enc = bytes(payload[4 + consumed :])
+    if len(enc_lengths) != n:
+        raise ValueError(f"fsst_decode: {len(enc_lengths)} lengths for "
+                         f"{n} strings")
+    enc = payload[4 + consumed:]
     table = deserialize_table(table_blob)
-    decoded, dec_lengths = decode_buffer(enc, enc_lengths.astype(np.int64), table)
-    offsets = np.zeros(n + 1, dtype=np.int32)
-    np.cumsum(dec_lengths, out=offsets[1:])
+    nat = native.fsst_decode(enc, enc_lengths, table)
+    if nat is not None:
+        offsets, decoded = nat
+    else:
+        decoded, dec_lengths = decode_buffer(bytes(enc), enc_lengths, table)
+        offsets = np.zeros(n + 1, dtype=np.int32)
+        np.cumsum(dec_lengths, out=offsets[1:])
     return pa.StringArray.from_buffers(
-        n, pa.py_buffer(offsets.tobytes()), pa.py_buffer(decoded)
-    )
+        n, pa.py_buffer(offsets), pa.py_buffer(decoded))
 
 
 def estimate_ratio(arr: pa.Array, sample_rows: int = 64,

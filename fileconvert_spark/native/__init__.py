@@ -172,6 +172,24 @@ def load():
         c_int64, c_int64,                       # hash_bits, walk_seg
         POINTER(c_uint8), POINTER(c_int64),     # out (2n), enc_lens
     ]
+    from ctypes import c_int32
+
+    lib.fsst_decode.restype = c_int64
+    lib.fsst_decode.argtypes = [
+        POINTER(c_uint8), c_int64,              # enc, m
+        POINTER(c_int64), c_int64,              # enc_lens, n_str
+        POINTER(c_uint8), POINTER(c_int64),     # pool (+8 pad), sym_off
+        POINTER(c_int32), POINTER(c_uint8),     # out_offs, out (nullable)
+    ]
+    lib.str_gather_join.restype = c_int64
+    lib.str_gather_join.argtypes = [
+        POINTER(c_int32), POINTER(c_uint8),     # dict offsets, dict data
+        c_int64,                                # data_len
+        POINTER(c_int64), c_int64,              # idx, n_idx
+        POINTER(c_int64), c_int64,              # counts (nullable), n_rows
+        POINTER(c_uint8), c_int64,              # sep, sep_len
+        POINTER(c_int32), POINTER(c_uint8),     # out_offs, out (nullable)
+    ]
     lib.png_defilter.restype = c_int64
     lib.png_defilter.argtypes = [
         POINTER(c_uint8), POINTER(c_uint8),     # data, filters
@@ -202,7 +220,7 @@ def load():
         c_int64, c_int64,                       # nd, w
         POINTER(c_uint64), POINTER(c_int64),    # out_fps, out_nfp
     ]
-    from ctypes import POINTER as _P, c_int32
+    from ctypes import POINTER as _P
 
     lib.jpeg_entropy_decode.restype = c_int64
     lib.jpeg_entropy_decode.argtypes = [
@@ -345,6 +363,114 @@ def fsst_encode(arr, lengths, tables, hash_bits: int, walk_seg: int):
         sym_p, lc_p, hash_bits, walk_seg,
         _u8p(out), enc_lens.ctypes.data_as(p_i64))
     return out[:total].tobytes(), enc_lens[:len(lengths)].copy()
+
+
+_INT32_MAX = (1 << 31) - 1      # an Arrow `string` array's byte limit
+
+
+def _as_int64(a):
+    """``a`` as a contiguous int64 array. A uint64 array is viewed, not
+    copied: a value past 2**63 turns negative, which every caller's
+    bound check then rejects."""
+    import numpy as np
+
+    a = np.ascontiguousarray(a)
+    return a.view(np.int64) if a.dtype == np.uint64 else \
+        a.astype(np.int64, copy=False)
+
+
+def check_runs(counts, total: int, what: str):
+    """``counts`` as contiguous int64; raises ValueError unless they
+    split exactly ``total`` items into runs. Shared with the NumPy
+    decode paths, so both paths reject the same inputs."""
+    counts = _as_int64(counts)
+    if counts.size and (int(counts.min()) < 0 or int(counts.max()) > total):
+        raise ValueError(f"{what}: a count is negative or exceeds {total}")
+    if int(counts.sum()) != total:
+        raise ValueError(
+            f"{what}: counts sum to {int(counts.sum())}, not {total}")
+    return counts
+
+
+def fsst_decode(enc, enc_lengths, table):
+    """C FSST decode of an encode_buffer stream; returns the decoded
+    Arrow string array's (int32 offsets, uint8 data), or None when the
+    native library is unavailable. Identical to fsst.decode_buffer
+    (tests/test_native.py). Raises ValueError, as decode_buffer does, on
+    lengths that are negative or do not sum to the stream's size and on
+    a stream ending in an ESCAPE; also on output past 2**31 - 1 bytes."""
+    import numpy as np
+
+    lib = load()
+    if lib is None:
+        return None
+    enc = np.frombuffer(enc, dtype=np.uint8)
+    el = check_runs(enc_lengths, enc.size, "fsst_decode: enc_lengths")
+    if len(table) > 255:
+        raise ValueError(f"fsst_decode: {len(table)} symbols, at most 255")
+    sym_off = np.zeros(257, dtype=np.int64)
+    np.cumsum([len(s) for s in table] + [0] * (256 - len(table)),
+              out=sym_off[1:])
+    pool = np.zeros(int(sym_off[-1]) + 8, dtype=np.uint8)  # 8-byte loads
+    pool[:sym_off[-1]] = np.frombuffer(b"".join(table), dtype=np.uint8)
+    p_i64 = ctypes.POINTER(ctypes.c_int64)
+    args = (_u8p(enc), enc.size, el.ctypes.data_as(p_i64), el.size,
+            _u8p(pool), sym_off.ctypes.data_as(p_i64))
+    total = lib.fsst_decode(*args, None, None)
+    if total < 0:
+        raise ValueError("fsst_decode: stream ends in an ESCAPE with no "
+                         "literal byte")
+    if total > _INT32_MAX:
+        raise ValueError(f"fsst_decode: output past {_INT32_MAX} bytes")
+    offs = np.empty(el.size + 1, dtype=np.int32)
+    out = np.empty(total + 8, dtype=np.uint8)              # 8-byte stores
+    lib.fsst_decode(*args, offs.ctypes.data_as(ctypes.POINTER(ctypes.c_int32)),
+                    _u8p(out))
+    return offs, out[:total]
+
+
+def str_gather_join(offsets, data, idx, counts=None, sep: bytes = b""):
+    """C dictionary gather-join; returns the (int32 offsets, uint8 data)
+    of the Arrow string array whose row i is ``sep.join(dict[idx[j]])``
+    over its run of ``counts[i]`` indices (one index per row when
+    ``counts`` is None), or None when the native library is unavailable.
+    The dictionary is Arrow's layout: int32 ``offsets`` (k + 1 entries)
+    into uint8 ``data``. Raises ValueError on an index outside 0..k-1,
+    counts that are negative or do not sum to len(idx), and an output
+    past 2**31 - 1 bytes, which it refuses before allocating."""
+    import numpy as np
+
+    lib = load()
+    if lib is None:
+        return None
+    offsets = np.ascontiguousarray(offsets, dtype=np.int32)
+    data = np.ascontiguousarray(data, dtype=np.uint8)
+    k = offsets.size - 1
+    if (k < 0 or int(offsets[0]) < 0 or int(offsets[-1]) > data.size
+            or bool((np.diff(offsets) < 0).any())):
+        raise ValueError("str_gather_join: dictionary offsets are not "
+                         f"non-decreasing within {data.size} data bytes")
+    idx = _as_int64(idx)
+    if idx.size and int(idx.view(np.uint64).max()) >= k:
+        raise ValueError(f"str_gather_join: an index is outside 0..{k - 1}")
+    if counts is not None:
+        counts = check_runs(counts, idx.size, "str_gather_join")
+    n_rows = idx.size if counts is None else counts.size
+    sep_a = np.frombuffer(sep, dtype=np.uint8)
+    p_i64 = ctypes.POINTER(ctypes.c_int64)
+    p_i32 = ctypes.POINTER(ctypes.c_int32)
+    args = (offsets.ctypes.data_as(p_i32), _u8p(data), data.size,
+            idx.ctypes.data_as(p_i64), idx.size,
+            None if counts is None else counts.ctypes.data_as(p_i64),
+            n_rows, _u8p(sep_a), sep_a.size)
+    total = lib.str_gather_join(*args, None, None)
+    if total > _INT32_MAX:
+        raise ValueError(
+            f"str_gather_join: output past {_INT32_MAX} bytes")
+    out_offs = np.empty(n_rows + 1, dtype=np.int32)
+    out = np.empty(total + 32, dtype=np.uint8)     # 32-byte block stores
+    lib.str_gather_join(*args, out_offs.ctypes.data_as(p_i32), _u8p(out))
+    return out_offs, out[:total]
 
 
 def winnow_select(vals, counts, w: int):

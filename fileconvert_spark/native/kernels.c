@@ -5,7 +5,9 @@
  * in tests/test_native.py — the engine works without a toolchain, it is
  * just slower. Only sequential inner loops that NumPy cannot vectorize
  * live here (greedy FSST parse: each token's start depends on the previous
- * token's length; PNG defilter: each pixel depends on the previous pixel).
+ * token's length; PNG defilter: each pixel depends on the previous pixel),
+ * plus the decode gather-join, which writes each output string once where
+ * Arrow take + binary_join copy it twice.
  *
  * Plain C99 + stdint, no libc beyond memcpy/memset, little-endian host
  * (the same assumption functions/fsst.py makes and guards at import).
@@ -100,6 +102,151 @@ int64_t fsst_encode(const uint8_t *buf, int64_t n,
         }
         enc_lens[k] = o - o_str;
         start = send;
+    }
+    return o;
+}
+
+/* FSST decode of n_str concatenated strings into an Arrow `string`
+ * array: one sequential token walk (code byte -> symbol, ESCAPE + byte ->
+ * that byte). String k owns the tokens that START inside its enc_lens[k]
+ * bytes, the attribution of functions/fsst.py decode_buffer, so both
+ * paths give identical output on any stream.
+ *
+ * Two calls. With out NULL, a read-only size pass returns the decoded
+ * byte count (stopping once it passes INT32_MAX), or -1 when the stream
+ * ends in an ESCAPE with no literal. Then the caller allocates and calls
+ * again to write out_offs[n_str + 1] and the bytes.
+ *
+ * Trusts (native.fsst_decode checks): sym_off holds 257 non-decreasing
+ * offsets into pool, and pool is readable 8 bytes past sym_off[256];
+ * out is writable 8 bytes past the size-pass total, which fits int32;
+ * enc_lens are >= 0 and sum to m; the stream has no trailing ESCAPE.
+ * A symbol of <= 8 bytes is copied as one 8-byte load/store.
+ */
+int64_t fsst_decode(const uint8_t *enc, int64_t m,
+                    const int64_t *enc_lens, int64_t n_str,
+                    const uint8_t *pool, const int64_t *sym_off,
+                    int32_t *out_offs, uint8_t *out)
+{
+    if (!out) {
+        int64_t total = 0;
+        for (int64_t pos = 0; pos < m && total <= INT32_MAX; ) {
+            const unsigned c = enc[pos];
+            if (c == FSST_ESCAPE) {
+                if (pos + 1 >= m)
+                    return -1;
+                total += 1;
+                pos += 2;
+            } else {
+                total += sym_off[c + 1] - sym_off[c];
+                pos += 1;
+            }
+        }
+        return total;
+    }
+    int64_t pos = 0, o = 0, end = 0;
+    out_offs[0] = 0;
+    for (int64_t k = 0; k < n_str; k++) {
+        end += enc_lens[k];
+        while (pos < end) {
+            const unsigned c = enc[pos];
+            if (c == FSST_ESCAPE) {
+                out[o++] = enc[pos + 1];
+                pos += 2;
+                continue;
+            }
+            const int64_t a = sym_off[c], len = sym_off[c + 1] - a;
+            if (len <= 8) {
+                uint64_t w8;
+                memcpy(&w8, pool + a, 8);
+                memcpy(out + o, &w8, 8);
+            } else {
+                memcpy(out + o, pool + a, (size_t)len);
+            }
+            o += len;
+            pos += 1;
+        }
+        out_offs[k + 1] = (int32_t)o;
+    }
+    return o;
+}
+
+/* Copy dict value [a, a + len) to out. A value of <= 32 bytes with 32
+ * readable bytes behind its start goes as one fixed-size 32-byte copy,
+ * which the compiler inlines, so most dictionary lines cost no libc call;
+ * out must be writable 32 bytes past the value. */
+static inline void copy_value(uint8_t *out, const uint8_t *data,
+                              int64_t data_len, int64_t a, int64_t len)
+{
+    if (len <= 32 && a + 32 <= data_len) {
+        uint8_t blk[32];
+        memcpy(blk, data + a, 32);
+        memcpy(out, blk, 32);
+    } else {
+        memcpy(out, data + a, (size_t)len);
+    }
+}
+
+/* Dictionary gather-join into an Arrow `string` array: row i is
+ * sep.join(dict[idx[j]]) over its run of counts[i] consecutive indices
+ * (one index per row when counts is NULL, so n_rows == n_idx). dict is
+ * the Arrow layout: k + 1 offsets into data_len bytes of data.
+ *
+ * Two calls. With out_data NULL, a read-only size pass returns the
+ * output byte count (stopping once it passes INT32_MAX). Then the caller
+ * allocates and calls again to write out_offs[n_rows + 1] and the bytes.
+ *
+ * Trusts (native.str_gather_join checks): 0 <= idx[j] < k; doffs is
+ * non-decreasing within data; counts are >= 0 and sum to n_idx; the
+ * size-pass total fits int32; out_data is writable 32 bytes past it.
+ */
+int64_t str_gather_join(const int32_t *doffs, const uint8_t *data,
+                        int64_t data_len,
+                        const int64_t *idx, int64_t n_idx,
+                        const int64_t *counts, int64_t n_rows,
+                        const uint8_t *sep, int64_t sep_len,
+                        int32_t *out_offs, uint8_t *out_data)
+{
+    if (!out_data) {
+        int64_t total = 0, joins = 0;
+        if (counts)
+            for (int64_t i = 0; i < n_rows; i++)
+                joins += counts[i] > 0 ? counts[i] - 1 : 0;
+        if (joins > INT32_MAX)
+            return joins;
+        total = joins * sep_len;
+        for (int64_t j = 0; j < n_idx && total <= INT32_MAX; j++)
+            total += doffs[idx[j] + 1] - doffs[idx[j]];
+        return total;
+    }
+    int64_t o = 0, j = 0;
+    out_offs[0] = 0;
+    if (!counts) {          /* one value per row: a tighter loop */
+        for (int64_t i = 0; i < n_rows; i++) {
+            const int64_t a = doffs[idx[i]];
+            const int64_t len = doffs[idx[i] + 1] - a;
+            copy_value(out_data + o, data, data_len, a, len);
+            o += len;
+            out_offs[i + 1] = (int32_t)o;
+        }
+        return o;
+    }
+    for (int64_t i = 0; i < n_rows; i++) {
+        const int64_t jstart = j, jend = j + counts[i];
+        for (; j < jend; j++) {
+            if (sep_len && j != jstart) {
+                if (sep_len == 1)
+                    out_data[o] = sep[0];
+                else
+                    memcpy(out_data + o, sep, (size_t)sep_len);
+                o += sep_len;
+            }
+            const int64_t a = doffs[idx[j]];
+            const int64_t len = doffs[idx[j] + 1] - a;
+            copy_value(out_data + o, data, data_len, a, len);
+            o += len;
+        }
+        out_offs[i + 1] = (int32_t)o;
     }
     return o;
 }

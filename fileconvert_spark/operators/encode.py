@@ -738,7 +738,7 @@ def resolve_page_dict(page_blob: bytes | None, map_blob: bytes,
         raise DecodeError(
             f"decode{where}: dictionary-page map references value "
             f"{int(local_map.max())} past page size {len(vals)}")
-    return vals.take(pa.array(local_map.astype(np.int64)))
+    return codecs._gather_strings(vals, local_map)
 
 
 def consolidate_part_dicts(rows: list[dict], part_id: int) -> list[dict]:

@@ -947,9 +947,19 @@ def decode_table(spark, out_dir: str,
     exist (never under-parallelize a big decode). Measured on ``local[2]`` with the
     100k-file codefiles corpus, grouped vs one task per part: 1024 parts
     3.6-4.0 s vs 47.2-48.5 s; 256 parts 1.47-1.53 s vs 9.1-9.4 s; 8
-    parts 0.67-0.86 s vs 0.71-0.84 s. The groups are the partitions of
-    ``spark.range(len(groups))``; the kernel looks each id up in the
-    group list, so no exchange stage runs before the decode.
+    parts 0.67-0.86 s vs 0.71-0.84 s. Where a no-op task's time goes:
+    its Python worker waits 39-44 ms for the 1-row input batch over TCP
+    (Linux's delayed ACK), then idles ~45 ms in ``read_int`` until the
+    JVM sends the next task. ``spark.python.unix.domain.socket.enabled``
+    cuts that wait to ~0.5 ms (an 8-task no-op job 0.43 -> 0.30 s) but
+    did not move the codefiles scan (parent 178.5/168.9/174.1 vs
+    172.1/159.5/161.3 MB/s with it, 3 pairs), so it is not set. With the
+    C gather-join and FSST decode kernels, a 2x defaultParallelism floor
+    scanned at 261/255 MB/s against 257/239 MB/s with 4x (2 pairs, seed
+    411), within the run-to-run spread, so the floor stays. The groups
+    are the partitions of ``spark.range(len(groups))``; the kernel looks
+    each id up in the group list, so no exchange stage runs before the
+    decode.
 
     The table's _meta.json, _schema.json and manifest list are each
     read once per call.

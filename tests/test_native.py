@@ -81,6 +81,207 @@ def test_fsst_native_empty_table_and_boundaries():
         assert dec == buf
 
 
+def _no_native(fn, *args):
+    """``fn(*args)`` with the compiled kernels switched off."""
+    os.environ["FCS_NO_NATIVE"] = "1"
+    try:
+        return fn(*args)
+    finally:
+        del os.environ["FCS_NO_NATIVE"]
+
+
+_DECODE = settings(max_examples=60, deadline=None, database=None)
+
+
+@requires_native
+@_DECODE
+@given(st.lists(st.text(alphabet="ab\n/é中🎉", max_size=6), max_size=12),
+       st.lists(st.lists(st.integers(min_value=0), max_size=5), max_size=20),
+       st.sampled_from(["\n", "/", ""]),
+       st.integers(min_value=0, max_value=3),
+       st.booleans())
+def test_str_gather_join_matches_take_join(values, rows, sep, skip, joined):
+    """Property: the C gather-join equals Arrow take (+ binary_join) on
+    empty and multi-byte values, rows of zero segments, every separator,
+    a sliced dictionary (non-zero Arrow offset) and an empty dictionary
+    with all-empty rows."""
+    import pyarrow as pa
+
+    from fileconvert_spark.functions import codecs
+
+    uniques = pa.array(["pre"] * skip + values, type=pa.string()).slice(skip)
+    k = len(values)
+    rows = [[i % k for i in r] if k else [] for r in rows]
+    idx = np.array([i for r in rows for i in r], dtype=np.uint64)
+    if joined:
+        counts = np.array([len(r) for r in rows], dtype=np.uint64)
+        want = [sep.join(values[i] for i in r) for r in rows]
+    else:
+        counts = None
+        want = [values[i] for i in idx]
+    got = codecs._gather_strings(uniques, idx, counts, sep)
+    ref = _no_native(codecs._gather_strings, uniques, idx, counts, sep)
+    assert got.type == ref.type == pa.string()
+    assert got.equals(ref)
+    assert got.to_pylist() == want
+
+
+def _fsst_cases(strings, n_symbols):
+    """(enc, enc_lengths, table) from encode_buffer with a table of
+    exactly ``n_symbols`` symbols cut from the data (0 = escapes only)."""
+    from fileconvert_spark.functions import fsst
+
+    buf = b"".join(strings)
+    lengths = np.array([len(s) for s in strings], dtype=np.int64)
+    pool = buf + bytes(range(256)) * 8
+    table = []
+    seen = set()
+    for i in range(len(pool)):
+        s = pool[i:i + 1 + i % 8]
+        if len(table) == n_symbols:
+            break
+        if s not in seen:
+            seen.add(s)
+            table.append(s)
+    enc, el = fsst.encode_buffer(buf, lengths, table)
+    return enc, el, table
+
+
+@requires_native
+@_DECODE
+@given(st.lists(st.binary(max_size=40), max_size=25),
+       st.sampled_from([0, 1, 17, 255]))
+def test_fsst_decode_kernel_matches_decode_buffer(strings, n_symbols):
+    """Property: the C token walk equals decode_buffer on encode_buffer
+    output with escapes, empty strings and tables of 0 and 255 symbols,
+    and both give back the input."""
+    from fileconvert_spark.functions import fsst
+
+    enc, el, table = _fsst_cases(strings, n_symbols)
+    assert len(table) == n_symbols
+    offs, data = native.fsst_decode(enc, el, table)
+    dec, dec_lens = fsst.decode_buffer(enc, el, table)
+    assert data.tobytes() == dec == b"".join(strings)
+    assert np.array_equal(np.diff(offs), dec_lens)
+
+
+@requires_native
+@_DECODE
+@given(st.binary(max_size=60), st.lists(st.integers(min_value=0,
+                                                     max_value=60),
+                                         max_size=8),
+       st.integers(min_value=0, max_value=255))
+def test_fsst_decode_kernel_matches_on_any_stream(enc, cuts, n_symbols):
+    """Property: on ANY byte stream and any split of it into strings
+    (escape pairs straddling a split included) the two decoders
+    attribute tokens to the same strings, and both raise ValueError on
+    a stream ending in an ESCAPE."""
+    from fileconvert_spark.functions import fsst
+
+    table = [bytes([i, i]) * (1 + i % 4) for i in range(n_symbols)]
+    bounds = sorted({min(c, len(enc)) for c in cuts} | {0, len(enc)})
+    el = np.diff(bounds).astype(np.int64) if len(bounds) > 1 else \
+        np.zeros(1, dtype=np.int64)
+    try:
+        dec, dec_lens = fsst.decode_buffer(enc, el, table)
+    except ValueError as e:
+        assert "ESCAPE" in str(e)
+        with pytest.raises(ValueError, match="ESCAPE"):
+            native.fsst_decode(enc, el, table)
+        return
+    offs, data = native.fsst_decode(enc, el, table)
+    assert data.tobytes() == dec
+    assert np.array_equal(np.diff(offs), dec_lens)
+
+
+@pytest.mark.parametrize("enc,lengths,match", [
+    (b"\x00\x00\x00", [1, 1], "sum to 2, not 3"),       # short: drops bytes
+    (b"\x00\x00\x00", [2, 2], "sum to 4, not 3"),       # long
+    (b"\x00\x00\x00", [4, -1], "negative"),
+    (b"\x00\xff", [2], "ESCAPE"),                       # trailing escape
+    (b"\xff\xff\xff", [3], "ESCAPE"),
+])
+def test_fsst_decode_rejects_malformed_streams(enc, lengths, match):
+    """Both decoders raise the same ValueError on lengths that do not
+    cover the stream exactly and on a trailing ESCAPE (the NumPy path
+    used to drop the last string's bytes, accept a long sum, and raise
+    IndexError on the escape)."""
+    from fileconvert_spark.functions import fsst
+
+    el = np.array(lengths, dtype=np.int64)
+    with pytest.raises(ValueError, match=match):
+        fsst.decode_buffer(enc, el, [b"abc"])
+    if native.load() is not None:
+        with pytest.raises(ValueError, match=match):
+            native.fsst_decode(enc, el, [b"abc"])
+
+
+@pytest.mark.parametrize("no_native", [False, True])
+def test_linedict_counts_must_cover_segments(monkeypatch, no_native):
+    """Per-row segment counts that do not sum to the segment indices
+    (and meta ``nl``) raise DecodeError on both paths; they used to
+    decode 'f' as '' silently."""
+    import json
+
+    import pyarrow as pa
+
+    from fileconvert_spark.functions import codecs
+    from fileconvert_spark.functions.bitpack import pack_uints_auto
+    from fileconvert_spark.operators.encode import DecodeError, decode_column
+
+    if no_native:
+        monkeypatch.setenv("FCS_NO_NATIVE", "1")
+    blob = codecs._flagged_blob_encode(pa.array(list("abcdef")))
+    idx = pack_uints_auto(np.arange(6, dtype=np.uint64))
+    meta = json.dumps({"k": 6, "nl": 6, "vt": "str", "ot": "string"})
+    ok = pack_uints_auto(np.array([3, 2, 1], dtype=np.uint64)) + idx
+    assert decode_column("linedict", ok, blob, meta, 3, None).to_pylist() \
+        == ["a\nb\nc", "d\ne", "f"]
+    for counts in ([3, 2, 0], [3, 2, 2], [2**64 - 1, 7, 0]):
+        bad = pack_uints_auto(np.array(counts, dtype=np.uint64)) + idx
+        with pytest.raises(DecodeError, match="segment counts"):
+            decode_column("linedict", bad, blob, meta, 3, None)
+
+
+def test_dictionary_codecs_decode_equal_without_native(tmp_path,
+                                                       monkeypatch):
+    """End to end: parts written by the part writer, holding dict, rle,
+    linedict and pathdict chunks and dictionary pages, decode to equal
+    batches with and without the compiled kernels."""
+    import pyarrow.parquet as pq
+
+    from fileconvert_spark.operators import encode as E
+    from fileconvert_spark.plans.manifest import make_write_kernel
+    from tests.test_part_writer_digest import _clustered_batches
+
+    out = str(tmp_path / "enc")
+    list(make_write_kernel(out, chunk_rows=256)(iter(_clustered_batches())))
+    cols = ["repo", "path", "commit", "lang", "content"]
+    chunks, codecs_seen = [], set()
+    for name in sorted(os.listdir(os.path.join(out, "data"))):
+        rows = pq.read_table(os.path.join(out, "data", name)).to_pylist()
+        pages = {r["column"]: r["dict"] for r in rows
+                 if r["chunk_id"] == E.PAGE_CHUNK_ID}
+        by_chunk = {}
+        for r in rows:
+            if r["chunk_id"] != E.PAGE_CHUNK_ID:
+                by_chunk.setdefault(r["chunk_id"], {})[r["column"]] = r
+                codecs_seen.add(r["codec"])
+        chunks += [(by_chunk[c], pages) for c in sorted(by_chunk)]
+    assert {"dict", "rle", "linedict", "pathdict"} <= codecs_seen
+
+    def decode_all():
+        E._PAGE_CACHE.clear()   # pages must decode on the path under test
+        return [E.decode_chunk(rows, cols, pages) for rows, pages in chunks]
+
+    native_batches = decode_all()
+    monkeypatch.setenv("FCS_NO_NATIVE", "1")
+    numpy_batches = decode_all()
+    assert len(native_batches) == len(numpy_batches) > 0
+    for a, b in zip(native_batches, numpy_batches):
+        assert a.equals(b)
+
+
 def _forward_filter(px, filters, ch):
     """Apply PNG row filters (the encoder direction) to reference pixels —
     ground truth for the defilter tests."""
@@ -512,6 +713,43 @@ _CRASH_CASES = {
     "slab_word_hashes_unsorted_doc_starts":
         "native.slab_word_hashes(np.frombuffer(b'a b c', np.uint8),"
         " np.array([4, 0]))",
+    # the gather-join reads dictionary offsets at idx and idx + 1
+    "str_gather_join_index_past_dictionary":
+        "native.str_gather_join(np.array([0, 1, 2], np.int32),"
+        " np.zeros(2, np.uint8), np.array([0, 1 << 40]))",
+    "str_gather_join_negative_index":
+        "native.str_gather_join(np.array([0, 1, 2], np.int32),"
+        " np.zeros(2, np.uint8), np.array([0, -(1 << 40)]))",
+    # rows walk counts[i] indices each through one flat index array
+    "str_gather_join_counts_short_of_indices":
+        "native.str_gather_join(np.array([0, 1, 2], np.int32),"
+        " np.zeros(2, np.uint8), np.zeros(6, np.int64), np.array([3, 2, 0]),"
+        " b'\\n')",
+    "str_gather_join_counts_past_indices":
+        "native.str_gather_join(np.array([0, 1, 2], np.int32),"
+        " np.zeros(2, np.uint8), np.zeros(6, np.int64), np.array([3, 5]),"
+        " b'\\n')",
+    "str_gather_join_negative_count":
+        "native.str_gather_join(np.array([0, 1, 2], np.int32),"
+        " np.zeros(2, np.uint8), np.zeros(6, np.int64), np.array([1000, -994]),"
+        " b'\\n')",
+    # 2100 x 1 MiB: an int32-offset string array cannot hold it; refused
+    # before the 2.2 GB output is allocated
+    "str_gather_join_output_past_int32":
+        "native.str_gather_join(np.array([0, 1 << 20], np.int32),"
+        " np.zeros(1 << 20, np.uint8), np.zeros(2100, np.int64))",
+    # the literal after a trailing ESCAPE lies past the stream
+    "fsst_decode_trailing_escape":
+        "native.fsst_decode(b'\\x00\\xff', np.array([2]), [b'a'])",
+    # string lengths must cover the stream exactly
+    "fsst_decode_lengths_short":
+        "native.fsst_decode(b'\\x00\\x00\\x00', np.array([1, 1]), [b'abc'])",
+    "fsst_decode_lengths_past_stream":
+        "native.fsst_decode(b'\\x00\\x00\\x00', np.array([1, 1 << 40]),"
+        " [b'abc'])",
+    "fsst_decode_negative_length":
+        "native.fsst_decode(b'\\x00\\x00\\x00', np.array([1 << 20, 3 - (1 << 20)]),"
+        " [b'abc'])",
 }
 
 
