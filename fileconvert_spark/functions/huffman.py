@@ -48,8 +48,6 @@ U32 = struct.Struct("<I")
 
 MAX_LEN = 16          # decode LUT is 2^MAX_LEN entries; T.81-style limit
 SEG_SYMS = 4096       # symbols per segment (independent decode units)
-MAX_K = 4096          # alphabet gate: beyond this the lens table + gather
-                      # cost eats the entropy win on realistic chunks
 
 
 def code_lengths(counts: np.ndarray, max_len: int = MAX_LEN) -> np.ndarray:

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from ..functions import similarity as sim
+from .knn import _as_matrix
 
 N_MINHASH = 32
 N_BANDS = 8  # 8 bands x 4 rows: catches jaccard >~ 0.5 pairs reliably
@@ -742,16 +743,7 @@ def audit_components(comp: DataFrame, docs: DataFrame, id_col: str,
                 np.unpackbits(x, axis=1).sum(axis=1).astype("int32"))
     elif metric == "cosine":
         out_col = "cosine"
-
-        @F.pandas_udf("double")
-        def score(va: pd.Series, vb: pd.Series) -> pd.Series:
-            import numpy as np
-
-            a = np.array(va.tolist(), dtype=np.float64)
-            b = np.array(vb.tolist(), dtype=np.float64)
-            a /= np.maximum(np.linalg.norm(a, axis=1, keepdims=True), 1e-12)
-            b /= np.maximum(np.linalg.norm(b, axis=1, keepdims=True), 1e-12)
-            return pd.Series(np.einsum("ij,ij->i", a, b))
+        score = _pair_cosine_udf()
     else:
         raise ValueError(
             f"audit_components: unknown metric {metric!r} "
@@ -768,6 +760,17 @@ def audit_components(comp: DataFrame, docs: DataFrame, id_col: str,
     )
 
 
+def _pair_cosine_udf():
+    """pandas UDF: exact cosine of two vector columns, row by row."""
+    import numpy as np
+
+    @F.pandas_udf("double")
+    def cosine(va: pd.Series, vb: pd.Series) -> pd.Series:
+        return pd.Series(np.einsum("ij,ij->i", _as_matrix(va),
+                                   _as_matrix(vb)))
+    return cosine
+
+
 def _pairs_within_groups(grouped: DataFrame, threshold: float) -> DataFrame:
     """Exact cosine pairs >= threshold within (ki, kj) comparison groups.
 
@@ -782,18 +785,13 @@ def _pairs_within_groups(grouped: DataFrame, threshold: float) -> DataFrame:
     """
     import numpy as np
 
-    def _mat(col) -> "np.ndarray":
-        m = np.array(col.tolist(), dtype=np.float64)
-        m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return m
-
     def compute(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ki, kj = int(key[0]), int(key[1])
         a = pdf[pdf["side"] == 0]
         ids_a = a["id"].to_numpy()
         if len(ids_a) == 0:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        ma = _mat(a["vec"])
+        ma = _as_matrix(a["vec"])
         if ki == kj:
             if len(ids_a) < 2:
                 return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
@@ -807,7 +805,7 @@ def _pairs_within_groups(grouped: DataFrame, threshold: float) -> DataFrame:
             ids_b = b["id"].to_numpy()
             if len(ids_b) == 0:
                 return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-            sims = ma @ _mat(b["vec"]).T
+            sims = ma @ _as_matrix(b["vec"]).T
             ri, ci = np.nonzero(sims >= threshold)
             left, right, cs = ids_a[ri], ids_b[ci], sims[ri, ci]
         return pd.DataFrame({
@@ -1026,8 +1024,7 @@ def cosine_components(df: DataFrame, id_col: str = "vec_id",
         "struct<keys: array<long>, svs: array<double>, sig: long>")
     def band_udf(vecs: pd.Series) -> pd.DataFrame:
         pl, sd, sp = bc.value
-        m = np.array(vecs.tolist(), dtype=np.float64)
-        m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+        m = _as_matrix(vecs)
         bits = (m @ pl.T >= 0).reshape(len(m), -1, weights.size)
         keys = bits @ weights  # (n, n_bands) int64
         svs = m @ sd.T  # (n, n_bands)
@@ -1035,14 +1032,6 @@ def cosine_components(df: DataFrame, id_col: str = "vec_id",
                           bitorder="little").view(np.int64).ravel()
         return pd.DataFrame({"keys": list(keys), "svs": list(svs),
                              "sig": sig})
-
-    @F.pandas_udf("double")
-    def cos_udf(va: pd.Series, vb: pd.Series) -> pd.Series:
-        a = np.array(va.tolist(), dtype=np.float64)
-        b = np.array(vb.tolist(), dtype=np.float64)
-        a /= np.maximum(np.linalg.norm(a, axis=1, keepdims=True), 1e-12)
-        b /= np.maximum(np.linalg.norm(b, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.einsum("ij,ij->i", a, b))
 
     base = df.select(F.col(id_col).cast("long").alias("id"),
                      F.col(vec_col).alias("vec"),
@@ -1081,7 +1070,7 @@ def cosine_components(df: DataFrame, id_col: str = "vec_id",
         # verification only sees plausible pairs
         .filter(F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
                 <= h_max)
-        .filter(cos_udf("vec_a", "vec_b") >= threshold)
+        .filter(_pair_cosine_udf()("vec_a", "vec_b") >= threshold)
         .select("id_a", "id_b")
         .distinct()
     )

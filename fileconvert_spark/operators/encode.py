@@ -741,6 +741,9 @@ def resolve_page_dict(page_blob: bytes | None, map_blob: bytes,
     return codecs._gather_strings(vals, local_map)
 
 
+_STR_VTS = frozenset({"str", "bin", "dec16"})  # string-codec value types
+
+
 def consolidate_part_dicts(rows: list[dict], part_id: int) -> list[dict]:
     """Write-time per-part dictionary-page consolidation.
 
@@ -763,8 +766,10 @@ def consolidate_part_dicts(rows: list[dict], part_id: int) -> list[dict]:
     meta ``dp`` = 1 and ``ps`` = sha256 of the page blob (chunk
     integrity extends to the page), with dict = the packed map.
 
-    ``rows``: every enc row of the part; only rows whose codec is in
-    DICT_FAMILY are rewritten (in place). Returns ``rows`` unchanged
+    ``rows``: every enc row of the part; only string-valued rows (meta
+    ``vt`` str, bin or dec16) whose codec is in DICT_FAMILY are
+    rewritten (in place) — an int column's ``dict`` chunk carries a
+    FoR value blob, not a string dictionary. Returns ``rows`` unchanged
     when no column profits — the common case on chunk-local value
     distributions (e.g. commit hashes whose repeats never straddle
     chunks: measured union == sum there, a guaranteed loss skipped
@@ -783,7 +788,8 @@ def consolidate_part_dicts(rows: list[dict], part_id: int) -> list[dict]:
 
     by_col: dict[str, list[dict]] = {}
     for r in rows:
-        if r["codec"] in DICT_FAMILY and r["dict"] is not None:
+        if (r["codec"] in DICT_FAMILY and r["dict"] is not None
+                and json.loads(r["meta"])["vt"] in _STR_VTS):
             by_col.setdefault(r["column"], []).append(r)
 
     pages: dict[str, dict] = {}

@@ -1,11 +1,19 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-Baseline: brute-force cosine top-k — queries broadcast (small side), scores
-computed JVM-side via zip_with/aggregate (whole-stage codegen, no Python),
-ranked by a window per query. Scale path: IVF-style coarse quantization —
-assign every vector to its nearest of C centroids (trained on a sample),
-then probe only the closest n_probe centroid partitions per query: the
-shuffle/scan shrinks by ~C/n_probe at 100 TB while recall stays high.
+Every search scores the same way: exact cosine of unit rows, one NumPy
+matmul per Arrow batch against a broadcast query matrix, a per-batch
+top-k per query, then one window over the (q_id, vec_id, cosine)
+candidates (``_blocked_candidates`` + ``_final_topk``). Queries are the
+small, broadcast side; the shuffle carries candidate triples, never
+vectors.
+
+- ``brute_force_topk``: every vector against every query (exact).
+- ``ivf_topk``: IVF-style coarse quantization — assign every vector to
+  its nearest of C centroids (trained on a sample), then score only the
+  closest n_probe centroid cells per query: the scoring shrinks by
+  ~C/n_probe at 100 TB while recall stays high.
+- ``write_ivf_index`` + ``ivf_probe_indexed``: the same IVF stored as a
+  cell-partitioned table, so a probe prunes the scan at the source.
 """
 
 from __future__ import annotations
@@ -18,38 +26,147 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _norm_expr(vec_col):
-    return F.sqrt(
-        F.aggregate(vec_col, F.lit(0.0),
-                    lambda a, x: a + x.cast("double") * x.cast("double"))
-    )
+def _as_matrix(col, dtype=np.float64) -> np.ndarray:
+    """Stack a vector column (a pandas Series of arrays) into a matrix
+    of unit rows — the one normalizer of the k-NN and embedding-dedup
+    operators. An empty column gives a (0, 0) matrix.
+    float32 is for QUANTIZER ASSIGNMENT only (half the transient, ~2x
+    the BLAS throughput; a boundary vector may land in the adjacent
+    cell, which multi_assign/n_probe absorb) — candidate SCORING stays
+    float64 so ranking matches the exact/oracle path."""
+    m = np.array(col.tolist(), dtype=dtype)
+    if not len(m):
+        return m.reshape(0, 0)
+    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True),
+                    dtype(1e-12))
+    return m
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-                       F.lit(0.0), lambda acc, x: acc + x)
+def _top_cells(sims: np.ndarray, n: int) -> np.ndarray:
+    """Per row, the indices of the n highest similarities, best first
+    (stable: equal similarities keep centroid order)."""
+    return np.argsort(-sims, kind="stable", axis=1)[:, :n]
+
+
+def _cells_udf(bc_cent, n_cells: int, dtype):
+    """pandas UDF: each vector's ``n_cells`` nearest centroid cells
+    (array<int>, best first) against the broadcast centroid matrix,
+    computed in ``dtype``."""
+    @F.pandas_udf("array<int>")
+    def cells(vecs: pd.Series) -> pd.Series:
+        cT = np.ascontiguousarray(bc_cent.value.T, dtype=dtype)
+        idx = _top_cells(_as_matrix(vecs, dtype) @ cT, n_cells)
+        return pd.Series([row.astype("int32").tolist() for row in idx])
+    return cells
+
+
+def _query_side(queries: DataFrame, q_id_col: str, q_vec_col: str):
+    """Collect the query set on the driver: (int64 ids, unit-row
+    matrix)."""
+    qpd = queries.select(q_id_col, q_vec_col).toPandas()
+    return (qpd[q_id_col].to_numpy(dtype=np.int64),
+            _as_matrix(qpd[q_vec_col]))
+
+
+def _probe_broadcast(spark, queries: DataFrame, q_id_col: str,
+                     q_vec_col: str, cent: np.ndarray, n_probe: int,
+                     budget: tuple[np.ndarray, int] | None = None):
+    """Plan every query's probe cells on the driver and broadcast the
+    query side as ``{Q, q_ids, by_cell}`` for
+    ``_blocked_candidates(..., "cell")``; ``by_cell`` maps each probed
+    cell to the indices of the queries that probe it. A query probes
+    its ``n_probe`` most similar cells, or with ``budget`` = (cell row
+    counts, row budget) the adaptive prefix of ``_adaptive_probes``.
+    Returns the broadcast and the sorted probed cells."""
+    q_ids, Q = _query_side(queries, q_id_col, q_vec_col)
+    by_cell: dict[int, list[int]] = {}
+    if len(q_ids):
+        sims = Q @ cent.T
+        probes = (_adaptive_probes(sims, *budget) if budget is not None
+                  else _top_cells(sims, min(n_probe, len(cent))))
+        for qi, row in enumerate(probes):
+            for c in row:
+                by_cell.setdefault(int(c), []).append(qi)
+    bc = spark.sparkContext.broadcast({
+        "Q": Q, "q_ids": q_ids,
+        "by_cell": {c: np.array(v, dtype=np.int64)
+                    for c, v in by_cell.items()}})
+    return bc, sorted(by_cell)
+
+
+def _blocked_candidates(df, bc_q, k: int, id_col: str, vec_col: str,
+                        cell_col: str | None):
+    """Per-Arrow-batch exact scoring against the broadcast query matrix:
+    one matmul, then a per-batch top-k per query ordered by (-cosine,
+    id) — the union of per-batch top-ks contains the global top-k, so a
+    final window recovers the exact answer while only candidate triples
+    are ever shuffled. With ``cell_col``, each batch sub-block is scored
+    only against the queries probing that cell."""
+    out_schema = f"q_id long, {id_col} long, cosine double"
+
+    def gen(batches):
+        v = bc_q.value
+        Q, q_ids, by_cell = v["Q"], v["q_ids"], v.get("by_cell")
+        for pdf in batches:
+            if not len(pdf) or not len(q_ids):
+                continue
+            X = _as_matrix(pdf[vec_col])
+            ids = pdf[id_col].to_numpy()
+            chunks = []
+
+            def topk(S, sub_ids, q_idx):
+                for j, qi in enumerate(q_idx):
+                    s = S[:, j]
+                    kk = min(k, len(s))
+                    order = np.lexsort((sub_ids, -s))[:kk]
+                    chunks.append(pd.DataFrame({
+                        "q_id": np.full(kk, q_ids[qi], dtype=np.int64),
+                        id_col: sub_ids[order],
+                        "cosine": s[order]}))
+
+            if by_cell is None:
+                topk(X @ Q.T, ids, np.arange(len(q_ids)))
+            else:
+                cells = pdf[cell_col].to_numpy()
+                for c in np.unique(cells):
+                    q_idx = by_cell.get(int(c))
+                    if q_idx is None:
+                        continue
+                    mask = cells == c
+                    topk(X[mask] @ Q[q_idx].T, ids[mask], q_idx)
+            if chunks:
+                yield pd.concat(chunks, ignore_index=True)
+
+    return df.mapInPandas(gen, out_schema)
+
+
+def _final_topk(cand: DataFrame, k: int, id_col: str, q_id_col: str,
+                dedup: bool) -> DataFrame:
+    """(q_id_col, rank, id_col, cosine): the top k candidates per query
+    by (-cosine, id)."""
+    if dedup:  # multi-assigned vectors can meet a query in several cells
+        cand = cand.dropDuplicates(["q_id", id_col])
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc(id_col))
+    out = (cand.withColumn("rank", F.row_number().over(w))
+           .filter(F.col("rank") <= k)
+           .select("q_id", "rank", id_col, "cosine"))
+    return out.withColumnRenamed("q_id", q_id_col) \
+        if q_id_col != "q_id" else out
 
 
 def brute_force_topk(df: DataFrame, queries: DataFrame, k: int = 5,
                      id_col: str = "vec_id", vec_col: str = "embedding",
-                     q_id_col: str = "q_id", q_vec_col: str = "q_vec") -> DataFrame:
-    """Exact cosine top-k: (q_id, rank, vec_id, cosine). Queries broadcast."""
-    base = df.select(F.col(id_col), F.col(vec_col),
-                     _norm_expr(F.col(vec_col)).alias("_n"))
-    q = queries.select(F.col(q_id_col), F.col(q_vec_col),
-                       _norm_expr(F.col(q_vec_col)).alias("_qn"))
-    scored = base.join(F.broadcast(q)).select(
-        F.col(q_id_col),
-        F.col(id_col),
-        (_dot(F.col(vec_col), F.col(q_vec_col))
-         / (F.col("_n") * F.col("_qn"))).alias("cosine"),
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, "rank", id_col, "cosine")
-    )
+                     q_id_col: str = "q_id",
+                     q_vec_col: str = "q_vec") -> DataFrame:
+    """Exact cosine top-k: (q_id, rank, vec_id, cosine), ids as long,
+    ties ranked by vec_id. One BLAS matmul per (Arrow batch x query
+    set); only n_batches*m*k candidate triples reach the final
+    window."""
+    q_ids, Q = _query_side(queries, q_id_col, q_vec_col)
+    bc = df.sparkSession.sparkContext.broadcast({"Q": Q, "q_ids": q_ids})
+    cand = _blocked_candidates(df.select(id_col, vec_col), bc, k,
+                               id_col, vec_col, None)
+    return _final_topk(cand, k, id_col, q_id_col, dedup=False)
 
 
 def train_centroids(df: DataFrame, n_centroids: int = 16,
@@ -157,10 +274,12 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5,
              refine_iters: int = 0, multi_assign: int = 1) -> DataFrame:
     """IVF ANN: probe only the n_probe nearest centroid cells per query.
 
-    Centroids ship as a Spark broadcast variable consumed by vectorized
-    Pandas UDFs (one matmul per Arrow batch) — not as plan literals, so
-    1024 centroids x 768 dims costs one broadcast, not a megabyte of
-    expression tree re-analyzed per query.
+    Centroids ship as a Spark broadcast variable consumed by a
+    vectorized Pandas UDF (one float64 matmul per Arrow batch) — not as
+    plan literals, so 1024 centroids x 768 dims costs one broadcast,
+    not a megabyte of expression tree re-analyzed per query. Probe
+    cells are planned on the driver; each vector is scored only against
+    the queries probing its cell.
 
     ``multi_assign``: store each base vector in its ``multi_assign``
     nearest cells instead of one. Coarse-only IVF has a recall cliff when
@@ -170,62 +289,19 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     multi_assign=2 and 0.97 with 3, at a storage/scan cost of x2/x3 —
     the standard trade when more probes alone stop paying.
     """
-    from pyspark.sql.types import ArrayType, IntegerType
-
     cent = train_centroids(df, n_centroids, vec_col, id_col=id_col)
     if refine_iters:
         cent = refine_centroids(df, cent, vec_col, iters=refine_iters)
-    bc = df.sparkSession.sparkContext.broadcast(cent)
-    n_probe_eff = min(n_probe, len(cent))
-    ma_eff = max(1, min(multi_assign, len(cent)))
-
-    def _matrix(vecs: pd.Series) -> np.ndarray:
-        m = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return m
-
-    def _topc_udf(nc: int):
-        @F.pandas_udf(ArrayType(IntegerType()))
-        def topc(vecs: pd.Series) -> pd.Series:
-            sims = _matrix(vecs) @ bc.value.T
-            idx = np.argsort(-sims, kind="stable", axis=1)[:, :nc]
-            return pd.Series([row.astype("int32").tolist() for row in idx])
-        return topc
-
-    @F.pandas_udf("int")
-    def cell_udf(vecs: pd.Series) -> pd.Series:
-        sims = _matrix(vecs) @ bc.value.T
-        return pd.Series(sims.argmax(axis=1).astype(np.int32))
-
-    if ma_eff == 1:
-        cell_expr = cell_udf(F.col(vec_col)).alias("cell")
-        base = df.select(F.col(id_col), F.col(vec_col), cell_expr,
-                         _norm_expr(F.col(vec_col)).alias("_n"))
-    else:
-        base = df.select(
-            F.col(id_col), F.col(vec_col),
-            F.explode(_topc_udf(ma_eff)(F.col(vec_col))).alias("cell"),
-            _norm_expr(F.col(vec_col)).alias("_n"))
-
-    q = queries.select(
-        F.col(q_id_col), F.col(q_vec_col),
-        _norm_expr(F.col(q_vec_col)).alias("_qn"),
-        F.explode(_topc_udf(n_probe_eff)(F.col(q_vec_col))).alias("cell"),
-    )
-    scored = base.join(F.broadcast(q), "cell").select(
-        F.col(q_id_col), F.col(id_col),
-        (_dot(F.col(vec_col), F.col(q_vec_col))
-         / (F.col("_n") * F.col("_qn"))).alias("cosine"),
-    )
-    if ma_eff > 1:
-        # a (query, vector) pair can meet in several shared cells
-        scored = scored.dropDuplicates([q_id_col, id_col])
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, "rank", id_col, "cosine")
-    )
+    spark = df.sparkSession
+    ma = max(1, min(multi_assign, len(cent)))
+    bc_q, probed = _probe_broadcast(spark, queries, q_id_col, q_vec_col,
+                                    cent, n_probe)
+    cells = _cells_udf(spark.sparkContext.broadcast(cent), ma, np.float64)
+    assigned = (df.select(F.col(id_col), F.col(vec_col),
+                          F.explode(cells(F.col(vec_col))).alias("cell"))
+                .filter(F.col("cell").isin(probed)))
+    cand = _blocked_candidates(assigned, bc_q, k, id_col, vec_col, "cell")
+    return _final_topk(cand, k, id_col, q_id_col, dedup=ma > 1)
 
 
 # ------------------------------------------------------- indexed IVF
@@ -235,102 +311,10 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5,
 # materialize the IVF index as a cell-PARTITIONED parquet table so that
 # probing n_probe of C cells prunes the scan to ~n_probe/C of the bytes
 # at the source (PartitionFilters, no file even opened for unprobed
-# cells), and score candidates with one NumPy matmul per Arrow batch —
-# the shuffle carries only (q_id, vec_id, cosine) candidate rows, never
-# vectors.
+# cells), and score candidates with the same blocked matmul.
 
 _IVF_META = "_ivf_meta.json"          # leading '_': ignored by Spark scans
 _IVF_CENTROIDS = "_ivf_centroids.npy"
-
-
-def _as_matrix(col, dtype=np.float64) -> np.ndarray:
-    """Stack an Arrow list column into a row-normalized matrix.
-    float32 is for QUANTIZER ASSIGNMENT only (half the transient, ~2x
-    the BLAS throughput; a boundary vector may land in the adjacent
-    cell, which multi_assign/n_probe absorb) — candidate SCORING stays
-    float64 so ranking matches the exact/oracle path."""
-    m = np.array(col.tolist(), dtype=dtype)
-    m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True),
-                    dtype(1e-12))
-    return m
-
-
-def _blocked_candidates(df, bc_q, k: int, id_col: str, vec_col: str,
-                        cell_col: str | None):
-    """Per-Arrow-batch exact scoring against the broadcast query matrix:
-    one matmul, then a per-batch top-k per query ordered by (-cosine,
-    id) — the union of per-batch top-ks contains the global top-k, so a
-    final window recovers the exact answer while only candidate triples
-    are ever shuffled. With ``cell_col``, each batch sub-block is scored
-    only against the queries probing that cell."""
-    out_schema = f"q_id long, {id_col} long, cosine double"
-
-    def gen(batches):
-        v = bc_q.value
-        Q, q_ids, by_cell = v["Q"], v["q_ids"], v.get("by_cell")
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = _as_matrix(pdf[vec_col])
-            ids = pdf[id_col].to_numpy()
-            chunks = []
-
-            def topk(S, sub_ids, q_idx):
-                for j, qi in enumerate(q_idx):
-                    s = S[:, j]
-                    kk = min(k, len(s))
-                    order = np.lexsort((sub_ids, -s))[:kk]
-                    chunks.append(pd.DataFrame({
-                        "q_id": np.full(kk, q_ids[qi], dtype=np.int64),
-                        id_col: sub_ids[order],
-                        "cosine": s[order]}))
-
-            if by_cell is None:
-                topk(X @ Q.T, ids, np.arange(len(q_ids)))
-            else:
-                cells = pdf[cell_col].to_numpy()
-                for c in np.unique(cells):
-                    q_idx = by_cell.get(int(c))
-                    if q_idx is None:
-                        continue
-                    mask = cells == c
-                    topk(X[mask] @ Q[q_idx].T, ids[mask], q_idx)
-            if chunks:
-                yield pd.concat(chunks, ignore_index=True)
-
-    return df.mapInPandas(gen, out_schema)
-
-
-def _final_topk(cand: DataFrame, k: int, id_col: str,
-                dedup: bool) -> DataFrame:
-    if dedup:  # multi-assigned vectors can meet a query in several cells
-        cand = cand.dropDuplicates(["q_id", id_col])
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "rank", id_col, "cosine"))
-
-
-def brute_force_topk_blocked(df: DataFrame, queries: DataFrame, k: int = 5,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
-                             q_id_col: str = "q_id",
-                             q_vec_col: str = "q_vec") -> DataFrame:
-    """Exact cosine top-k via batched NumPy matmuls — same result as
-    brute_force_topk, built for corpus scale: the zip_with/aggregate
-    per-pair scoring is whole-stage-codegen-friendly but evaluates one
-    multiply per expression node, while this path does one BLAS matmul
-    per (Arrow batch x query set) and shuffles only n_batches*m*k
-    candidate triples into the final window."""
-    qpd = queries.select(q_id_col, q_vec_col).toPandas()  # broadcast side
-    bc = df.sparkSession.sparkContext.broadcast({
-        "Q": _as_matrix(qpd[q_vec_col]),
-        "q_ids": qpd[q_id_col].to_numpy(dtype=np.int64)})
-    cand = _blocked_candidates(df.select(id_col, vec_col), bc, k,
-                               id_col, vec_col, None)
-    out = _final_topk(cand, k, id_col, dedup=False)
-    return out.withColumnRenamed("q_id", q_id_col) \
-        if q_id_col != "q_id" else out
 
 
 def write_ivf_index(df: DataFrame, path: str, n_centroids: int = 256,
@@ -367,16 +351,10 @@ def write_ivf_index(df: DataFrame, path: str, n_centroids: int = 256,
     bc = df.sparkSession.sparkContext.broadcast(cent)
     ma = max(1, min(multi_assign, len(cent)))
 
-    @F.pandas_udf("array<int>")
-    def topc(vecs: pd.Series) -> pd.Series:
-        cT = np.ascontiguousarray(bc.value.T, dtype=np.float32)
-        sims = _as_matrix(vecs, np.float32) @ cT
-        idx = np.argsort(-sims, kind="stable", axis=1)[:, :ma]
-        return pd.Series([row.astype("int32").tolist() for row in idx])
-
     assigned = df.select(
         F.col(id_col), F.col(vec_col),
-        F.explode(topc(F.col(vec_col))).alias("cell"))
+        F.explode(_cells_udf(bc, ma, np.float32)(F.col(vec_col)))
+        .alias("cell"))
     (assigned.repartition("cell")
      .write.mode("error").partitionBy("cell").parquet(path))
 
@@ -445,9 +423,7 @@ def ivf_probe_indexed(spark, path: str, queries: DataFrame, k: int = 5,
         fsio.read_bytes(os.path.join(path, _IVF_CENTROIDS))))
     id_col, vec_col = meta["id_col"], meta["vec_col"]
 
-    qpd = queries.select(q_id_col, q_vec_col).toPandas()
-    Q = _as_matrix(qpd[q_vec_col])
-    sims = Q @ cent.T
+    budget = None
     if scan_budget is not None:
         cell_rows = meta.get("cell_rows")
         if cell_rows is None:
@@ -455,25 +431,12 @@ def ivf_probe_indexed(spark, path: str, queries: DataFrame, k: int = 5,
                 "IVF index predates cell_rows meta — rebuild with "
                 "write_ivf_index, or probe with a fixed n_probe")
         sizes = np.asarray(cell_rows, dtype=np.int64)
-        budget_rows = max(1, int(np.ceil(scan_budget * max(
-            int(sizes.sum()), 1))))
-        probes = _adaptive_probes(sims, sizes, budget_rows)
-    else:
-        n_probe_eff = min(n_probe, len(cent))
-        probes = np.argsort(-sims, kind="stable", axis=1)[:, :n_probe_eff]
-    by_cell: dict[int, list[int]] = {}
-    for qi, row in enumerate(probes):
-        for c in row:
-            by_cell.setdefault(int(c), []).append(qi)
-    by_cell_np = {c: np.array(v, dtype=np.int64)
-                  for c, v in by_cell.items()}
-    bc = spark.sparkContext.broadcast({
-        "Q": Q, "q_ids": qpd[q_id_col].to_numpy(dtype=np.int64),
-        "by_cell": by_cell_np})
+        budget = (sizes, max(1, int(np.ceil(scan_budget * max(
+            int(sizes.sum()), 1)))))
+    bc, probed = _probe_broadcast(spark, queries, q_id_col, q_vec_col,
+                                  cent, n_probe, budget)
 
-    idx = spark.read.parquet(path).filter(
-        F.col("cell").isin(sorted(by_cell)))
+    idx = spark.read.parquet(path).filter(F.col("cell").isin(probed))
     cand = _blocked_candidates(idx, bc, k, id_col, vec_col, "cell")
-    out = _final_topk(cand, k, id_col, dedup=meta["multi_assign"] > 1)
-    return out.withColumnRenamed("q_id", q_id_col) \
-        if q_id_col != "q_id" else out
+    return _final_topk(cand, k, id_col, q_id_col,
+                       dedup=meta["multi_assign"] > 1)

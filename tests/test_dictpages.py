@@ -100,6 +100,40 @@ def test_corrupt_page_raises():
                       page_dict=bytes(bad))
 
 
+@pytest.mark.parametrize("k", [200, 258])
+def test_int_dict_chunks_not_consolidated(tmp_path, k):
+    """An int column whose chunks pick the int ``dict`` codec (U32 k +
+    FoR value blob) is not a string dictionary: the part writer must
+    leave it out of page consolidation and every chunk must decode to
+    its values. k = 258 puts 2 in the blob's first byte, the value that
+    once passed for a string-blob flag and wrote undecodable chunks."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from fileconvert_spark.operators.encode import decode_chunk
+    from fileconvert_spark.plans.manifest import make_write_kernel
+
+    rng = np.random.Generator(np.random.PCG64(k))
+    uniq = rng.integers(0, 2**62, size=k, dtype=np.int64)
+    vals = uniq[rng.integers(0, k, size=2 * 65536)]
+    batches = [pa.RecordBatch.from_arrays(
+        [pa.array(half), pa.array(np.zeros(len(half), dtype=np.int32))],
+        names=["v", "bucket"]) for half in np.split(vals, 2)]
+    out = str(tmp_path / "enc")
+    list(make_write_kernel(out, chunk_rows=65536)(iter(batches)))
+
+    rows = pq.read_table(os.path.join(out, "data", "part-00000.parquet")
+                         ).to_pylist()
+    pages = {r["column"]: r["dict"] for r in rows
+             if r["chunk_id"] == PAGE_CHUNK_ID}
+    chunks = sorted((r for r in rows if r["chunk_id"] != PAGE_CHUNK_ID),
+                    key=lambda r: r["chunk_id"])
+    assert [r["codec"] for r in chunks] == ["dict", "dict"]
+    got = np.concatenate([decode_chunk({"v": r}, ["v"], pages)
+                          .column(0).to_numpy() for r in chunks])
+    assert np.array_equal(got, vals)
+
+
 @pytest.fixture(scope="module")
 def paged_table(spark, tmp_path_factory):
     """Encoded table whose layout forces multi-chunk parts so pages fire."""

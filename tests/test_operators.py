@@ -1640,21 +1640,53 @@ def test_pnm_decode_p5_p6():
         _decode_media(b"P5 9 5 255# comment only")
 
 
-def test_blocked_bruteforce_matches_zipwith_exact(spark):
-    """brute_force_topk_blocked (per-batch matmul + candidate window)
-    must equal brute_force_topk exactly, including tie ordering."""
-    from fileconvert_spark.operators.knn import (
-        brute_force_topk, brute_force_topk_blocked)
+def test_bruteforce_topk_matches_numpy_exact(spark):
+    """brute_force_topk (per-batch matmul + candidate window) over a
+    7-way repartitioned table — so the global top-k is recovered from
+    the union of several batches' candidates — equals an exact NumPy
+    top-k: cosine descending, ties by vec_id ascending."""
+    import numpy as np
+
+    from fileconvert_spark.operators.knn import brute_force_topk
 
     emb = spark.read.parquet(os.path.join(SF, "embeddings.parquet")) \
         .repartition(7)  # force multi-batch candidate union
     q = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    a = {(r["q_id"], r["rank"], r["vec_id"], round(r["cosine"], 9))
-         for r in brute_force_topk(emb, q, k=7).collect()}
-    b = {(r["q_id"], r["rank"], r["vec_id"], round(r["cosine"], 9))
-         for r in brute_force_topk_blocked(emb, q, k=7).collect()}
-    assert a == b
+    got = brute_force_topk(emb, q, k=7)
+    assert got.schema.simpleString() == \
+        "struct<q_id:bigint,rank:int,vec_id:bigint,cosine:double>"
+
+    pdf = emb.toPandas()
+    ids = pdf["vec_id"].to_numpy()
+    X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+    X /= np.linalg.norm(X, axis=1, keepdims=True)
+    want = set()
+    for qi in range(3):
+        s = X @ X[ids == qi][0]
+        order = np.lexsort((ids, -s))[:7]
+        want |= {(qi, rank + 1, int(ids[j]), round(float(s[j]), 9))
+                 for rank, j in enumerate(order)}
+    assert {(r["q_id"], r["rank"], r["vec_id"], round(r["cosine"], 9))
+            for r in got.collect()} == want
+
+
+def test_knn_empty_query_set_returns_empty_frame(spark, tmp_path):
+    """An empty query set yields an empty (q_id, rank, vec_id, cosine)
+    frame from every k-NN entry point, not a worker error."""
+    from fileconvert_spark.operators.knn import (
+        brute_force_topk, ivf_probe_indexed, ivf_topk, write_ivf_index)
+
+    emb = spark.read.parquet(os.path.join(SF, "embeddings.parquet"))
+    q = emb.filter(F.col("vec_id") < 0).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+    p = str(tmp_path / "ivf")
+    write_ivf_index(emb, p, n_centroids=4)
+    for res in (brute_force_topk(emb, q, k=3),
+                ivf_topk(emb, q, k=3, n_centroids=4, n_probe=2),
+                ivf_probe_indexed(spark, p, q, k=3, n_probe=2)):
+        assert res.columns == ["q_id", "rank", "vec_id", "cosine"]
+        assert res.collect() == []
 
 
 def test_ivf_indexed_probe_prunes_partitions(spark, tmp_path):

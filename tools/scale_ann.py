@@ -8,7 +8,7 @@ multi-million-row scale, then measures, per phase: wall seconds,
 shuffle read/write bytes and INPUT bytes (Spark REST status API — the
 partition-pruning claim is "probing n_probe of C cells reads
 ~n_probe/C of the index bytes", and input_b is how we check it),
-recall@10 against the exact blocked brute-force baseline, and the
+recall@10 against the exact brute-force baseline, and the
 index build cost split into train / distributed-refine / assign+write.
 
     python tools/scale_ann.py [n_rows=8000000] [dim=128] \
@@ -163,7 +163,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from fileconvert_spark.operators.knn import (
-        brute_force_topk_blocked, ivf_probe_indexed, refine_centroids,
+        brute_force_topk, ivf_probe_indexed, refine_centroids,
         train_centroids, write_ivf_index)
     from fileconvert_spark.session import get_spark
 
@@ -200,9 +200,9 @@ def main() -> int:
                .cache())
     assert queries.count() == N_QUERIES
 
-    # ---- phase 1: exact blocked brute force (ground truth + baseline)
+    # ---- phase 1: exact brute force (ground truth + baseline)
     meter.start()
-    exact_rows = brute_force_topk_blocked(emb, queries, k=K).collect()
+    exact_rows = brute_force_topk(emb, queries, k=K).collect()
     out["exact_bruteforce"] = meter.stop()
     prog("exact_bruteforce")
     truth: dict[int, set[int]] = {}
