@@ -17,11 +17,12 @@ output must be <= the reference's Parquet/Snappy size.
 
 No Spark imports; every function operates on a single null-free chunk
 (validity handled by the wrapper in operators/encode.py). No per-row Python
-in any hot path — Arrow C++ (dictionary_encode / split_pattern) and NumPy
-do the work; FSST's token scan is bounded by compressed size (see
-functions/fsst.py). Decode of the dictionary codecs is one gather-join
-(_gather_strings): a C kernel when available, Arrow take / binary_join
-otherwise.
+in any hot path. Every whole-value and segment dictionary of selection
+comes from one split-and-dedup pass (_split_dedup), and decode of the
+dictionary codecs is one gather-join (_gather_strings): C kernels when
+available, Arrow dictionary_encode / split_pattern and take / binary_join
+otherwise; NumPy does the rest. FSST training and its token scans run
+in C too, with NumPy fallbacks (see functions/fsst.py).
 """
 
 from __future__ import annotations
@@ -177,6 +178,49 @@ def _string_buffers(arr: pa.Array) -> tuple[np.ndarray, int]:
     return lengths, int(offsets[-1] - offsets[0])
 
 
+def _split_dedup(arr: pa.Array, sep: str | None = None
+                 ) -> tuple[np.ndarray | None, np.ndarray, pa.Array]:
+    """Split a null-free string array on the one-byte ``sep`` (whole
+    values when None) and dictionary-encode the segments. Returns (int64
+    per-row segment counts, or None without ``sep``; int32 segment ids,
+    numbering the unique segments in first-occurrence order; the unique
+    segments, of ``arr``'s type). Every segment and whole-value
+    dictionary of codec selection comes from here. The C kernel
+    (native.str_split_dedup) does it in one pass; without it
+    (FCS_NO_NATIVE=1, no toolchain) Arrow ``dictionary_encode`` (of
+    ``split_pattern``'s values) gives the same result."""
+    if pa.types.is_large_string(arr.type):
+        arr = arr.cast(pa.string())
+    elif pa.types.is_large_binary(arr.type):
+        arr = arr.cast(pa.binary())
+    n = len(arr)
+    bufs = arr.buffers()
+    offsets = np.frombuffer(bufs[1], dtype=np.int32, count=n + 1,
+                            offset=arr.offset * 4) if n else \
+        np.zeros(1, dtype=np.int32)
+    data = np.frombuffer(bufs[2], dtype=np.uint8) \
+        if n and bufs[2] is not None else np.empty(0, dtype=np.uint8)
+    got = native.str_split_dedup(offsets, data, n,
+                                 None if sep is None else ord(sep))
+    if got is not None:
+        counts, ids, u_offs, u_data = got
+        uniques = pa.Array.from_buffers(
+            arr.type, len(u_offs) - 1,
+            [None, pa.py_buffer(u_offs), pa.py_buffer(u_data)])
+        return counts, ids, uniques
+    if sep is None:
+        de = pc.dictionary_encode(arr)
+        counts = None
+    else:
+        lines = pc.split_pattern(arr, sep)
+        list_offs = np.frombuffer(lines.buffers()[1], dtype=np.int32,
+                                  count=n + 1, offset=lines.offset * 4)
+        counts = np.diff(list_offs).astype(np.int64)
+        de = pc.dictionary_encode(lines.values)
+    return (counts, de.indices.to_numpy(zero_copy_only=False),
+            de.dictionary)
+
+
 # --------------------------------------------------------------------------
 # string codecs — encode(arr) -> (payload, dict_blob|None, meta_dict)
 # --------------------------------------------------------------------------
@@ -244,15 +288,17 @@ def dec_hex_str(payload, dict_blob, meta, n):
         n, pa.py_buffer(offsets.tobytes()), pa.py_buffer(out.tobytes()))
 
 
-def enc_dict_str(arr: pa.Array, de: pa.Array | None = None,
+def enc_dict_str(arr: pa.Array, dedup: tuple | None = None,
                  cache=None, cache_key=None):
-    de = de if de is not None else pc.dictionary_encode(arr)
-    idx = de.indices.to_numpy(zero_copy_only=False).astype(np.uint64)
-    k = len(de.dictionary)
+    """``dedup``: the (ids, uniques) of ``_split_dedup(arr)`` when the
+    caller already has them."""
+    ids, uniques = dedup if dedup is not None else _split_dedup(arr)[1:]
+    idx = ids.astype(np.uint64)
+    k = len(uniques)
     # frequency-rank the dictionary: skewed index streams then hybrid-pack
     # close to entropy (dictionary reordered so decode needs no map)
     ranked, order = freq_remap(idx, k) if k else (idx, np.arange(0))
-    uniques = de.dictionary.take(pa.array(order)) if k else de.dictionary
+    uniques = uniques.take(pa.array(order)) if k else uniques
     payload = pack_uints_auto(ranked)
     dict_blob = _flagged_blob_encode(uniques, cache, cache_key)
     return payload, dict_blob, {"k": k}
@@ -358,15 +404,9 @@ def dec_fsst_str(payload, dict_blob, meta, n):
 def _sepdict_prepare(arr: pa.Array, sep: str) -> dict:
     """Split rows on ``sep`` + dictionary-encode the segments (the shared
     prep for both the exact size estimate and the actual encode)."""
-    if pa.types.is_large_string(arr.type):
-        arr = arr.cast(pa.string())
-    lines = pc.split_pattern(arr, sep)
-    flat = lines.values if isinstance(lines, pa.ListArray) else lines.combine_chunks().values
-    list_offs = np.frombuffer(lines.buffers()[1], dtype=np.int32,
-                              count=len(arr) + 1, offset=lines.offset * 4)
-    counts = np.diff(list_offs).astype(np.uint64)
-    return {"counts": counts, "de": pc.dictionary_encode(flat),
-            "nl": int(len(flat)), "sep": sep}
+    counts, ids, seg_dict = _split_dedup(arr, sep)
+    return {"counts": counts.astype(np.uint64), "ids": ids,
+            "seg_dict": seg_dict, "nl": int(len(ids)), "sep": sep}
 
 
 def enc_linedict_str(arr: pa.Array, cache=None, cache_key=None,
@@ -395,11 +435,11 @@ def enc_linedict_str(arr: pa.Array, cache=None, cache_key=None,
 def _sepdict_pack(pre: dict) -> None:
     """Build the exact index/count payload for a _sepdict_prepare result
     (shared by the selection estimate and the winner's encode)."""
-    de = pre["de"]
-    idx = de.indices.to_numpy(zero_copy_only=False).astype(np.uint64)
-    k = len(de.dictionary)
+    idx = pre["ids"].astype(np.uint64)
+    seg_dict = pre["seg_dict"]
+    k = len(seg_dict)
     ranked, order = freq_remap(idx, k) if k else (idx, np.arange(0))
-    pre["uniques"] = de.dictionary.take(pa.array(order)) if k else de.dictionary
+    pre["uniques"] = seg_dict.take(pa.array(order)) if k else seg_dict
     pre["payload"] = pack_uints_auto(pre["counts"]) + pack_uints_auto(ranked)
     pre["k"] = k
 
@@ -554,16 +594,15 @@ INT_CODECS = {
 # codec auto-selection (SURVEY.md §2 B9): estimate -> pick min -> encode
 # --------------------------------------------------------------------------
 
-def chunk_stats_str(arr: pa.Array, de=None) -> dict:
+def chunk_stats_str(arr: pa.Array) -> dict:
     lengths, n_bytes = _string_buffers(arr)
     n = len(arr)
-    de = de if de is not None else pc.dictionary_encode(arr)
-    idx = de.indices.to_numpy(zero_copy_only=False)
-    runs = 1 + int(np.count_nonzero(np.diff(idx))) if n > 1 else min(n, 1)
+    _, ids, uniques = _split_dedup(arr)
+    runs = 1 + int(np.count_nonzero(np.diff(ids))) if n > 1 else min(n, 1)
     return {
-        "n": n, "n_bytes": n_bytes, "k": len(de.dictionary),
+        "n": n, "n_bytes": n_bytes, "k": len(uniques),
         "runs": runs, "avg_len": (n_bytes / n) if n else 0.0,
-        "_de": de,
+        "_dedup": (ids, uniques),
     }
 
 
@@ -580,10 +619,10 @@ def select_and_encode_str(arr: pa.Array,
         payload, dict_blob, meta = enc_raw_str(arr)
         return "raw", payload, dict_blob, meta
     st = chunk_stats_str(arr)
-    de = st.pop("_de")
+    dedup = st.pop("_dedup")
+    ids, dict_strings = dedup
     n_bytes = st["n_bytes"]
     k, runs = st["k"], st["runs"]
-    dict_strings = de.dictionary
     _, dict_bytes = _string_buffers(dict_strings)
 
     est: dict[str, float] = {}
@@ -608,13 +647,13 @@ def select_and_encode_str(arr: pa.Array,
     est["dict"] = packed_size(n, idx_w) + blob_est + 24
     if runs <= n // 2 or runs <= 4:
         rv = arr.take(np.flatnonzero(
-            np.concatenate([[True], np.diff(de.indices.to_numpy(zero_copy_only=False)) != 0])))
+            np.concatenate([[True], np.diff(ids) != 0])))
         _, rv_bytes = _string_buffers(rv)
         est["rle"] = packed_size(runs, 32) + rv_bytes * 0.9 + runs * 2 + 24
     # linedict/pathdict: EXACT segment-dictionary sizing on the full chunk
-    # (split + dictionary_encode are cheap C++ kernels, and segment-dedup
-    # ratios are dedup-driven — a row sample systematically overestimates
-    # them). The prep is kept and reused by the winner's actual encode.
+    # (one _split_dedup pass each, and segment-dedup ratios are
+    # dedup-driven — a row sample systematically overestimates them). The
+    # prep is kept and reused by the winner's actual encode.
     pre_by_codec: dict[str, dict] = {}
     # a segment dictionary under this share of the raw bytes "clearly
     # wins": the FSST trial below is then skipped
@@ -625,7 +664,7 @@ def select_and_encode_str(arr: pa.Array,
 
     def _sepdict_est(sep: str, name: str) -> None:
         pre = _sepdict_prepare(arr, sep)
-        seg_dict = pre["de"].dictionary
+        seg_dict = pre["seg_dict"]
         _, uniq_bytes = _string_buffers(seg_dict)
         # exact lower bound on the estimate below: FSST codes each symbol
         # of <= MAX_SYMBOL_LEN bytes as one byte, so the blob costs at
@@ -675,19 +714,17 @@ def select_and_encode_str(arr: pa.Array,
             _sepdict_est("\n", "linedict")
         # path-shaped values: '/'-separated components are low-cardinality
         # even when whole values are unique. The exact full-chunk trial is
-        # real work (split + dictionary_encode + pack), so pre-filter
+        # real work (split + dedup + pack), so pre-filter
         # slash-heavy columns whose segments DON'T dedup (URLs with unique
         # query strings): sample rows, split, and skip the trial only when
         # the sampled segments are almost all unique — a sample *over*states
         # uniqueness, so >=0.95 unique in-sample means the full chunk can't
         # dedup enough for a segment dictionary to win.
         if _count_byte(arr, "/") >= n:
-            probe = arr.slice(0, min(n, 256))
-            segs = pc.split_pattern(probe, "/")
-            flat = segs.values if isinstance(segs, pa.ListArray) \
-                else segs.combine_chunks().values
-            nseg = len(flat)
-            if nseg == 0 or len(pc.unique(flat)) < 0.95 * nseg:
+            _, probe_ids, probe_uniq = _split_dedup(
+                arr.slice(0, min(n, 256)), "/")
+            nseg = len(probe_ids)
+            if nseg == 0 or len(probe_uniq) < 0.95 * nseg:
                 _sepdict_est("/", "pathdict")
 
     # hex-pack: hash-like columns (commits, digests) — 2 chars/byte exact
@@ -720,7 +757,7 @@ def select_and_encode_str(arr: pa.Array,
 
     winner = min(est, key=lambda c: est[c])
     if winner == "dict":
-        payload, dict_blob, meta = enc_dict_str(arr, de, cache,
+        payload, dict_blob, meta = enc_dict_str(arr, dedup, cache,
                                                 f"{cache_key}/dict" if cache_key else None)
     elif winner == "fsst":
         payload, dict_blob, meta = enc_fsst_str(arr, fsst_table)

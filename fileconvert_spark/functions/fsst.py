@@ -1,26 +1,33 @@
 """FSST — Fast Static Symbol Table string compression, from scratch.
 
 Implements the algorithm of Boncz, Neumann & Freitag, "FSST: Fast Random
-Access String Compression" (VLDB 2020) in NumPy: a table of up to 255
-symbols of 1–8 bytes is trained on a bounded sample by iterative
-gain-maximization (gain = frequency × length, candidates = current symbols
-plus concatenations of adjacent matches), then the full buffer is encoded by
+Access String Compression" (VLDB 2020): a table of up to 255 symbols of
+1–8 bytes is trained on a bounded sample by iterative gain-maximization
+(gain = frequency × length, candidates = current symbols plus
+concatenations of adjacent matches), then the full buffer is encoded by
 greedy longest-match with code 255 reserved as a one-byte escape for bytes
 not covered by the table. Each string is encoded independently (no token
 spans a string boundary), preserving FSST's per-string random access.
 
-Hot path is vectorized end-to-end: window keys come from one overlapping
-stride-1 view over the byte buffer; symbol lookups are O(1) gathers — a
-combined 2-byte-window LUT resolves lengths 1-2 in one probe and a 2-way
-lossy hash table keyed on the first 3 bytes (the paper's design) resolves
-lengths 3-8 in two; the greedy parse is a pointer walk with no per-token
-Python — strings are virtually chopped into ``_WALK_SEG`` pieces so round
-count is bounded under length skew, cursor rounds advance every live
-piece one token at a time, and the small tail switches to per-piece slice
-matching + pointer-doubling chain enumeration. Decode emits through one
-flat byte gather (symbol pool + escaped literals as slices of a combined
-source buffer). Training is bounded by ``SAMPLE_BYTES`` so its cost is
-constant per chunk.
+The sequential loops run in C (native/kernels.c) when the library is
+available: training's per-iteration counting walk (``fsst_train_count``,
+its candidates ranked in NumPy), the greedy encode parse
+(``fsst_encode``) and the decode token walk (``fsst_decode``). Without a
+toolchain, or under ``FCS_NO_NATIVE=1``, the NumPy paths below (and a
+Python training walk) give identical tables and bytes.
+
+The NumPy encode is vectorized end-to-end: window keys come from one
+overlapping stride-1 view over the byte buffer; symbol lookups are O(1)
+gathers — a combined 2-byte-window LUT resolves lengths 1-2 in one probe
+and a 2-way lossy hash table keyed on the first 3 bytes (the paper's
+design) resolves lengths 3-8 in two; the greedy parse is a pointer walk
+with no per-token Python — strings are virtually chopped into
+``_WALK_SEG`` pieces so round count is bounded under length skew, cursor
+rounds advance every live piece one token at a time, and the small tail
+switches to per-piece slice matching + pointer-doubling chain
+enumeration. Decode emits through one flat byte gather (symbol pool +
+escaped literals as slices of a combined source buffer). Training is
+bounded by ``SAMPLE_BYTES`` so its cost is constant per chunk.
 
 Capability parity note: the reference (renesugar/FileConvert, see SURVEY.md
 §0 — empty checkout, cited via BASELINE.json line 6) delegates string
@@ -51,9 +58,11 @@ if sys.byteorder != "little":  # pragma: no cover — no BE host in CI
 MAX_SYMBOLS = 255          # code 255 = escape
 MAX_SYMBOL_LEN = 8
 # 64K sample (was 16K): measured r4, quadrupling the training sample cuts
-# path ratio .388->.374, content .455->.422, commit .600->.538 at ~90ms
-# extra train time per (column, worker, job) — amortized by the worker
-# table cache, invisible at job level (see NOTES_r4).
+# path ratio .388->.374, content .455->.422, commit .600->.538. Training
+# cost grows with it, and every table trains anew: the worker table cache
+# is keyed by output directory, so each encode_table retrains each
+# column's tables. With the C counting walk one 64 KB train takes ~30 ms
+# (~180-250 ms with the Python walk) on a 4-core x86 host.
 SAMPLE_BYTES = 64 * 1024
 TRAIN_ITERATIONS = 5
 ESCAPE = 255
@@ -94,50 +103,89 @@ def train(sample: bytes, iterations: int = TRAIN_ITERATIONS,
     seg_lengths = np.diff(np.concatenate([[0], bounds])).astype(np.int64)
     distinct_singles = [bytes([b]) for b in np.unique(buf)]
 
+    from .. import native
+
     table: list[bytes] = []
     for _ in range(iterations):
         # vectorized longest-match for every position (same kernel as encode)
         bl, _bc = _match_all_positions(buf, seg_lengths, table)
-        bl_l = bl.tolist()
-        counts: Counter[bytes] = Counter()
-        pair_counts: Counter[bytes] = Counter()
-        pos = 0
-        b_i = 0
-        n_bounds = len(bounds)
-        prev_start = -1
-        prev_len = 0
-        while pos < n:
-            while b_i < n_bounds and bounds[b_i] <= pos:
-                b_i += 1
-                prev_start = -1  # pairs must not span a string boundary
-            L = bl_l[pos]
-            if L:
-                counts[sample[pos : pos + L]] += 1
-            else:
-                L = 1
-                counts[sample[pos : pos + 1]] += 1
-            if prev_start >= 0 and prev_len + L <= MAX_SYMBOL_LEN:
-                pair_counts[sample[prev_start : pos + L]] += 1
-            prev_start, prev_len = pos, L
-            pos += L
-        gain: dict[bytes, int] = {s: c * len(s) for s, c in counts.items()}
-        for s, c in pair_counts.items():
-            gain[s] = gain.get(s, 0) + c * len(s)
-        ranked = sorted(gain, key=lambda s: (gain[s], s), reverse=True)
-        # guarantee coverage of every distinct byte (an escape costs 2 bytes,
-        # so a present single byte is always worth a slot over a miss)
-        singles = sorted(distinct_singles,
-                         key=lambda s: gain.get(s, 0), reverse=True)[:max_symbols]
-        chosen: list[bytes] = list(singles)
-        seen = set(chosen)
-        for s in ranked:
-            if len(chosen) >= max_symbols:
-                break
-            if s not in seen:
-                chosen.append(s)
-                seen.add(s)
-        table = chosen
+        cand = native.fsst_train_count(buf, seg_lengths, bl)
+        if cand is not None:
+            table = _rank_counted(buf, *cand, max_symbols)
+        else:
+            table = _rank_walked(sample, bl, bounds, distinct_singles,
+                                 max_symbols)
     return table
+
+
+def _rank_walked(sample: bytes, bl: np.ndarray, bounds: list[int],
+                 distinct_singles: list[bytes],
+                 max_symbols: int) -> list[bytes]:
+    """One training iteration without the C kernel: walk the greedy
+    tokens (``bl[pos]`` bytes, 1 when 0), count each token and each
+    adjacent pair of <= MAX_SYMBOL_LEN bytes inside one string, and keep
+    the best candidates by gain = count x length (see train)."""
+    n = len(sample)
+    bl_l = bl.tolist()
+    counts: Counter[bytes] = Counter()
+    pair_counts: Counter[bytes] = Counter()
+    pos = 0
+    b_i = 0
+    n_bounds = len(bounds)
+    prev_start = -1
+    prev_len = 0
+    while pos < n:
+        while b_i < n_bounds and bounds[b_i] <= pos:
+            b_i += 1
+            prev_start = -1  # pairs must not span a string boundary
+        L = bl_l[pos]
+        if L:
+            counts[sample[pos : pos + L]] += 1
+        else:
+            L = 1
+            counts[sample[pos : pos + 1]] += 1
+        if prev_start >= 0 and prev_len + L <= MAX_SYMBOL_LEN:
+            pair_counts[sample[prev_start : pos + L]] += 1
+        prev_start, prev_len = pos, L
+        pos += L
+    gain: dict[bytes, int] = {s: c * len(s) for s, c in counts.items()}
+    for s, c in pair_counts.items():
+        gain[s] = gain.get(s, 0) + c * len(s)
+    ranked = sorted(gain, key=lambda s: (gain[s], s), reverse=True)
+    # guarantee coverage of every distinct byte (an escape costs 2 bytes,
+    # so a present single byte is always worth a slot over a miss)
+    singles = sorted(distinct_singles,
+                     key=lambda s: gain.get(s, 0), reverse=True)[:max_symbols]
+    chosen: list[bytes] = list(singles)
+    seen = set(chosen)
+    for s in ranked:
+        if len(chosen) >= max_symbols:
+            break
+        if s not in seen:
+            chosen.append(s)
+            seen.add(s)
+    return chosen
+
+
+def _rank_counted(buf: np.ndarray, syms: np.ndarray, lens: np.ndarray,
+                  gains: np.ndarray, max_symbols: int) -> list[bytes]:
+    """_rank_walked's choice from native.fsst_train_count's candidates:
+    every byte of the sample first, by gain descending and byte value
+    ascending on ties, then the multi-byte candidates by (gain, bytes)
+    descending. Bytes compare as Python ``bytes`` do: big-endian padded
+    value first, then length (a prefix sorts first)."""
+    one = lens == 1
+    g1 = np.zeros(256, dtype=np.int64)
+    g1[syms[one].astype(np.intp)] = gains[one]
+    present = np.flatnonzero(np.bincount(buf, minlength=256))
+    singles = present[np.argsort(-g1[present], kind="stable")][:max_symbols]
+    multi = ~one
+    ms, ml = syms[multi], lens[multi]
+    order = np.lexsort((ml, ms.byteswap(), gains[multi]))[::-1]
+    order = order[: max_symbols - len(singles)]
+    return [bytes([b]) for b in singles.tolist()] + [
+        v.to_bytes(ln, "little")
+        for v, ln in zip(ms[order].tolist(), ml[order].tolist())]
 
 
 def serialize_table(table: list[bytes]) -> bytes:

@@ -279,6 +279,21 @@ def load():
         c_int64, c_int64,                       # n, width
         POINTER(c_uint64),                      # out
     ]
+    lib.str_split_dedup.restype = c_int64
+    lib.str_split_dedup.argtypes = [
+        POINTER(c_int32), c_int64,              # offs, n_rows
+        POINTER(c_uint8), c_int64,              # data, sep (-1 = none)
+        POINTER(c_int64), POINTER(c_int32),     # row_counts (nullable), ids
+        POINTER(c_int32), POINTER(c_uint8),     # u_offs, u_data
+    ]
+    lib.fsst_train_count.restype = c_int64
+    lib.fsst_train_count.argtypes = [
+        POINTER(c_uint8), c_int64,              # buf (n+8 readable), n
+        POINTER(c_int64), c_int64,              # str_lens, n_str
+        POINTER(c_int64),                       # match_len
+        POINTER(c_uint64), POINTER(c_uint8),    # out_sym, out_len
+        POINTER(c_int64),                       # out_gain
+    ]
     _LIB = lib
     return lib
 
@@ -471,6 +486,113 @@ def str_gather_join(offsets, data, idx, counts=None, sep: bytes = b""):
     out = np.empty(total + 32, dtype=np.uint8)     # 32-byte block stores
     lib.str_gather_join(*args, out_offs.ctypes.data_as(p_i32), _u8p(out))
     return out_offs, out[:total]
+
+
+def str_split_dedup(offsets, data, n_rows: int, sep: int | None = None):
+    """C split-and-dedup of an Arrow `string` array given as int32
+    ``offsets`` (n_rows + 1 entries) into uint8 ``data``: its values are
+    split on the byte ``sep`` (whole values when None) and the segments
+    dictionary-encoded. Returns (per-row segment counts int64, or None
+    when ``sep`` is None; int32 segment ids in first-occurrence order;
+    the unique values' int32 offsets and uint8 data), or None when the
+    native library is unavailable. The same as Arrow
+    ``dictionary_encode(split_pattern(arr, sep).values)``
+    (tests/test_native.py); None also when the kernel cannot allocate
+    its hash table. Raises ValueError on offsets that are not
+    n_rows + 1 non-decreasing positions within ``data`` and on a
+    ``sep`` outside 0..255."""
+    import numpy as np
+
+    lib = load()
+    if lib is None:
+        return None
+    offsets = np.ascontiguousarray(offsets, dtype=np.int32)
+    data = np.ascontiguousarray(data, dtype=np.uint8)
+    if n_rows < 0 or offsets.size != n_rows + 1:
+        raise ValueError(f"str_split_dedup: {offsets.size} offsets for "
+                         f"{n_rows} rows")
+    if (int(offsets[0]) < 0 or int(offsets[-1]) > data.size
+            or bool((np.diff(offsets) < 0).any())):
+        raise ValueError("str_split_dedup: offsets are not non-decreasing "
+                         f"within {data.size} data bytes")
+    if sep is not None and not 0 <= sep <= 255:
+        raise ValueError(f"str_split_dedup: separator {sep} not in 0..255")
+    if data.size == 0:
+        data = np.zeros(1, dtype=np.uint8)
+    p_i32 = ctypes.POINTER(ctypes.c_int32)
+    p_i64 = ctypes.POINTER(ctypes.c_int64)
+    c_sep = -1 if sep is None else sep
+    head = (offsets.ctypes.data_as(p_i32), n_rows, _u8p(data), c_sep)
+    n_seg = lib.str_split_dedup(*head, None, None, None, None)
+    if n_seg > _INT32_MAX:
+        raise ValueError(f"str_split_dedup: {n_seg} segments, more than "
+                         "int32 ids can number")
+    counts = None if sep is None else np.empty(max(n_rows, 1), np.int64)
+    ids = np.empty(max(n_seg, 1), dtype=np.int32)
+    u_offs = np.empty(n_seg + 1, dtype=np.int32)
+    span = int(offsets[-1]) - int(offsets[0])
+    u_data = np.empty(max(span, 1), dtype=np.uint8)
+    k = lib.str_split_dedup(
+        *head, None if counts is None else counts.ctypes.data_as(p_i64),
+        ids.ctypes.data_as(p_i32), u_offs.ctypes.data_as(p_i32),
+        _u8p(u_data))
+    if k < 0:
+        return None
+    ub = int(u_offs[k])
+    # the unique values usually fill a small share of the span: keep a
+    # right-sized copy rather than the whole buffer alive
+    u_data = u_data[:ub].copy() if 2 * ub < u_data.size else u_data[:ub]
+    return (None if counts is None else counts[:n_rows], ids[:n_seg],
+            u_offs[:k + 1].copy(), u_data)
+
+
+def fsst_train_count(buf, str_lens, match_len):
+    """The counting walk of one fsst.train iteration in C: over the
+    strings of ``str_lens`` concatenated in uint8 ``buf``, every greedy
+    token (``match_len[pos]`` bytes, 1 when 0) and every adjacent token
+    pair of <= 8 bytes inside one string is a candidate, worth its length
+    per occurrence. Returns the distinct candidates as (uint64 symbol
+    bytes, little-endian; uint8 lengths; int64 gains), unordered, or None
+    when the native library is unavailable or cannot allocate its hash
+    table. Raises ValueError on lengths
+    that are negative or do not sum to len(buf), and on a ``match_len``
+    that is not one entry of 0..8 per byte or runs past its string."""
+    import numpy as np
+
+    lib = load()
+    if lib is None:
+        return None
+    buf = np.ascontiguousarray(buf, dtype=np.uint8)
+    n = buf.size
+    sl = check_runs(str_lens, n, "fsst_train_count: str_lens")
+    ml = _as_int64(match_len)
+    if ml.size != n:
+        raise ValueError(f"fsst_train_count: {ml.size} match lengths for "
+                         f"{n} bytes")
+    if n:
+        if int(ml.min()) < 0 or int(ml.max()) > 8:
+            raise ValueError("fsst_train_count: a match length is outside "
+                             "0..8")
+        # bytes left in the containing string, per position
+        left = np.repeat(np.cumsum(sl), sl) - np.arange(n, dtype=np.int64)
+        if bool((ml > left).any()):
+            raise ValueError("fsst_train_count: a match runs past the end "
+                             "of its string")
+    padded = np.zeros(n + 8, dtype=np.uint8)       # 8-byte loads
+    padded[:n] = buf
+    cap = max(2 * n, 1)
+    syms = np.empty(cap, dtype=np.uint64)
+    lens = np.empty(cap, dtype=np.uint8)
+    gains = np.empty(cap, dtype=np.int64)
+    p_i64 = ctypes.POINTER(ctypes.c_int64)
+    m = lib.fsst_train_count(
+        _u8p(padded), n, sl.ctypes.data_as(p_i64), sl.size,
+        ml.ctypes.data_as(p_i64),
+        syms.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64)), _u8p(lens),
+        gains.ctypes.data_as(p_i64))
+    if m < 0:
+        return None
+    return syms[:m], lens[:m], gains[:m]
 
 
 def winnow_select(vals, counts, w: int):

@@ -7,10 +7,13 @@
  * live here (greedy FSST parse: each token's start depends on the previous
  * token's length; PNG defilter: each pixel depends on the previous pixel),
  * plus the decode gather-join, which writes each output string once where
- * Arrow take + binary_join copy it twice.
+ * Arrow take + binary_join copy it twice, and the two hot loops of string
+ * codec selection: one split-and-dedup pass per segment dictionary, and
+ * FSST training's counting walk.
  *
- * Plain C99 + stdint, no libc beyond memcpy/memset, little-endian host
- * (the same assumption functions/fsst.py makes and guards at import).
+ * Plain C99 + stdint (plus GCC/Clang's __builtin_ctzll), no libc beyond
+ * string.h and malloc/qsort, little-endian host (the same assumption
+ * functions/fsst.py makes and guards at import).
  */
 
 #include <stdint.h>
@@ -1026,4 +1029,275 @@ done:
     free(order); free(leaf_w); free(node_w); free(kid0); free(kid1);
     free(depth); free(raw); free(bits);
     return ret;
+}
+
+/* ------------------------------------------------------------------
+ * String codec selection: the segment dictionary and FSST training.
+ * ------------------------------------------------------------------ */
+
+#define BYTE_ONES  0x0101010101010101ULL
+#define BYTE_HIGHS 0x8080808080808080ULL
+
+/* Hash of a segment: its 8-byte little-endian words folded in order, a
+ * last partial word zero-filled, then its length. seg_end computes the
+ * same value while it looks for the separator. */
+static inline uint64_t hash_word(uint64_t h, uint64_t w)
+{
+    h = (h ^ w) * HASH_MULT2;
+    return h ^ (h >> 29);
+}
+
+static inline uint64_t hash_done(uint64_t h, int64_t len)
+{
+    return mix64(h ^ ((uint64_t)len * P_MULT));
+}
+
+static inline uint64_t bytes_hash(const uint8_t *p, int64_t len)
+{
+    uint64_t h = 0;
+    int64_t i = 0;
+    for (; i + 8 <= len; i += 8) {
+        uint64_t w;
+        memcpy(&w, p + i, 8);
+        h = hash_word(h, w);
+    }
+    if (i < len) {
+        uint64_t w = 0;
+        memcpy(&w, p + i, (size_t)(len - i));
+        h = hash_word(h, w);
+    }
+    return hash_done(h, len);
+}
+
+/* The first byte equal to sep in [p, end), or end, found one 8-byte word
+ * at a time (the lowest flagged byte of the zero-byte test is exact);
+ * *hash gets bytes_hash of the bytes before it. */
+static inline const uint8_t *seg_end(const uint8_t *p, const uint8_t *end,
+                                     uint8_t sep, uint64_t *hash)
+{
+    const uint64_t sm = (uint64_t)sep * BYTE_ONES;
+    const uint8_t *s = p;
+    uint64_t h = 0;
+    for (;;) {
+        const int64_t rem = end - s;
+        uint64_t w = 0, z;
+        if (rem >= 8) {
+            memcpy(&w, s, 8);
+            z = ((w ^ sm) - BYTE_ONES) & ~(w ^ sm) & BYTE_HIGHS;
+        } else {
+            if (rem > 0) memcpy(&w, s, (size_t)rem);
+            z = ((w ^ sm) - BYTE_ONES) & ~(w ^ sm) & BYTE_HIGHS
+                & LEN_MASK[rem];
+        }
+        if (z || rem <= 8) {
+            const int64_t i = z ? __builtin_ctzll(z) >> 3 : rem;
+            if (i) h = hash_word(h, w & LEN_MASK[i]);
+            *hash = hash_done(h, (s - p) + i);
+            return s + i;
+        }
+        h = hash_word(h, w);
+        s += 8;
+    }
+}
+
+typedef struct { uint64_t h; int64_t id; } sd_slot;     /* id -1: empty */
+
+/* Double an open-addressing table of cap slots; returns the new one, or
+ * NULL on allocation failure (the old one is freed either way). */
+static sd_slot *sd_grow(sd_slot *t, int64_t cap)
+{
+    sd_slot *g = (sd_slot *)malloc((size_t)(2 * cap) * sizeof(sd_slot));
+    if (g) {
+        const uint64_t mask = (uint64_t)(2 * cap - 1);
+        for (int64_t s = 0; s < 2 * cap; s++) g[s].id = -1;
+        for (int64_t s = 0; s < cap; s++) {
+            if (t[s].id < 0) continue;
+            uint64_t j = t[s].h & mask;
+            while (g[j].id >= 0) j = (j + 1) & mask;
+            g[j] = t[s];
+        }
+    }
+    free(t);
+    return g;
+}
+
+/* Split the n_rows values of an Arrow `string` array (offs[n_rows + 1]
+ * into data) on the byte sep, or take whole values when sep < 0, and
+ * dictionary-encode the segments: ids[j] numbers segment j's value in
+ * first-occurrence order, the unique values go to u_offs / u_data as an
+ * Arrow `string` array, and row_counts[i] (when not NULL) gets row i's
+ * segment count. A row holding c separators gives c + 1 segments, empty
+ * ones included, as Arrow split_pattern does.
+ *
+ * Two calls. With ids NULL, a read-only pass returns the segment count.
+ * Then the caller allocates and calls again; that call returns the
+ * number of unique values, or -1 on allocation failure.
+ *
+ * Trusts (native.str_split_dedup checks): offs is non-decreasing within
+ * data; ids holds the first call's count, u_offs one more, u_data
+ * offs[n_rows] - offs[0] bytes and row_counts n_rows entries.
+ */
+int64_t str_split_dedup(const int32_t *offs, int64_t n_rows,
+                        const uint8_t *data, int64_t sep,
+                        int64_t *row_counts, int32_t *ids,
+                        int32_t *u_offs, uint8_t *u_data)
+{
+    if (!ids) {
+        int64_t segs = n_rows;
+        if (sep >= 0)
+            for (int64_t i = offs[0]; i < offs[n_rows]; i++)
+                segs += data[i] == (uint8_t)sep;
+        return segs;
+    }
+    int64_t cap = 1024, k = 0, j = 0, ub = 0;
+    sd_slot *t = (sd_slot *)malloc((size_t)cap * sizeof(sd_slot));
+    if (!t) return -1;
+    for (int64_t s = 0; s < cap; s++) t[s].id = -1;
+    u_offs[0] = 0;
+    for (int64_t i = 0; i < n_rows; i++) {
+        const uint8_t *p = data + offs[i], *end = data + offs[i + 1];
+        const int64_t j0 = j;
+        for (;;) {
+            uint64_t h;
+            const uint8_t *q = end;
+            if (sep >= 0)
+                q = seg_end(p, end, (uint8_t)sep, &h);
+            else
+                h = bytes_hash(p, end - p);
+            const int64_t len = q - p;
+            const uint64_t mask = (uint64_t)(cap - 1);
+            uint64_t s = h & mask;
+            for (;;) {
+                const int64_t id = t[s].id;
+                if (id < 0) {                       /* a new value */
+                    memcpy(u_data + ub, p, (size_t)len);
+                    ub += len;
+                    u_offs[k + 1] = (int32_t)ub;
+                    t[s].h = h;
+                    t[s].id = k;
+                    ids[j] = (int32_t)k++;
+                    if (2 * k > cap) {
+                        t = sd_grow(t, cap);
+                        if (!t) return -1;
+                        cap *= 2;
+                    }
+                    break;
+                }
+                if (t[s].h == h && u_offs[id + 1] - u_offs[id] == len
+                    && memcmp(u_data + u_offs[id], p, (size_t)len) == 0) {
+                    ids[j] = (int32_t)id;
+                    break;
+                }
+                s = (s + 1) & mask;
+            }
+            j++;
+            if (q == end) break;
+            p = q + 1;
+        }
+        if (row_counts) row_counts[i] = j - j0;
+    }
+    free(t);
+    return k;
+}
+
+typedef struct { uint64_t sym; int64_t gain; int64_t len; } tc_slot;
+/* an open-addressing table of candidates; a slot with len 0 is empty */
+typedef struct { tc_slot *t; int64_t cap, used; } tc_table;
+
+static inline uint64_t tc_hash(uint64_t sym, int64_t len)
+{
+    return mix64(sym ^ ((uint64_t)len * LEN_SALT));
+}
+
+/* Add len to the gain of candidate (sym, len); returns -1 on allocation
+ * failure. The table doubles before it passes half full. */
+static int tc_add(tc_table *tt, uint64_t sym, int64_t len)
+{
+    if (2 * (tt->used + 1) > tt->cap) {
+        const int64_t cap2 = 2 * tt->cap;
+        tc_slot *g = (tc_slot *)calloc((size_t)cap2, sizeof(tc_slot));
+        if (!g) return -1;
+        for (int64_t o = 0; o < tt->cap; o++) {
+            if (!tt->t[o].len) continue;
+            uint64_t r = tc_hash(tt->t[o].sym, tt->t[o].len)
+                         & (uint64_t)(cap2 - 1);
+            while (g[r].len) r = (r + 1) & (uint64_t)(cap2 - 1);
+            g[r] = tt->t[o];
+        }
+        free(tt->t);
+        tt->t = g;
+        tt->cap = cap2;
+    }
+    const uint64_t mask = (uint64_t)(tt->cap - 1);
+    uint64_t s = tc_hash(sym, len) & mask;
+    tc_slot *t = tt->t;
+    while (t[s].len && (t[s].len != len || t[s].sym != sym))
+        s = (s + 1) & mask;
+    if (!t[s].len) {
+        t[s].sym = sym;
+        t[s].len = len;
+        tt->used++;
+    }
+    t[s].gain += len;
+    return 0;
+}
+
+/* The counting walk of one FSST training iteration (functions/fsst.py
+ * train): walk each of the n_str strings (str_lens, concatenated in buf)
+ * token by token, a token being the match_len[pos] bytes at pos (1 when
+ * 0), and add len to the gain of each token and of each adjacent token
+ * pair of <= 8 bytes inside one string. A candidate is (sym, len): its
+ * bytes as a little-endian uint64 masked to len bytes.
+ *
+ * Writes each distinct candidate once, in no particular order, to
+ * out_sym / out_len / out_gain; returns their count, or -1 on
+ * allocation failure.
+ *
+ * Trusts (native.fsst_train_count checks): buf is readable n + 8 bytes;
+ * str_lens are >= 0 and sum to n; match_len holds n entries of 0..8,
+ * none past the end of its string; the outputs hold 2n entries (a token
+ * and a pair per position at most).
+ */
+int64_t fsst_train_count(const uint8_t *buf, int64_t n,
+                         const int64_t *str_lens, int64_t n_str,
+                         const int64_t *match_len,
+                         uint64_t *out_sym, uint8_t *out_len,
+                         int64_t *out_gain)
+{
+    (void)n;
+    tc_table tt = {(tc_slot *)calloc(4096, sizeof(tc_slot)), 4096, 0};
+    if (!tt.t) return -1;
+    int64_t start = 0;
+    for (int64_t k = 0; k < n_str; k++) {
+        const int64_t end = start + str_lens[k];
+        int64_t pos = start, prev = -1, prev_len = 0;
+        while (pos < end) {
+            const int64_t L = match_len[pos] ? match_len[pos] : 1;
+            uint64_t w;
+            memcpy(&w, buf + pos, 8);               /* padded past n */
+            if (tc_add(&tt, w & LEN_MASK[L], L)) goto fail;
+            if (prev >= 0 && prev_len + L <= 8) {
+                memcpy(&w, buf + prev, 8);
+                if (tc_add(&tt, w & LEN_MASK[prev_len + L], prev_len + L))
+                    goto fail;
+            }
+            prev = pos;
+            prev_len = L;
+            pos += L;
+        }
+        start = end;
+    }
+    int64_t m = 0;
+    for (int64_t s = 0; s < tt.cap; s++) {
+        if (!tt.t[s].len) continue;
+        out_sym[m] = tt.t[s].sym;
+        out_len[m] = (uint8_t)tt.t[s].len;
+        out_gain[m] = tt.t[s].gain;
+        m++;
+    }
+    free(tt.t);
+    return m;
+fail:
+    free(tt.t);
+    return -1;
 }

@@ -11,7 +11,7 @@ import os
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from fileconvert_spark import native
@@ -192,6 +192,139 @@ def test_fsst_decode_kernel_matches_on_any_stream(enc, cuts, n_symbols):
     offs, data = native.fsst_decode(enc, el, table)
     assert data.tobytes() == dec
     assert np.array_equal(np.diff(offs), dec_lens)
+
+
+def _arrow_split_dedup(arr, sep):
+    """What str_split_dedup must equal: Arrow's dictionary_encode of the
+    split_pattern segments (of the whole values when ``sep`` is None)."""
+    import pyarrow.compute as pc
+
+    if sep is None:
+        de = pc.dictionary_encode(arr)
+        return None, de
+    lines = pc.split_pattern(arr, sep)
+    counts = pc.list_value_length(lines).to_pylist()
+    return counts, pc.dictionary_encode(lines.values)
+
+
+def _check_split_dedup(arr, sep):
+    from fileconvert_spark.functions import codecs
+
+    got = codecs._split_dedup(arr, sep)
+    ref = _no_native(codecs._split_dedup, arr, sep)
+    counts, de = _arrow_split_dedup(arr, sep)
+    for c, ids, uniques in (got, ref):
+        if sep is None:
+            assert c is None
+        else:
+            assert c.dtype == np.int64 and c.tolist() == counts
+        assert ids.dtype == np.int32
+        assert ids.tolist() == de.indices.to_pylist()
+        assert uniques.type == de.dictionary.type == arr.type
+        assert uniques.equals(de.dictionary)
+
+
+_SPLIT_VALUES = st.lists(st.text(alphabet="ab/\n é中🎉", max_size=8),
+                         max_size=30)
+
+
+@requires_native
+@_DECODE
+@given(_SPLIT_VALUES, st.sampled_from(["\n", "/", None]),
+       st.integers(min_value=0, max_value=3),
+       st.integers(min_value=0, max_value=3))
+@example([], "/", 0, 0)
+@example(["", "", ""], "\n", 0, 0)
+@example(["/a", "a/", "a//b", "/", "//"], "/", 1, 1)
+@example(["same/value"] * 40, "/", 0, 0)
+@example([f"v{i}/é{i}" for i in range(60)], None, 2, 0)
+@example([f"v{i}/é{i}" for i in range(60)], "/", 0, 2)
+def test_split_dedup_matches_arrow(values, sep, head, tail):
+    """Property: the C split-and-dedup equals Arrow split_pattern +
+    dictionary_encode (and the no-native path) on empty arrays and
+    values, separators at the start, the end and twice in a row,
+    multi-byte UTF-8, all-equal and all-unique values, and arrays sliced
+    at a non-zero offset."""
+    import pyarrow as pa
+
+    base = pa.array(["pre/x"] * head + values + ["post\n"] * tail,
+                    type=pa.string())
+    _check_split_dedup(base.slice(head, len(values)), sep)
+
+
+@requires_native
+@_DECODE
+@given(st.lists(st.binary(max_size=10).map(
+    lambda b: b.replace(b"a", b"\x00").replace(b"b", b"/")), max_size=30),
+       st.sampled_from(["/", "\n", None]),
+       st.integers(min_value=0, max_value=2))
+@example([b"\x00/\x00", b"/", b"\x00\x00", b"\x00/\x00"], "/", 1)
+def test_split_dedup_binary_views(values, sep, skip):
+    """Property: binary values holding NUL and separator bytes, as a
+    binary array and as the unvalidated string view the encoder makes of
+    it, split and dedup the same on both paths."""
+    import pyarrow as pa
+
+    from fileconvert_spark.operators.encode import _binary_as_string_view
+
+    arr = pa.array([b"x"] * skip + values, type=pa.binary()).slice(skip)
+    _check_split_dedup(arr, sep)
+    _check_split_dedup(_binary_as_string_view(arr), sep)
+
+
+def _train_pair(sample, lengths, max_symbols):
+    from fileconvert_spark.functions import fsst
+
+    got = fsst.train(sample, lengths=lengths, max_symbols=max_symbols)
+    ref = _no_native(lambda: fsst.train(sample, lengths=lengths,
+                                        max_symbols=max_symbols))
+    assert got == ref
+    return got
+
+
+@requires_native
+@_DECODE
+@given(st.binary(max_size=3000),
+       st.lists(st.integers(min_value=0, max_value=3000), max_size=30),
+       st.booleans(),
+       st.sampled_from([255, 40, 3]),
+       st.sampled_from([None, b"ab", b"abc\x00/\n\xff\xfe", b"\x00"]))
+def test_fsst_train_kernel_matches_python_walk(data, cuts, use_lengths,
+                                               max_symbols, alphabet):
+    """Property: training with the C counting walk and the NumPy ranking
+    returns the same table as the Python walk with sorted(), with and
+    without string lengths (lengths that overrun the sample included),
+    on samples of <= 8 distinct bytes and on tie-heavy ones (tiny
+    alphabets give many candidates of equal gain)."""
+    if alphabet is not None:
+        data = bytes(alphabet[b % len(alphabet)] for b in data)
+    lengths = None
+    if use_lengths:
+        bounds = sorted(set(cuts)) + [len(data)]
+        lengths = np.diff([0] + bounds).clip(0)
+    _train_pair(data, lengths, max_symbols)
+
+
+@requires_native
+@settings(max_examples=8, deadline=None, database=None)
+@given(st.binary(min_size=1, max_size=400),
+       st.integers(min_value=1, max_value=500),
+       st.sampled_from([None, b"ab\n", bytes(range(256))]))
+def test_fsst_train_kernel_matches_on_truncated_samples(unit, str_len,
+                                                        alphabet):
+    """Samples longer than SAMPLE_BYTES are cut to it, the last string
+    with them; the two paths still give the same table, including on a
+    sample of all 256 byte values (only the singles fit the table)."""
+    from fileconvert_spark.functions import fsst
+
+    if alphabet is not None:
+        unit = bytes(alphabet[b % len(alphabet)] for b in unit)
+    sample = (unit * (fsst.SAMPLE_BYTES // len(unit) + 2))
+    n_str = -(-len(sample) // str_len)
+    lengths = np.full(n_str, str_len, dtype=np.int64)
+    table = _train_pair(sample, lengths, 255)
+    assert len(sample) > fsst.SAMPLE_BYTES
+    assert len(table) <= 255
 
 
 @pytest.mark.parametrize("enc,lengths,match", [
@@ -750,6 +883,42 @@ _CRASH_CASES = {
     "fsst_decode_negative_length":
         "native.fsst_decode(b'\\x00\\x00\\x00', np.array([1 << 20, 3 - (1 << 20)]),"
         " [b'abc'])",
+    # the split kernel walks n_rows + 1 offsets into the data
+    "str_split_dedup_descending_offsets":
+        "native.str_split_dedup(np.array([0, 3, 1], np.int32),"
+        " np.zeros(4, np.uint8), 2, 47)",
+    "str_split_dedup_offsets_past_data":
+        "native.str_split_dedup(np.array([0, 1 << 20], np.int32),"
+        " np.zeros(4, np.uint8), 1, 47)",
+    "str_split_dedup_rows_past_offsets":
+        "native.str_split_dedup(np.array([0, 1, 2], np.int32),"
+        " np.zeros(4, np.uint8), 1 << 20, 47)",
+    "str_split_dedup_rows_short_of_offsets":
+        "native.str_split_dedup(np.array([0, 1, 2], np.int32),"
+        " np.zeros(4, np.uint8), 1, None)",
+    # 256 would split on NUL bytes, a negative one on nothing
+    "str_split_dedup_separator_past_255":
+        "native.str_split_dedup(np.array([0, 2], np.int32),"
+        " np.zeros(2, np.uint8), 1, 256)",
+    "str_split_dedup_negative_separator":
+        "native.str_split_dedup(np.array([0, 2], np.int32),"
+        " np.zeros(2, np.uint8), 1, -1)",
+    # the counting walk reads match_len[pos] and 8 bytes per candidate
+    "fsst_train_count_match_lengths_short":
+        "native.fsst_train_count(np.zeros(64, np.uint8), np.array([64]),"
+        " np.zeros(1, np.int64))",
+    "fsst_train_count_match_length_past_8":
+        "native.fsst_train_count(np.zeros(64, np.uint8), np.array([64]),"
+        " np.array([9] + [0] * 63))",
+    "fsst_train_count_match_past_string_end":
+        "native.fsst_train_count(np.zeros(8, np.uint8), np.array([4, 4]),"
+        " np.array([0, 0, 0, 4, 0, 0, 0, 0]))",
+    "fsst_train_count_negative_match_length":
+        "native.fsst_train_count(np.zeros(8, np.uint8), np.array([8]),"
+        " np.array([0, 0, 0, -(1 << 40), 0, 0, 0, 0]))",
+    "fsst_train_count_lengths_past_sample":
+        "native.fsst_train_count(np.zeros(8, np.uint8), np.array([1 << 40]),"
+        " np.zeros(8, np.int64))",
 }
 
 

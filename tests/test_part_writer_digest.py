@@ -55,6 +55,17 @@ def _dir_digest(out_dir: str) -> str:
 
 
 def test_part_writer_and_compaction_digest_pinned(tmp_path):
+    _check_writer_digest(tmp_path)
+
+
+def test_part_writer_digest_pinned_without_native(tmp_path, monkeypatch):
+    """The Arrow/NumPy paths (FCS_NO_NATIVE=1) write the same bytes as
+    the compiled kernels."""
+    monkeypatch.setenv("FCS_NO_NATIVE", "1")
+    _check_writer_digest(tmp_path)
+
+
+def _check_writer_digest(tmp_path) -> None:
     E._WORKER_FSST_CACHE.tables.clear()
     E._WORKER_FSST_CACHE.uses.clear()
     E._PAGE_CACHE.clear()

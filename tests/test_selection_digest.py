@@ -11,6 +11,9 @@ codec, payload, dict, meta).
 
 The pinned digests were generated on commit 7947966, before the trial
 pruning existed, and pass unchanged on both that commit and this one.
+Each digest is also checked with the compiled kernels switched off
+(FCS_NO_NATIVE=1): the Arrow/NumPy paths must select and write the same
+bytes.
 """
 
 import hashlib
@@ -57,6 +60,24 @@ def _selection_digest(tables: list[pa.Table], chunk_rows: int) -> str:
 
 
 def test_codefiles_selection_digest_pinned():
+    _check_codefiles_digest()
+
+
+def test_codefiles_selection_digest_pinned_without_native(monkeypatch):
+    monkeypatch.setenv("FCS_NO_NATIVE", "1")
+    _check_codefiles_digest()
+
+
+def test_sf_string_selection_digest_pinned():
+    _check_sf_digest()
+
+
+def test_sf_string_selection_digest_pinned_without_native(monkeypatch):
+    monkeypatch.setenv("FCS_NO_NATIVE", "1")
+    _check_sf_digest()
+
+
+def _check_codefiles_digest() -> None:
     from fileconvert_spark.corpus import make_codefiles
 
     pdf = make_codefiles(8000, seed=411)
@@ -64,7 +85,7 @@ def test_codefiles_selection_digest_pinned():
     assert _selection_digest([tbl], chunk_rows=500) == CODEFILES_DIGEST
 
 
-def test_sf_string_selection_digest_pinned():
+def _check_sf_digest() -> None:
     d = sf_dir("sf0.001")
     if not os.path.isdir(d):
         pytest.skip("testdata missing")

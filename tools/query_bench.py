@@ -8,10 +8,12 @@ commit and checked out once into a cached ``git worktree`` under /tmp.
 Each rep starts one fresh JVM per ref, alternating which ref goes first
 (sequential runs on one host drift: the first pays the cold caches).
 The JVM has the bench.py shape: ``local[$SPARK_GRAFT_CPUS]``,
-``shuffle_partitions = max(cpus, 8)``, Python workers warmed with an
-engine import. Each query gets one warm-up run, then the minimum of 3
-timed runs of bench.py's action (``count()`` for dedup_minhash_docs,
-``collect()`` otherwise).
+``shuffle_partitions = max(cpus, 8)``, every pooled Python worker warmed
+with the engine and pandas imports. Every query runs twice untimed
+(two passes over the list) before the first timed run; then three timed
+passes go round-robin over the list, and each query keeps the minimum of
+its 3 timed runs of bench.py's action (``count()`` for
+dedup_minhash_docs, ``collect()`` otherwise).
 
 Writes one JSON document (stdout without ``--out``). Per query and ref:
 ``walls`` (one min-of-3 per rep), ``median_s``, the formatted physical
@@ -35,6 +37,7 @@ import time
 from contextlib import nullcontext, redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WARM_PASSES = 2     # untimed runs of every query before the first timed one
 
 # node names of Spark's Python-evaluation operators: *EvalPython*,
 # Arrow{Aggregate,Window}Python, MapIn{Arrow,Pandas},
@@ -61,13 +64,22 @@ def _action(name: str, df) -> None:
 
 
 def _warm_fn(batches):
+    # pyarrow imports pandas lazily, on its first conversion of Python or
+    # pandas data, which any real UDF makes: ~0.3 s on a worker's first
+    # UDF. A 1-row mapInArrow probe took 0.40-0.56 s on each worker's
+    # first use after an engine-only warm-up, 0.18-0.25 s after this one,
+    # and 0.10-0.17 s once warm (local[4], 4-core host).
+    import pandas  # noqa: F401
+    import pyarrow.pandas_compat  # noqa: F401
+
     import fileconvert_spark.functions.codecs  # noqa: F401
 
     yield from batches
 
 
 def run_child(tree: str, sf_dir: str, names: list[str], out_path: str) -> None:
-    """One fresh JVM over ``tree``'s engine: warm-up + min of 3 per query."""
+    """One fresh JVM over ``tree``'s engine: warm-up passes, then the
+    min of 3 round-robin timed runs per query."""
     os.chdir(tree)
     sys.path.insert(0, tree)
     import fileconvert_spark  # noqa: F401  (malloc tuning before numpy)
@@ -80,24 +92,37 @@ def run_child(tree: str, sf_dir: str, names: list[str], out_path: str) -> None:
                       shuffle_partitions=max(cpus, 8), extra_conf={
                           "spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
+    # cpus * 4 tasks start cpus at once, so every pooled worker runs one
     spark.range(cpus * 4, numPartitions=cpus * 4) \
         .mapInArrow(_warm_fn, "id long").count()
     qmap = E.queries()
-    res = {}
-    for name in names:
-        try:
-            df = qmap[name](spark, sf_dir)
-            plan = formatted_plan(df)
-            _action(name, df)  # warm-up
-            best = float("inf")
-            for _ in range(3):
+    res, plans, walls = {}, {}, {}
+    # The JVM keeps getting faster over its first ~15 query runs (JIT):
+    # knn_bruteforce ran 1.15, 0.86, 0.77 ... 0.62 s in its first 8 runs,
+    # then 0.50-0.60 s after 8 runs of knn_ivf. So every query runs
+    # WARM_PASSES times before the first timed run, and the 3 timed runs
+    # go round-robin over the list, so the query order moves little time
+    # between queries.
+    for p in range(WARM_PASSES + 3):
+        for name in names:
+            if name in res:
+                continue
+            try:
                 t0 = time.perf_counter()
-                _action(name, qmap[name](spark, sf_dir))
-                best = min(best, time.perf_counter() - t0)
-            res[name] = {"wall_s": round(best, 4), "plan": plan,
-                         "python_eval_nodes": python_eval_nodes(plan)}
-        except Exception as e:  # noqa: BLE001 - record it, run the rest
-            res[name] = {"error": f"{type(e).__name__}: {e}"[:2000]}
+                df = qmap[name](spark, sf_dir)
+                if not p:
+                    plans[name] = formatted_plan(df)
+                _action(name, df)
+                if p >= WARM_PASSES:
+                    walls.setdefault(name, []).append(
+                        time.perf_counter() - t0)
+            except Exception as e:  # noqa: BLE001 - record it, run the rest
+                res[name] = {"error": f"{type(e).__name__}: {e}"[:2000]}
+    for name in names:
+        if name not in res:
+            res[name] = {"wall_s": round(min(walls[name]), 4),
+                         "plan": plans[name],
+                         "python_eval_nodes": python_eval_nodes(plans[name])}
         print(f"# {name:32s} {res[name].get('wall_s', 'error')}",
               file=sys.stderr, flush=True)
     spark.stop()
