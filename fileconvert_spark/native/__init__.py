@@ -30,8 +30,10 @@ import os
 import subprocess
 import sys
 import tempfile
+import threading
 
 _LIB = None          # cached ctypes.CDLL (or False = tried and failed)
+_LOAD_LOCK = threading.Lock()
 _SRC_NAME = "kernels.c"
 
 
@@ -107,11 +109,21 @@ def _safe_to_load(path: str) -> bool:
 
 def load():
     """The compiled library, or None (no toolchain / disabled / failed)."""
-    global _LIB
     if os.environ.get("FCS_NO_NATIVE"):
         return None
     if _LIB is not None:
         return _LIB or None
+    # the encode column pool can make a fresh worker's first two native
+    # calls at once; both would compile into the same per-pid temp files
+    with _LOAD_LOCK:
+        if _LIB is None:
+            _load()
+    return _LIB or None
+
+
+def _load() -> None:
+    """Compile (if needed) and open the library into ``_LIB``."""
+    global _LIB
     src = _read_source()
     cc = _compiler()
     if src is None or cc is None:
@@ -295,7 +307,6 @@ def load():
         POINTER(c_int64),                       # out_gain
     ]
     _LIB = lib
-    return lib
 
 
 def _u8p(a):

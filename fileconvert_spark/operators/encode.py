@@ -5,7 +5,16 @@ executor JVM streams Arrow record batches over IPC to the Python worker,
 the kernel accumulates them into size-bounded chunks, encodes every column
 with codec auto-selection (functions/codecs.py), and emits one ``enc`` row
 per (partition, chunk, column). No RDDs, no per-row Python, no driver-side
-data movement.
+data movement. A chunk's columns encode on two threads
+(``encode_chunk_table``), which use the core the task's JVM thread
+leaves idle once it has handed over its input.
+
+A task can hold several buckets, because ``repartition(n, bucket)``
+hashes bucket ids into partitions: on seed 1 of the 100k-file bench
+corpus (``local[2]``) its 8 buckets fill 5 of 8 partitions, {1,3,7} in
+one (54 MB, ~40% of the data), {2,4} in another, and 3 tasks get none. The
+kernel keeps one buffer and one part per bucket, so parts stay keyed by
+bucket either way.
 
 Decode is one chunk decoder (``decode_chunk``) with two callers:
 plans/manifest.py ``decode_table`` reads an encoded table part by part
@@ -23,8 +32,11 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
+import threading
 import uuid
 from collections.abc import Iterator
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 
 import numpy as np
 import pyarrow as pa
@@ -262,6 +274,37 @@ def _from_int64(vals: np.ndarray, adapter: str, orig_type: pa.DataType) -> pa.Ar
 # one cache per Python worker process; workers are reused across tasks, so
 # FSST tables amortize across every chunk of a column the worker ever sees
 _WORKER_FSST_CACHE = codecs.FsstTableCache()
+
+# A chunk's top-level columns encode on this many threads (the C kernels,
+# NumPy and Arrow release the GIL). Two, not more: content is over half
+# of kernel CPU, so once it has a thread of its own a third cannot shorten
+# the chunk; and by then the task's JVM thread has handed over its input
+# and idles, so a task still keeps at most two cores busy (perfbench runs
+# local[nproc/2] for that reason). Nested fields stay on their column's
+# thread: a pool thread never submits, which with two workers could
+# deadlock.
+_COLUMN_THREADS = 2
+_COLUMN_POOL: ThreadPoolExecutor | None = None
+_COLUMN_POOL_LOCK = threading.Lock()
+
+
+def _column_pool() -> ThreadPoolExecutor:
+    """The per-process column pool, created on first use."""
+    global _COLUMN_POOL
+    with _COLUMN_POOL_LOCK:
+        if _COLUMN_POOL is None:
+            _COLUMN_POOL = ThreadPoolExecutor(
+                _COLUMN_THREADS, thread_name_prefix="fcs-encode")
+        return _COLUMN_POOL
+
+
+def _forget_column_pool() -> None:
+    # a forked child inherits the pool object but not its threads
+    global _COLUMN_POOL, _COLUMN_POOL_LOCK
+    _COLUMN_POOL, _COLUMN_POOL_LOCK = None, threading.Lock()
+
+
+os.register_at_fork(after_in_child=_forget_column_pool)
 
 
 _ZONE_MAX_STR = 64  # utf-8 bytes; longer bounds are dropped, not truncated
@@ -678,13 +721,31 @@ def encode_chunk_table(tbl: pa.Table, part_id: int, chunk_id: int,
 
     ``zone_cols``: columns that get zone-map bounds in their chunk meta
     (None = every column, the standalone/encode_df default).
+
+    The columns encode on the per-process column pool, largest first;
+    their rows come back in column order, so the output and the first
+    error raised are those of a sequential loop.
     """
+    pool = _column_pool()
+    futures: dict[str, Future] = {}
+    # largest column first, so the biggest one never starts last
+    for col in sorted(tbl.column_names, key=lambda c: -tbl.column(c).nbytes):
+        futures[col] = pool.submit(
+            encode_column, tbl.column(col),
+            cache_key=f"{cache_ns}:{col}" if cache_ns else col,
+            zone_stats=(zone_cols is None or col in zone_cols))
     rows = {name: [] for name in ENC_ARROW_SCHEMA.names}
     for col in tbl.column_names:
-        key = f"{cache_ns}:{col}" if cache_ns else col
-        fields = encode_column(
-            tbl.column(col), cache_key=key,
-            zone_stats=(zone_cols is None or col in zone_cols))
+        # in column order: the first column that fails raises, as in a
+        # sequential loop; columns not yet started are dropped and the
+        # running ones finish before the error leaves this call
+        try:
+            fields = futures[col].result()
+        except BaseException:
+            for f in futures.values():
+                f.cancel()
+            wait(futures.values())
+            raise
         rows["part_id"].append(part_id)
         rows["chunk_id"].append(chunk_id)
         rows["column"].append(col)
@@ -934,8 +995,11 @@ def make_encode_fn(chunk_rows: int = DEFAULT_CHUNK_ROWS,
         ctx = TaskContext.get()
         task_part = ctx.partitionId() if ctx is not None else 0
 
-        # per-bucket buffers: several buckets can share a task (hash
-        # collisions, AQE coalescing), and resume must key on bucket
+        # per-bucket buffers: several buckets can share a task, and
+        # resume must key on bucket. repartition(n, bucket) hashes the
+        # bucket ids (seed 1 of the 100k-file bench corpus: 8 buckets
+        # over 8 partitions, {1,3,7} share one with ~40% of the bytes,
+        # {2,4} another, 3 are empty), and AQE coalescing can merge more
         bufs: dict[int, list[pa.RecordBatch]] = {}
         rows: dict[int, int] = {}
         byts: dict[int, int] = {}

@@ -22,7 +22,9 @@ the north rule ("partitioning / shuffle / skew handled explicitly").
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 
 # target bytes per bucket when the caller lets the planner size buckets;
@@ -151,7 +153,7 @@ def plan_buckets(
     # 10 MB caps lands in <= 20 of 1024 parts, not all of them); when
     # shards >= n_buckets (tiny clusters) this degrades to the old
     # spray, which is then the right call.
-    assignments: list[tuple[str, list[int]]] = []
+    assignments: list[tuple[object, list[int]]] = []
     n_salted = 0
     shard_unit = max(bucket_cap / 4, 1.0)
     for r in sorted(heavy, key=lambda r: (-int(r["bytes"]), r[key_col])):
@@ -175,8 +177,17 @@ def plan_buckets(
     }
 
     if assignments:
+        # an Arrow table becomes a JVM LocalRelation; a Python list would
+        # go through parallelize + an identity map, so broadcasting the
+        # map would cost a Spark job on Python workers every round. The
+        # key keeps the input column's type, so the join needs no cast.
         map_df = spark.createDataFrame(
-            assignments, schema=f"{key_col} string, _shards array<int>"
+            pa.table({key_col: [k for k, _ in assignments],
+                      "_shards": [s for _, s in assignments]}),
+            schema=StructType([
+                StructField(key_col, df.schema[key_col].dataType),
+                StructField("_shards", ArrayType(IntegerType())),
+            ]),
         )
         df2 = df.join(F.broadcast(map_df), key_col, "left")
         # row's shard = salt hash mod the key's shard count; bucket =

@@ -1173,3 +1173,83 @@ def test_predicate_malformed_shapes_raise(spark, tmp_path):
         ("and", [("leaf", "a", "=", 1), ("leaf", "b", "<", 2)])
     assert normalize_predicate(("or", [("a", "=", 1), ("b", "<", 2)])) == \
         ("or", [("leaf", "a", "=", 1), ("leaf", "b", "<", 2)])
+
+
+def _chunk_tables():
+    """An sf0.001 lineitem chunk with int, decimal, date and string
+    columns, and a nested one with list, struct and map columns."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    li = pq.read_table(os.path.join(SF, "lineitem.parquet"))
+    flat = pa.table({
+        "l_orderkey": li["l_orderkey"],
+        "l_linenumber": li["l_linenumber"],
+        "price": pc.cast(li["l_extendedprice"], pa.decimal128(12, 2)),
+        "shipdate": pc.cast(li["l_shipdate"], pa.date32()),
+        "l_returnflag": li["l_returnflag"],
+        "l_linestatus": li["l_linestatus"],
+        "l_quantity": li["l_quantity"],
+    })
+    n = 1500
+    nested = pa.table({
+        "id": pa.array(range(n), pa.int64()),
+        "tags": pa.array([None if i % 13 == 0 else list(range(i % 5))
+                          for i in range(n)], pa.list_(pa.int64())),
+        "st": pa.array([{"a": i * 2, "b": f"name{i % 5}",
+                         "c": None if i % 4 == 0 else float(i)}
+                        for i in range(n)]),
+        "mp": pa.array([[(f"k{j}", f"v{i}_{j}") for j in range(i % 3)]
+                        for i in range(n)],
+                       pa.map_(pa.string(), pa.string())),
+    })
+    return flat, nested
+
+
+@pytest.mark.parametrize("which", ["flat", "nested"])
+def test_chunk_columns_encode_as_a_sequential_loop(monkeypatch, which):
+    """The column pool changes when a column encodes, never what: every
+    enc row equals a sequential encode_column loop's, field for field,
+    in column order (each side starts from an empty FSST cache)."""
+    from fileconvert_spark.functions import codecs
+    from fileconvert_spark.operators import encode as E
+
+    tbl = dict(zip(["flat", "nested"], _chunk_tables()))[which]
+    zone_cols = frozenset(tbl.column_names[:2])
+    monkeypatch.setattr(E, "_WORKER_FSST_CACHE", codecs.FsstTableCache())
+    got = E.encode_chunk_table(tbl, 3, 1, cache_ns="ns",
+                               zone_cols=zone_cols).to_pylist()
+    monkeypatch.setattr(E, "_WORKER_FSST_CACHE", codecs.FsstTableCache())
+    want = []
+    for col in tbl.column_names:
+        fields = E.encode_column(tbl.column(col), cache_key=f"ns:{col}",
+                                 zone_stats=col in zone_cols)
+        want.append({"part_id": 3, "chunk_id": 1, "column": col, **fields})
+    assert [r["column"] for r in got] == tbl.column_names
+    assert got == want
+
+
+def test_chunk_raises_first_failing_column():
+    """A first column of an unsupported type raises what the sequential
+    loop raised, although larger valid columns and a second unsupported
+    one are submitted before it."""
+    import pyarrow as pa
+
+    from fileconvert_spark.operators.encode import (
+        encode_chunk_table, encode_column,
+    )
+
+    n = 4096
+    tbl = pa.table({
+        "d": pa.array(range(n), pa.duration("s")),
+        "s": pa.array([f"value-{i % 97}-{'x' * (i % 40)}" for i in range(n)]),
+        "i": pa.array(range(n), pa.int64()),
+        "t": pa.array(range(n), pa.time64("us")),
+    })
+    with pytest.raises(NotImplementedError) as first:
+        encode_column(tbl.column("d"))
+    with pytest.raises(NotImplementedError) as chunk:
+        encode_chunk_table(tbl, 0, 0)
+    assert str(chunk.value) == str(first.value)
+    assert "duration" in str(chunk.value)

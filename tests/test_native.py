@@ -688,6 +688,55 @@ def test_cache_dir_is_private_and_unsafe_files_refused(monkeypatch,
     monkeypatch.setattr(native, "_LIB", None)  # leave clean state
 
 
+_CONCURRENT_LOAD = """
+import os, subprocess, sys, threading
+from fileconvert_spark import native
+
+sys.setswitchinterval(1e-6)
+
+real_run, compiles = subprocess.run, []
+
+def counting_run(*args, **kwargs):
+    compiles.append(args)
+    return real_run(*args, **kwargs)
+
+subprocess.run = counting_run
+start, libs = threading.Barrier(8), []
+
+def first_call():
+    start.wait()
+    libs.append(native.load())
+
+threads = [threading.Thread(target=first_call) for _ in range(8)]
+for t in threads:
+    t.start()
+for t in threads:
+    t.join()
+print(len(compiles), len({id(lib) for lib in libs}), libs[0] is not None,
+      sorted(os.listdir(native._cache_dir())))
+"""
+
+
+@requires_native
+def test_concurrent_first_load_compiles_once(tmp_path):
+    """Encode's column threads can make a fresh worker's first native
+    call twice at once: the library must be compiled once, every thread
+    must get it, and no temp file may be left in the cache dir."""
+    import hashlib
+    import subprocess
+    import sys
+
+    env = dict(os.environ, XDG_CACHE_HOME=str(tmp_path))
+    env.pop("FCS_NO_NATIVE", None)
+    r = subprocess.run([sys.executable, "-c", _CONCURRENT_LOAD], cwd=_ROOT,
+                       env=env, capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stderr[-2000:]
+    n_compiles, n_libs, loaded, files = r.stdout.strip().split(" ", 3)
+    assert (n_compiles, n_libs, loaded) == ("1", "1", "True"), r.stdout
+    src_tag = hashlib.sha256(native._read_source()).hexdigest()[:16]
+    assert files == repr([f"fcs_native_{src_tag}.so"]), r.stdout
+
+
 @requires_native
 @settings(max_examples=120, deadline=None)
 @given(st.lists(st.integers(min_value=0, max_value=2**64 - 1),

@@ -9,6 +9,8 @@ import contextlib
 import io
 import os
 
+import pytest
+
 import __spark_entry__ as E
 
 SF = os.path.join(os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata"), "sf0.001")
@@ -64,6 +66,99 @@ def test_encode_pipeline_single_shuffle(spark):
     assert n_exchanges == 1, p
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
+
+
+def _hot_key_frames(spark):
+    """A string key whose hot value gets salted, and a bigint key whose
+    heavy hitter (key 7 on ids below 1000) does or does not."""
+    from pyspark.sql import functions as F
+
+    strings = spark.range(3000).select(
+        F.col("id"),
+        F.when(F.col("id") % 3 == 0, F.lit("hot"))
+        .otherwise(F.concat(F.lit("r"), (F.col("id") % 41).cast("string")))
+        .alias("repo"),
+        F.concat(F.lit("p/"), F.col("id").cast("string")).alias("path"),
+        F.expr("repeat('y', cast(id % 97 as int))").alias("content"))
+    longs = spark.range(2000).select(
+        F.col("id"),
+        F.when(F.col("id") < 1000, F.lit(7)).otherwise(F.col("id"))
+        .alias("k"),
+        F.expr("repeat('x', cast(id % 50 as int))").alias("pay"))
+    return strings, longs
+
+
+def _assignment(dfb):
+    """Per-bucket row counts and a digest of the sorted (id, bucket)."""
+    import hashlib
+
+    rows = sorted((r["id"], r["bucket"])
+                  for r in dfb.select("id", "bucket").collect())
+    counts = [0] * 4
+    for _, b in rows:
+        counts[b] += 1
+    digest = hashlib.sha256(
+        ";".join(f"{i}:{b}" for i, b in rows).encode()).hexdigest()[:16]
+    return counts, digest
+
+
+def test_bucket_map_is_a_jvm_local_relation(spark):
+    """The bucket map reaches the JVM as a LocalRelation, not a
+    LogicalRDD: a Python-list map would run a Spark job on Python
+    workers to broadcast it, every encode round. This holds with Arrow
+    conversion switched off, as the job CLIs run."""
+    from fileconvert_spark.operators.partitioning import plan_buckets
+
+    strings, longs = _hot_key_frames(spark)
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(conf, None)
+    spark.conf.set(conf, "false")
+    try:
+        for df, kw in ((strings, {"salt_cols": ("path",)}),
+                       (longs, {"key_col": "k", "salt_cols": ("id",),
+                                "weight_col": "pay"})):
+            dfb, info = plan_buckets(df, 4, **kw)
+            assert info["heavy"] >= 1
+            p = dfb._jdf.queryExecution().optimizedPlan().toString()
+            assert "LocalRelation" in p, p
+            assert "LogicalRDD" not in p, p
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)
+
+
+def test_bucket_assignment_salted_string_key(spark):
+    """(key, bucket) pinned to the values of the Python-list bucket map
+    the Arrow one replaced: the hot key is salted over all 4 buckets."""
+    from fileconvert_spark.operators.partitioning import plan_buckets
+
+    strings, _ = _hot_key_frames(spark)
+    dfb, info = plan_buckets(strings, 4, salt_cols=("path",))
+    assert (info["heavy"], info["salted"]) == (41, 1)
+    assert _assignment(dfb) == ([755, 736, 781, 728], "7be3b00e65b959cb")
+    assert dfb.filter("repo = 'hot'").select("bucket").distinct().count() == 4
+
+
+@pytest.mark.parametrize("weight_col,salted,expected", [
+    ("pay", 1, ([482, 504, 503, 511], "afca9ef5859025e2")),
+    ("k", 0, ([1240, 241, 247, 272], "15e2c93b42b66adc")),
+])
+def test_bucket_assignment_bigint_heavy_hitter(spark, weight_col, salted,
+                                               expected):
+    """A bigint key joins the map on its own type. Pinned to the
+    assignment of the string-typed map, which made Spark cast the key in
+    the join: key 7 salted over 4 shards when weighed by ``pay``, and
+    placed whole by LPT when weighed by its own length."""
+    from fileconvert_spark.operators.partitioning import plan_buckets
+
+    _, longs = _hot_key_frames(spark)
+    dfb, info = plan_buckets(longs, 4, key_col="k", salt_cols=("id",),
+                             weight_col=weight_col)
+    assert (info["heavy"], info["salted"]) == (1, salted)
+    assert dfb.schema["bucket"].dataType.simpleString() == "int"
+    assert _assignment(dfb) == expected
 
 
 def test_narrow_decode_no_data_exchange(spark, tmp_path):
