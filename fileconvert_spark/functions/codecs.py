@@ -149,23 +149,29 @@ def _flagged_blob_decode(blob) -> pa.Array:
     return fsst.fsst_decode_array(body[4 + tlen :], table_blob)
 
 
-def _count_byte(arr: pa.Array, sep: str) -> int:
-    """Occurrences of the one-byte ASCII ``sep`` in a null-free string
-    array: one NumPy count over the value-buffer span its offsets cover.
-    Equals ``pc.sum(pc.count_substring(arr, sep))``, because an ASCII
-    byte never occurs inside a multi-byte UTF-8 sequence."""
+def _count_bytes(arr: pa.Array, a: str, b: str) -> tuple[int, int]:
+    """Occurrences of the one-byte ASCII separators ``a`` and ``b`` in a
+    null-free string array, from one read of the value-buffer span its
+    offsets cover (native.count_bytes2; a NumPy count per separator
+    without it). Each equals ``pc.sum(pc.count_substring(arr, sep))``,
+    because an ASCII byte never occurs inside a multi-byte UTF-8
+    sequence."""
     if pa.types.is_large_string(arr.type):
         arr = arr.cast(pa.string())
     if len(arr) == 0:
-        return 0
+        return 0, 0
     offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32,
                             count=len(arr) + 1, offset=arr.offset * 4)
     lo, hi = int(offsets[0]), int(offsets[-1])
     if hi == lo:  # all values empty: the data buffer may be absent
-        return 0
-    return int(np.count_nonzero(
-        np.frombuffer(arr.buffers()[2], dtype=np.uint8, count=hi - lo,
-                      offset=lo) == ord(sep)))
+        return 0, 0
+    span = np.frombuffer(arr.buffers()[2], dtype=np.uint8, count=hi - lo,
+                         offset=lo)
+    got = native.count_bytes2(span, ord(a), ord(b))
+    if got is not None:
+        return got
+    return (int(np.count_nonzero(span == ord(a))),
+            int(np.count_nonzero(span == ord(b))))
 
 
 def _string_buffers(arr: pa.Array) -> tuple[np.ndarray, int]:
@@ -710,7 +716,8 @@ def select_and_encode_str(arr: pa.Array,
     if allow_linedict and st["avg_len"] >= 8:
         # a segment dictionary only beats a whole-value dictionary when
         # values actually split: require >= 1 separator per value on avg
-        if st["avg_len"] >= 40 and _count_byte(arr, "\n") >= n:
+        n_lines, n_slashes = _count_bytes(arr, "\n", "/")
+        if st["avg_len"] >= 40 and n_lines >= n:
             _sepdict_est("\n", "linedict")
         # path-shaped values: '/'-separated components are low-cardinality
         # even when whole values are unique. The exact full-chunk trial is
@@ -720,7 +727,7 @@ def select_and_encode_str(arr: pa.Array,
         # the sampled segments are almost all unique — a sample *over*states
         # uniqueness, so >=0.95 unique in-sample means the full chunk can't
         # dedup enough for a segment dictionary to win.
-        if _count_byte(arr, "/") >= n:
+        if n_slashes >= n:
             _, probe_ids, probe_uniq = _split_dedup(
                 arr.slice(0, min(n, 256)), "/")
             nseg = len(probe_ids)

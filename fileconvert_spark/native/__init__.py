@@ -291,6 +291,11 @@ def _load() -> None:
         c_int64, c_int64,                       # n, width
         POINTER(c_uint64),                      # out
     ]
+    lib.count_bytes2.restype = None
+    lib.count_bytes2.argtypes = [
+        POINTER(c_uint8), c_int64,              # data, n
+        c_int64, c_int64, POINTER(c_int64),     # a, b, out[2]
+    ]
     lib.str_split_dedup.restype = c_int64
     lib.str_split_dedup.argtypes = [
         POINTER(c_int32), c_int64,              # offs, n_rows
@@ -497,6 +502,26 @@ def str_gather_join(offsets, data, idx, counts=None, sep: bytes = b""):
     out = np.empty(total + 32, dtype=np.uint8)     # 32-byte block stores
     lib.str_gather_join(*args, out_offs.ctypes.data_as(p_i32), _u8p(out))
     return out_offs, out[:total]
+
+
+def count_bytes2(data, a: int, b: int):
+    """Occurrences of the bytes ``a`` and ``b`` in uint8 ``data``, both
+    counted in one C pass with no temporary: (count of a, count of b),
+    or None when the native library is unavailable. Raises ValueError
+    on a byte outside 0..255."""
+    import numpy as np
+
+    lib = load()
+    if lib is None:
+        return None
+    if not (0 <= a <= 255 and 0 <= b <= 255):
+        raise ValueError(f"count_bytes2: bytes {a}, {b} not in 0..255")
+    data = np.ascontiguousarray(data, dtype=np.uint8)
+    out = np.zeros(2, dtype=np.int64)
+    if data.size:
+        lib.count_bytes2(_u8p(data), data.size, a, b,
+                         out.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)))
+    return int(out[0]), int(out[1])
 
 
 def str_split_dedup(offsets, data, n_rows: int, sep: int | None = None):

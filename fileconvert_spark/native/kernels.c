@@ -7,9 +7,9 @@
  * live here (greedy FSST parse: each token's start depends on the previous
  * token's length; PNG defilter: each pixel depends on the previous pixel),
  * plus the decode gather-join, which writes each output string once where
- * Arrow take + binary_join copy it twice, and the two hot loops of string
- * codec selection: one split-and-dedup pass per segment dictionary, and
- * FSST training's counting walk.
+ * Arrow take + binary_join copy it twice, and the hot loops of string
+ * codec selection: one count of both separators, one split-and-dedup
+ * pass per segment dictionary, and FSST training's counting walk.
  *
  * Plain C99 + stdint (plus GCC/Clang's __builtin_ctzll), no libc beyond
  * string.h and malloc/qsort, little-endian host (the same assumption
@@ -1098,6 +1098,35 @@ static inline const uint8_t *seg_end(const uint8_t *p, const uint8_t *end,
         h = hash_word(h, w);
         s += 8;
     }
+}
+
+/* Occurrences of the bytes a and b in data[0..n), both counted in one
+ * read with no temporary: out[0] gets a's count, out[1] b's. Blocks of
+ * 16 x 255 bytes count into 16 byte lanes each (255 cannot overflow a
+ * lane), which the compiler vectorizes. */
+void count_bytes2(const uint8_t *data, int64_t n, int64_t a, int64_t b,
+                  int64_t *out)
+{
+    const uint8_t ua = (uint8_t)a, ub = (uint8_t)b;
+    int64_t ca = 0, cb = 0, i = 0;
+    while (n - i >= 16 * 255) {
+        uint8_t la[16] = {0}, lb[16] = {0};
+        for (int k = 0; k < 255; k++, i += 16)
+            for (int l = 0; l < 16; l++) {
+                la[l] += data[i + l] == ua;
+                lb[l] += data[i + l] == ub;
+            }
+        for (int l = 0; l < 16; l++) {
+            ca += la[l];
+            cb += lb[l];
+        }
+    }
+    for (; i < n; i++) {
+        ca += data[i] == ua;
+        cb += data[i] == ub;
+    }
+    out[0] = ca;
+    out[1] = cb;
 }
 
 typedef struct { uint64_t h; int64_t id; } sd_slot;     /* id -1: empty */

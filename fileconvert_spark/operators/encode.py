@@ -6,15 +6,14 @@ the kernel accumulates them into size-bounded chunks, encodes every column
 with codec auto-selection (functions/codecs.py), and emits one ``enc`` row
 per (partition, chunk, column). No RDDs, no per-row Python, no driver-side
 data movement. A chunk's columns encode on two threads
-(``encode_chunk_table``), which use the core the task's JVM thread
-leaves idle once it has handed over its input.
+(``encode_chunk_table``).
 
-A task can hold several buckets, because ``repartition(n, bucket)``
-hashes bucket ids into partitions: on seed 1 of the 100k-file bench
-corpus (``local[2]``) its 8 buckets fill 5 of 8 partitions, {1,3,7} in
-one (54 MB, ~40% of the data), {2,4} in another, and 3 tasks get none. The
-kernel keeps one buffer and one part per bucket, so parts stay keyed by
-bucket either way.
+A task receives several whole buckets, one after another:
+``repartition_by_bucket`` sends bucket b to shuffle partition b and
+coalesces those into one task per core. The kernel encodes a bucket's
+chunks on one chunk thread per process while the task's own thread
+reads the next bucket from the JVM, so the Arrow hand-off and the encode
+overlap instead of taking turns. Parts stay keyed by bucket.
 
 Decode is one chunk decoder (``decode_chunk``) with two callers:
 plans/manifest.py ``decode_table`` reads an encoded table part by part
@@ -35,6 +34,7 @@ import json
 import os
 import threading
 import uuid
+from collections import deque
 from collections.abc import Iterator
 from concurrent.futures import Future, ThreadPoolExecutor, wait
 
@@ -278,33 +278,39 @@ _WORKER_FSST_CACHE = codecs.FsstTableCache()
 # A chunk's top-level columns encode on this many threads (the C kernels,
 # NumPy and Arrow release the GIL). Two, not more: content is over half
 # of kernel CPU, so once it has a thread of its own a third cannot shorten
-# the chunk; and by then the task's JVM thread has handed over its input
-# and idles, so a task still keeps at most two cores busy (perfbench runs
-# local[nproc/2] for that reason). Nested fields stay on their column's
-# thread: a pool thread never submits, which with two workers could
-# deadlock.
+# the chunk; and the task's own thread spends most of its time waiting on
+# the JVM for the next bucket, so a task keeps about two cores busy
+# (perfbench runs local[nproc/2] for that reason). Nested fields stay on
+# their column's thread: a pool thread never submits, which with two
+# workers could deadlock.
 _COLUMN_THREADS = 2
-_COLUMN_POOL: ThreadPoolExecutor | None = None
-_COLUMN_POOL_LOCK = threading.Lock()
+# A task's chunks encode one at a time, in order, on one thread per
+# process (make_encode_fn): one chunk thread keeps each worker's FSST
+# cache seeing chunks in input order, whatever the scheduling.
+_POOL_THREADS = {"fcs-encode": _COLUMN_THREADS, "fcs-chunk": 1}
+_POOLS: dict[str, ThreadPoolExecutor] = {}
+_POOLS_LOCK = threading.Lock()
 
 
-def _column_pool() -> ThreadPoolExecutor:
-    """The per-process column pool, created on first use."""
-    global _COLUMN_POOL
-    with _COLUMN_POOL_LOCK:
-        if _COLUMN_POOL is None:
-            _COLUMN_POOL = ThreadPoolExecutor(
-                _COLUMN_THREADS, thread_name_prefix="fcs-encode")
-        return _COLUMN_POOL
+def _pool(name: str) -> ThreadPoolExecutor:
+    """The per-process pool ``name`` ("fcs-encode": columns,
+    "fcs-chunk": chunks), created on first use."""
+    with _POOLS_LOCK:
+        pool = _POOLS.get(name)
+        if pool is None:
+            pool = _POOLS[name] = ThreadPoolExecutor(
+                _POOL_THREADS[name], thread_name_prefix=name)
+        return pool
 
 
-def _forget_column_pool() -> None:
-    # a forked child inherits the pool object but not its threads
-    global _COLUMN_POOL, _COLUMN_POOL_LOCK
-    _COLUMN_POOL, _COLUMN_POOL_LOCK = None, threading.Lock()
+def _forget_pools() -> None:
+    # a forked child inherits the pool objects but not their threads
+    global _POOLS_LOCK
+    _POOLS.clear()
+    _POOLS_LOCK = threading.Lock()
 
 
-os.register_at_fork(after_in_child=_forget_column_pool)
+os.register_at_fork(after_in_child=_forget_pools)
 
 
 _ZONE_MAX_STR = 64  # utf-8 bytes; longer bounds are dropped, not truncated
@@ -726,7 +732,7 @@ def encode_chunk_table(tbl: pa.Table, part_id: int, chunk_id: int,
     their rows come back in column order, so the output and the first
     error raised are those of a sequential loop.
     """
-    pool = _column_pool()
+    pool = _pool("fcs-encode")
     futures: dict[str, Future] = {}
     # largest column first, so the biggest one never starts last
     for col in sorted(tbl.column_names, key=lambda c: -tbl.column(c).nbytes):
@@ -970,6 +976,31 @@ def decode_chunk(rows: dict[str, dict], column_order: list[str],
     return pa.RecordBatch.from_arrays(arrays, names=column_order)
 
 
+# chunks handed to the chunk thread and not yet yielded, per task: one
+# encoding and one waiting, while the task's thread reads the next one
+_CHUNKS_AHEAD = 2
+
+
+def _bucket_runs(b: pa.RecordBatch, col: str
+                 ) -> list[tuple[int, pa.RecordBatch]]:
+    """(bucket, zero-copy slice) per run of equal ``col`` values of a
+    batch, in batch order."""
+    vals = b.column(b.schema.get_field_index(col)).to_numpy(
+        zero_copy_only=False)
+    starts = np.concatenate(
+        [[0], np.flatnonzero(vals[1:] != vals[:-1]) + 1, [len(vals)]])
+    return [(int(vals[s]), b.slice(s, e - s))
+            for s, e in zip(starts[:-1].tolist(), starts[1:].tolist())]
+
+
+def _yield_ready(pending: deque, keep: int) -> Iterator[pa.RecordBatch]:
+    """Yield finished chunks in chunk order, waiting on the oldest until
+    at most ``keep`` are held; a failed chunk raises when its turn
+    comes."""
+    while pending and (len(pending) > keep or pending[0].done()):
+        yield pending.popleft().result()
+
+
 def make_encode_fn(chunk_rows: int = DEFAULT_CHUNK_ROWS,
                    part_id_col: str | None = None,
                    cache_ns: str | None = None,
@@ -981,73 +1012,93 @@ def make_encode_fn(chunk_rows: int = DEFAULT_CHUNK_ROWS,
     ``part_id_col``: optional column carrying the deterministic bucket id
     (B2 partitioning); it is popped from the data and used as part_id so
     checkpoint/resume is keyed by *bucket*, not by Spark's task numbering.
+    The input must arrive grouped by bucket, as ``repartition_by_bucket``
+    delivers it: a bucket that reappears after another one started
+    raises ValueError rather than being split into extra chunks.
     ``cache_ns``: job/table namespace for the worker FSST cache.
     ``key_index_cols`` + ``key_index_acc``: per-part distinct key-hash
     accumulation for point-lookup sidecars (plans/keyindex.py) —
     ``key_index_acc[pid][col]`` collects each flushed chunk's hashes;
     the caller (make_write_kernel) drains it per part. Hashing runs on
     chunk uniques inside the same task, so nothing extra shuffles.
+
+    Chunks encode on the per-process chunk thread, one at a time and in
+    input order, while this task's thread keeps reading batches: a
+    bucket's last chunk is handed over as soon as the next bucket
+    starts. At most ``_CHUNKS_AHEAD`` chunks are held; the enc batches
+    come out in chunk order, so rows, bytes and the first error raised
+    are those of encoding each chunk in turn. On any error, or when the
+    consumer stops early, chunks not started are dropped and a running
+    one finishes before the kernel returns.
     """
+
+    def encode(pid: int, cid: int, buf: list[pa.RecordBatch]
+               ) -> pa.RecordBatch:
+        tbl = pa.Table.from_batches(buf)
+        if part_id_col is not None:
+            tbl = tbl.drop_columns([part_id_col])
+        out = encode_chunk_table(tbl, pid, cid, cache_ns=cache_ns,
+                                 zone_cols=zone_cols)
+        if key_index_cols and key_index_acc is not None:
+            from ..plans import keyindex as _ki
+
+            for col in key_index_cols:
+                if col in tbl.column_names:
+                    key_index_acc.setdefault(pid, {}).setdefault(
+                        col, set()).update(
+                        _ki.column_hashes(tbl.column(col)))
+        return out
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
         task_part = ctx.partitionId() if ctx is not None else 0
+        pool = _pool("fcs-chunk")
+        pending: deque[Future] = deque()
+        closed: set[int] = set()    # buckets whose rows have all come
+        pid, cid = None, 0
+        buf: list[pa.RecordBatch] = []
+        n_rows = n_bytes = 0
 
-        # per-bucket buffers: several buckets can share a task, and
-        # resume must key on bucket. repartition(n, bucket) hashes the
-        # bucket ids (seed 1 of the 100k-file bench corpus: 8 buckets
-        # over 8 partitions, {1,3,7} share one with ~40% of the bytes,
-        # {2,4} another, 3 are empty), and AQE coalescing can merge more
-        bufs: dict[int, list[pa.RecordBatch]] = {}
-        rows: dict[int, int] = {}
-        byts: dict[int, int] = {}
-        chunk_ids: dict[int, int] = {}
+        def hand_over() -> Iterator[pa.RecordBatch]:
+            nonlocal cid, buf, n_rows, n_bytes
+            yield from _yield_ready(pending, _CHUNKS_AHEAD - 1)
+            pending.append(pool.submit(encode, pid, cid, buf))
+            cid, buf, n_rows, n_bytes = cid + 1, [], 0, 0
 
-        def flush(pid: int) -> pa.RecordBatch:
-            tbl = pa.Table.from_batches(bufs[pid])
-            if part_id_col is not None:
-                tbl = tbl.drop_columns([part_id_col])
-            cid = chunk_ids.get(pid, 0)
-            out = encode_chunk_table(tbl, pid, cid, cache_ns=cache_ns,
-                                     zone_cols=zone_cols)
-            if key_index_cols and key_index_acc is not None:
-                from ..plans import keyindex as _ki
-
-                for col in key_index_cols:
-                    if col in tbl.column_names:
-                        key_index_acc.setdefault(pid, {}).setdefault(
-                            col, set()).update(
-                            _ki.column_hashes(tbl.column(col)))
-            chunk_ids[pid] = cid + 1
-            bufs[pid], rows[pid], byts[pid] = [], 0, 0
-            return out
-
-        for b in batches:
-            if part_id_col is None:
-                parts = [(task_part, b)]
-            else:
-                col_idx = b.schema.get_field_index(part_id_col)
-                bucket_vals = b.column(col_idx).to_numpy(zero_copy_only=False)
-                uniq = np.unique(bucket_vals)
-                if len(uniq) == 1:
-                    parts = [(int(uniq[0]), b)]
-                else:
-                    parts = [
-                        (int(u), b.filter(pa.array(bucket_vals == u)))
-                        for u in uniq
-                    ]
-            for pid, sub in parts:
-                bufs.setdefault(pid, []).append(sub)
-                rows[pid] = rows.get(pid, 0) + sub.num_rows
-                byts[pid] = byts.get(pid, 0) + sub.nbytes
-                if (rows[pid] >= chunk_rows
-                        or byts[pid] >= DEFAULT_CHUNK_BYTES):
-                    yield flush(pid)
-        for pid, buf in list(bufs.items()):
+        try:
+            for b in batches:
+                if b.num_rows == 0:
+                    continue
+                runs = ([(task_part, b)] if part_id_col is None
+                        else _bucket_runs(b, part_id_col))
+                for run_pid, sub in runs:
+                    if run_pid != pid:
+                        if run_pid in closed:
+                            raise ValueError(
+                                f"encode: bucket {run_pid} reappeared after "
+                                "its rows were flushed; the input must "
+                                "arrive grouped by bucket "
+                                "(repartition_by_bucket)")
+                        if buf:
+                            yield from hand_over()
+                        if pid is not None:
+                            closed.add(pid)
+                        pid, cid = run_pid, 0
+                    buf.append(sub)
+                    n_rows += sub.num_rows
+                    n_bytes += sub.nbytes
+                    if n_rows >= chunk_rows or n_bytes >= DEFAULT_CHUNK_BYTES:
+                        yield from hand_over()
+                yield from _yield_ready(pending, _CHUNKS_AHEAD)
             if buf:
-                yield flush(pid)
+                yield from hand_over()
+            yield from _yield_ready(pending, 0)
+        finally:
+            for f in pending:
+                f.cancel()
+            wait(pending)
 
     return fn
 

@@ -13,11 +13,15 @@ sum(length(content)), so an explicit two-pass scheme is used:
      repos too big for any single bucket are SALTED — their rows spread
      over all buckets by xxhash64(path, commit).
 
-The bucket column then drives one explicit hash shuffle
-(``repartition(n_buckets, "bucket")``) — the single wide dependency of the
-encode job. Reference parity: FileConvert is single-file single-process
-(BASELINE.json line 6); partitioning exists only in our engine, mandated by
-the north rule ("partitioning / shuffle / skew handled explicitly").
+The bucket column then drives one explicit shuffle
+(``repartition_by_bucket``: ``repartitionById(n_buckets, "bucket")``,
+coalesced to one task per core) — the single wide dependency of the
+encode job. Bucket b is shuffle partition b, so no two buckets collide
+the way hashed bucket ids did (seed 1 of the 100k-file bench corpus put
+8 buckets in 5 of 8 hash partitions, leaving 3 tasks empty). Reference
+parity: FileConvert is single-file single-process (BASELINE.json line
+6); partitioning exists only in our engine, mandated by the north rule
+("partitioning / shuffle / skew handled explicitly").
 """
 
 from __future__ import annotations
@@ -31,6 +35,12 @@ from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 # at cluster scale raise this toward 256MB-1GB so task overheads amortize
 DEFAULT_BUCKET_BYTES = 8 << 20
 
+# how plan_buckets weighs a row's weight column; byte weights need no
+# UTF-8 character walk, which a JFR profile of warm encode rounds found
+# in 109 of 247 executor samples (UTF8String.getNumChars, under the
+# stats aggregate)
+WEIGHT_UNITS = {"bytes": F.octet_length, "chars": F.length}
+
 
 def plan_buckets(
     df: DataFrame,
@@ -39,6 +49,7 @@ def plan_buckets(
     salt_cols: tuple[str, ...] = ("path", "commit"),
     weight_col: str = "content",
     stats_sample_fraction: float = 1.0,
+    weight_unit: str = "bytes",
 ) -> tuple[DataFrame, dict]:
     """Assign a ``bucket`` column balancing bytes, salting hot keys.
 
@@ -57,10 +68,19 @@ def plan_buckets(
     depends on (encode_table pins the fraction in _meta.json alongside
     n_buckets for exactly that reason).
 
+    ``weight_unit``: a row weighs the UTF-8 ``"bytes"`` of its
+    ``weight_col`` (``octet_length``), or its ``"chars"`` (``length``),
+    which tables encoded before byte weights pin in _meta.json so that
+    a resume re-derives their assignments. The two agree on ASCII.
+
     Returns (df + bucket column, plan info dict).
     """
     spark = df.sparkSession
-    w = F.coalesce(F.length(F.col(weight_col)), F.lit(0)).cast("long")
+    if weight_unit not in WEIGHT_UNITS:
+        raise ValueError(f"weight_unit must be one of {sorted(WEIGHT_UNITS)}"
+                         f": {weight_unit!r}")
+    w = F.coalesce(WEIGHT_UNITS[weight_unit](F.col(weight_col)),
+                   F.lit(0)).cast("long")
 
     frac = float(stats_sample_fraction)
     if not (0.0 < frac <= 1.0):
@@ -209,5 +229,10 @@ def plan_buckets(
 
 
 def repartition_by_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    """The encode job's single explicit shuffle."""
-    return df.repartition(n_buckets, F.col("bucket"))
+    """The encode job's single explicit shuffle: bucket b goes to shuffle
+    partition b, and a coalesce (no second shuffle, no sort) hands each
+    of min(n_buckets, defaultParallelism) tasks several of those
+    partitions one after another, so every bucket reaches its task as
+    one contiguous run (what make_encode_fn streams on)."""
+    n_tasks = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartitionById(n_buckets, F.col("bucket")).coalesce(n_tasks)

@@ -207,7 +207,12 @@ def make_write_kernel(out_dir: str,
     column names each row's part). ``key_index_cols``:
     also write per-part key-hash sidecars (plans/keyindex.py) for
     point-lookup pruning on unclustered columns — written BEFORE the
-    manifest so a done part always has its sidecars."""
+    manifest so a done part always has its sidecars.
+
+    A task holds several buckets, and the encode kernel yields their
+    chunks in input order, bucket after bucket: a part is written as
+    soon as the next part's first chunk arrives, so a task killed
+    midway leaves its finished parts done for resume."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t0 = time.time()
@@ -220,15 +225,11 @@ def make_write_kernel(out_dir: str,
                                    cache_ns=out_dir, zone_cols=zone_cols,
                                    key_index_cols=key_index_cols,
                                    key_index_acc=ki_acc)
-        per_part: dict[int, list[dict]] = {}
-        for enc_batch in encode_fn(batches):
-            for r in enc_batch.to_pylist():
-                per_part.setdefault(r["part_id"], []).append(r)
-
         fsio.makedirs(os.path.join(out_dir, "data"))
         fsio.makedirs(os.path.join(out_dir, "manifests"))
         manifests: list[dict] = []
-        for pid, rows in per_part.items():
+
+        def write(pid: int, rows: list[dict]) -> None:
             if key_index_cols:
                 from .keyindex import write_part_index
 
@@ -238,6 +239,17 @@ def make_write_kernel(out_dir: str,
                                                                  set()))
             manifests.append(write_part_file(
                 out_dir, pid, consolidate_part_dicts(rows, pid), t0))
+
+        pid, rows = None, []
+        for enc_batch in encode_fn(batches):
+            for r in enc_batch.to_pylist():
+                if r["part_id"] != pid:
+                    if rows:
+                        write(pid, rows)
+                    pid, rows = r["part_id"], []
+                rows.append(r)
+        if rows:
+            write(pid, rows)
 
         if manifests:
             yield manifest_batch(manifests)
@@ -383,7 +395,11 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
     _meta.json like the other table-identity knobs.
 
     Plan shape: 1 small agg (stats pre-pass) + 1 broadcast join (bucket
-    map) + 1 hash shuffle (repartition by bucket) + narrow encode/write.
+    map) + 1 shuffle (``repartition_by_bucket``: bucket b to shuffle
+    partition b, coalesced to one task per core, no sort) + narrow
+    encode/write. Each task streams its whole buckets one after another
+    through the encode kernel, which encodes bucket k while the JVM
+    feeds bucket k+1 (make_encode_fn).
 
     ``stats_sample_fraction``: weigh the bucket plan on a seeded row
     sample (see plan_buckets) — at 10^12 files the exact pre-pass is a
@@ -400,7 +416,8 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
     just unpruned.
 
     Resume: ``n_buckets``, ``key_col``, ``salt_cols``, ``weight_col``,
-    ``stats_sample_fraction``, the zone-map columns and
+    ``stats_sample_fraction``, the weight unit (see plan_buckets; a
+    _meta.json without one means characters), the zone-map columns and
     ``key_index_cols`` are the table's identity and come from its
     _meta.json, whatever the caller passes: bucketing a missing part any
     other way would duplicate some rows and lose others.
@@ -441,6 +458,8 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
         salt_cols = tuple(meta["salt_cols"])
         weight_col = meta["weight_col"]
         stats_sample_fraction = float(meta.get("stats_sample_fraction", 1.0))
+        # tables written before byte weights planned with characters
+        weight_unit = meta.get("weight_unit", "chars")
         # "all" is pinned by tables written when every column could
         # carry zone bounds
         zc = meta.get("zone_cols", "none")
@@ -450,12 +469,14 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
     else:
         zone_cols = (frozenset(cluster_by) | {key_col}) if cluster_by \
             else frozenset()
+        weight_unit = "bytes"
 
     t_plan = time.time()
     dfb, plan_info = plan_buckets(df, pinned if pinned is not None else n_buckets,
                                   key_col=key_col, salt_cols=salt_cols,
                                   weight_col=weight_col,
-                                  stats_sample_fraction=stats_sample_fraction)
+                                  stats_sample_fraction=stats_sample_fraction,
+                                  weight_unit=weight_unit)
     plan_wall_s = time.time() - t_plan
     n_buckets = plan_info["n_buckets"]  # resolved (auto-sized when None)
 
@@ -481,6 +502,7 @@ def encode_table(spark, df, out_dir: str, n_buckets: int | None = None,
              "n_buckets": n_buckets, "key_col": key_col,
              "salt_cols": list(salt_cols), "weight_col": weight_col,
              "stats_sample_fraction": stats_sample_fraction,
+             "weight_unit": weight_unit,
              "zone_cols": sorted(zone_cols),
              "key_index_cols": sorted(ki_cols)}).encode())
     fsio.write_bytes_atomic(os.path.join(out_dir, "_schema.json"),

@@ -329,7 +329,9 @@ def test_fsst_walk_seg_chop_is_transparent(monkeypatch):
 
 
 @pytest.mark.parametrize("sep", ["\n", "/"])
-def test_count_byte_matches_count_substring(sep):
+def test_count_byte_matches_count_substring(sep, monkeypatch):
+    """Both counts of ``_count_bytes`` equal Arrow's count_substring,
+    with and without the C kernel."""
     import pyarrow.compute as pc
 
     vals = ["a/b\nc", "π/≈\n✓", "日本/語\n\n", "", "🎉/🎊/", "//\n/",
@@ -345,9 +347,14 @@ def test_count_byte_matches_count_substring(sep):
         pa.array(["", "", "a/\n"], type=pa.string()).slice(0, 2),
         pa.array(vals, type=pa.large_string()),
     ]
-    for arr in cases:
-        want = pc.sum(pc.count_substring(arr, sep)).as_py() or 0
-        assert codecs._count_byte(arr, sep) == want, (arr, sep)
+    other = "/" if sep == "\n" else "\n"
+    for no_native in ("", "1"):
+        monkeypatch.setenv("FCS_NO_NATIVE", no_native)
+        for arr in cases:
+            want = pc.sum(pc.count_substring(arr, sep)).as_py() or 0
+            want2 = pc.sum(pc.count_substring(arr, other)).as_py() or 0
+            assert codecs._count_bytes(arr, sep, other) == (want, want2), \
+                (arr, sep)
 
 
 def test_pathdict_trial_pruned_on_multiline_content(monkeypatch):
@@ -362,7 +369,7 @@ def test_pathdict_trial_pruned_on_multiline_content(monkeypatch):
                         lambda pre: packed.append(pre["sep"]) or real_pack(pre))
     content = pa.array(make_codefiles(8000, seed=411)["content"][:500],
                        type=pa.string())
-    assert codecs._count_byte(content, "/") >= len(content)
+    assert codecs._count_bytes(content, "\n", "/")[1] >= len(content)
     codec, *_ = codecs.select_and_encode_str(content)
     assert codec == "linedict"
     assert packed == ["\n"]

@@ -136,12 +136,15 @@ def test_int_dict_chunks_not_consolidated(tmp_path, k):
 
 @pytest.fixture(scope="module")
 def paged_table(spark, tmp_path_factory):
-    """Encoded table whose layout forces multi-chunk parts so pages fire."""
+    """Encoded table whose layout forces multi-chunk parts so pages fire.
+    A chunk is cut at an Arrow batch (at most 10000 rows in this session)
+    once it holds ``chunk_rows``, and each bucket arrives as one run, so
+    each of the two buckets must span more than one batch."""
     from fileconvert_spark.corpus import make_codefiles
     from fileconvert_spark.plans.manifest import encode_table
 
     out = str(tmp_path_factory.mktemp("pages") / "enc")
-    df = spark.createDataFrame(make_codefiles(12000))
+    df = spark.createDataFrame(make_codefiles(24000))
     encode_table(spark, df, out, n_buckets=2, resume=False,
                  chunk_rows=2048, cluster_by=("repo",))
     return df, out

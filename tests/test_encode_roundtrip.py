@@ -1253,3 +1253,154 @@ def test_chunk_raises_first_failing_column():
         encode_chunk_table(tbl, 0, 0)
     assert str(chunk.value) == str(first.value)
     assert "duration" in str(chunk.value)
+
+
+def _bucket_batches(sizes, rows_per_batch, start=0):
+    """Codefiles rows with a ``bucket`` column holding runs of the given
+    sizes (bucket i gets sizes[i] consecutive rows), cut into batches of
+    ``rows_per_batch`` rows, so runs span batch boundaries."""
+    import pyarrow as pa
+
+    from fileconvert_spark.corpus import make_codefiles
+
+    n = sum(sizes)
+    tbl = pa.Table.from_pandas(make_codefiles(n, seed=411).head(n),
+                               preserve_index=False)
+    bucket = [start + i for i, n in enumerate(sizes) for _ in range(n)]
+    return tbl.append_column("bucket", pa.array(bucket, pa.int32())
+                             ).to_batches(max_chunksize=rows_per_batch)
+
+
+def test_streaming_kernel_matches_sequential_chunks(monkeypatch):
+    """The streaming kernel yields, in order, the enc rows of encoding
+    its chunks one after another on this thread, each side from an empty
+    FSST cache; every chunk but a bucket's last reaches chunk_rows, and
+    each bucket's chunks hold its rows in input order."""
+    import pyarrow as pa
+
+    from fileconvert_spark.functions import codecs
+    from fileconvert_spark.operators import encode as E
+
+    batches = _bucket_batches([700, 90, 1300, 400], 256)
+    chunks = []
+    real = E.encode_chunk_table
+
+    def recording(tbl, pid, cid, **kw):
+        chunks.append((pid, cid, tbl, kw))
+        return real(tbl, pid, cid, **kw)
+
+    monkeypatch.setattr(E, "encode_chunk_table", recording)
+    monkeypatch.setattr(E, "_WORKER_FSST_CACHE", codecs.FsstTableCache())
+    got = list(E.make_encode_fn(300, "bucket", cache_ns="ns")(iter(batches)))
+
+    monkeypatch.setattr(E, "_WORKER_FSST_CACHE", codecs.FsstTableCache())
+    want = [real(tbl, pid, cid, **kw) for pid, cid, tbl, kw in chunks]
+    assert [b.to_pylist() for b in got] == [b.to_pylist() for b in want]
+
+    src = pa.Table.from_batches(batches)
+    for pid in range(4):
+        mine = [(cid, tbl) for p, cid, tbl, _ in chunks if p == pid]
+        assert [cid for cid, _ in mine] == list(range(len(mine)))
+        assert all(t.num_rows >= 300 for _, t in mine[:-1])
+        rows = pa.concat_tables([t for _, t in mine])
+        want_rows = src.filter(pa.compute.equal(src["bucket"], pid)
+                               ).drop_columns(["bucket"])
+        assert rows.equals(want_rows.cast(rows.schema))
+
+
+class _SlowChunks:
+    """Stand-in for encode_chunk_table: records how many chunks run at
+    once, sleeps, and fails on the buckets in ``fail`` (the tests below
+    give each bucket one chunk)."""
+
+    def __init__(self, fail=()):
+        import threading
+
+        self.fail, self.running, self.started = set(fail), 0, []
+        self.lock = threading.Lock()
+
+    def __call__(self, tbl, pid, cid, **kw):
+        import time
+
+        import pyarrow as pa
+
+        with self.lock:
+            self.running += 1
+            self.started.append(pid)
+        try:
+            time.sleep(0.05)
+            if pid in self.fail:
+                raise ValueError(f"chunk {pid} failed")
+            return pa.RecordBatch.from_pydict({"chunk": [pid]})
+        finally:
+            with self.lock:
+                self.running -= 1
+
+
+def test_streaming_kernel_holds_at_most_chunks_ahead(monkeypatch):
+    """Chunks handed to the chunk thread and not yet yielded never
+    exceed _CHUNKS_AHEAD, and the kernel reads ahead while they encode."""
+    from fileconvert_spark.operators import encode as E
+
+    slow = _SlowChunks()
+    monkeypatch.setattr(E, "encode_chunk_table", slow)
+    pool = E._pool("fcs-chunk")
+    state = {"submitted": 0, "yielded": 0, "held_max": 0, "read": 0}
+
+    class Counting:
+        def submit(self, *a, **kw):
+            state["submitted"] += 1
+            state["held_max"] = max(state["held_max"],
+                                    state["submitted"] - state["yielded"])
+            return pool.submit(*a, **kw)
+
+    monkeypatch.setattr(E, "_pool", lambda name: Counting())
+
+    def feed():
+        for b in _bucket_batches([40] * 12, 40):
+            state["read"] += 1
+            yield b
+
+    reads_at_yield = []
+    for out in E.make_encode_fn(1000, "bucket")(feed()):
+        state["yielded"] += 1
+        reads_at_yield.append(state["read"])
+    assert state["submitted"] == state["yielded"] == 12
+    assert state["held_max"] == E._CHUNKS_AHEAD
+    # the first chunk comes back only after later buckets were read
+    assert reads_at_yield[0] > 2
+
+
+def test_streaming_kernel_raises_first_failing_chunk(monkeypatch):
+    """Chunk 1 and chunk 2 fail: chunk 0 is yielded, then chunk 1's error
+    is raised, and no chunk is still running once it has left the
+    kernel. Closing the kernel early also leaves nothing running."""
+    from fileconvert_spark.operators import encode as E
+
+    slow = _SlowChunks(fail={1, 2})
+    monkeypatch.setattr(E, "encode_chunk_table", slow)
+    got = []
+    with pytest.raises(ValueError, match="chunk 1 failed"):
+        for out in E.make_encode_fn(1000, "bucket")(
+                iter(_bucket_batches([30] * 6, 30))):
+            got.append(out.column(0)[0].as_py())
+    assert got == [0]
+    assert slow.running == 0
+
+    slow = _SlowChunks()
+    monkeypatch.setattr(E, "encode_chunk_table", slow)
+    gen = E.make_encode_fn(1000, "bucket")(iter(_bucket_batches([30] * 6, 30)))
+    assert next(gen).column(0)[0].as_py() == 0
+    gen.close()
+    assert slow.running == 0 and len(slow.started) <= 1 + E._CHUNKS_AHEAD
+
+
+def test_streaming_kernel_rejects_a_bucket_after_its_flush():
+    """Bucket 5 reappears after bucket 6 started: the kernel raises
+    instead of writing the rows as extra chunks of bucket 5."""
+    from fileconvert_spark.operators import encode as E
+
+    first = _bucket_batches([50, 50], 100, start=5)
+    again = _bucket_batches([20], 100, start=5)
+    with pytest.raises(ValueError, match="bucket 5 reappeared"):
+        list(E.make_encode_fn(1000, "bucket")(iter(first + again)))

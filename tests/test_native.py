@@ -194,6 +194,22 @@ def test_fsst_decode_kernel_matches_on_any_stream(enc, cuts, n_symbols):
     assert np.array_equal(np.diff(offs), dec_lens)
 
 
+@requires_native
+@pytest.mark.parametrize("n", [0, 1, 15, 4079, 4080, 4081, 8160, 20011])
+def test_count_bytes2_matches_numpy(n):
+    """Both counts of the one-pass kernel equal NumPy's, on either side
+    of its 16 x 255-byte blocks, with either byte dense enough to fill a
+    lane (a lane counts at most 255 per block) and for a == b."""
+    rng = np.random.default_rng(n)
+    for data in (rng.integers(0, 256, n, dtype=np.uint8),
+                 np.full(n, 10, np.uint8),
+                 rng.choice(np.array([10, 47], np.uint8), n)):
+        for a, b in ((10, 47), (47, 10), (10, 10), (0, 255)):
+            assert native.count_bytes2(data, a, b) == (
+                int(np.count_nonzero(data == a)),
+                int(np.count_nonzero(data == b)))
+
+
 def _arrow_split_dedup(arr, sep):
     """What str_split_dedup must equal: Arrow's dictionary_encode of the
     split_pattern segments (of the whole values when ``sep`` is None)."""
@@ -952,6 +968,9 @@ _CRASH_CASES = {
     "str_split_dedup_negative_separator":
         "native.str_split_dedup(np.array([0, 2], np.int32),"
         " np.zeros(2, np.uint8), 1, -1)",
+    # a byte past 255 would count a truncated value
+    "count_bytes2_byte_past_255":
+        "native.count_bytes2(np.zeros(4, np.uint8), 10, 256)",
     # the counting walk reads match_len[pos] and 8 bytes per candidate
     "fsst_train_count_match_lengths_short":
         "native.fsst_train_count(np.zeros(64, np.uint8), np.array([64]),"

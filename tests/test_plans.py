@@ -90,10 +90,14 @@ def _hot_key_frames(spark):
 
 def _assignment(dfb):
     """Per-bucket row counts and a digest of the sorted (id, bucket)."""
+    return _pairs_digest([(r["id"], r["bucket"])
+                          for r in dfb.select("id", "bucket").collect()])
+
+
+def _pairs_digest(pairs):
     import hashlib
 
-    rows = sorted((r["id"], r["bucket"])
-                  for r in dfb.select("id", "bucket").collect())
+    rows = sorted(pairs)
     counts = [0] * 4
     for _, b in rows:
         counts[b] += 1
@@ -363,3 +367,162 @@ def test_clustered_encode_is_byte_deterministic(spark, tmp_path):
             for f in sorted(os.listdir(d))
         })
     assert shas[0] == shas[1]
+
+
+@pytest.mark.parametrize("n_buckets", [3, 13])
+def test_repartition_by_bucket_streams_whole_buckets(spark, n_buckets):
+    """Every bucket lands in exactly one task as one contiguous run, and
+    there are min(n_buckets, defaultParallelism) tasks."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from fileconvert_spark.operators.partitioning import repartition_by_bucket
+
+    df = spark.range(6000, numPartitions=5).withColumn(
+        "bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets)).cast("int"))
+
+    def probe(batches):
+        from pyspark import TaskContext
+
+        runs = []
+        for b in batches:
+            for v in b.column("bucket").to_pylist():
+                if not runs or runs[-1] != v:
+                    runs.append(v)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([TaskContext.get().partitionId()], pa.int32()),
+             pa.array([runs], pa.list_(pa.int32()))], names=["task", "runs"])
+
+    shuffled = repartition_by_bucket(df, n_buckets)
+    tasks = shuffled.mapInArrow(probe, "task int, runs array<int>").collect()
+    want_tasks = min(n_buckets, spark.sparkContext.defaultParallelism)
+    assert shuffled.rdd.getNumPartitions() == want_tasks
+    assert len(tasks) == want_tasks
+    runs = [b for t in tasks for b in t["runs"]]
+    assert sorted(runs) == list(range(n_buckets))   # one run per bucket
+
+
+def _mixed_width_frame(spark):
+    """8 of 23 repos hold 3-byte characters, the rest ASCII: byte and
+    character weights rank the repos differently."""
+    from pyspark.sql import functions as F
+
+    return spark.range(3000).select(
+        F.col("id"),
+        F.concat(F.lit("r"), (F.col("id") % 23).cast("string")).alias("repo"),
+        F.concat(F.lit("p/"), F.col("id").cast("string")).alias("path"),
+        F.when(F.col("id") % 23 < 8,
+               F.expr("repeat('中', cast(id % 97 as int))"))
+        .otherwise(F.expr("repeat('y', cast(2 * (id % 97) as int))"))
+        .alias("content"))
+
+
+# plan_buckets(_mixed_width_frame, 4, salt_cols=("path",)) as the code
+# before byte weights assigned it (character weights)
+CHAR_WEIGHT_ASSIGNMENT = ([783, 783, 783, 651], "1d1925bd116a9384")
+
+
+def test_bucket_weights_are_utf8_bytes(spark):
+    """The planner weighs UTF-8 bytes, as DEFAULT_BUCKET_BYTES and
+    ``total_bytes`` say; character weights stay available for old
+    tables and give the assignment they were written with."""
+    from pyspark.sql import functions as F
+
+    from fileconvert_spark.operators.partitioning import plan_buckets
+
+    df = _mixed_width_frame(spark)
+    octets, chars = df.agg(F.sum(F.octet_length("content")),
+                           F.sum(F.length("content"))).first()
+    assert octets > chars
+    dfb, info = plan_buckets(df, 4, salt_cols=("path",))
+    assert info["total_bytes"] == octets
+    assert _assignment(dfb) == ([653, 782, 783, 782], "b7f53208d1acec40")
+    dfc, info = plan_buckets(df, 4, salt_cols=("path",), weight_unit="chars")
+    assert info["total_bytes"] == chars
+    assert _assignment(dfc) == CHAR_WEIGHT_ASSIGNMENT
+    with pytest.raises(ValueError, match="weight_unit"):
+        plan_buckets(df, 4, weight_unit="runes")
+
+
+def _part_assignment(out_dir):
+    """_assignment's (counts, digest) of an encoded table, read from its
+    part files: each row's bucket is the part holding it."""
+    import pyarrow.parquet as pq
+
+    from fileconvert_spark.operators.encode import PAGE_CHUNK_ID, decode_chunk
+
+    data = os.path.join(out_dir, "data")
+    pairs = []
+    for name in sorted(os.listdir(data)):
+        rows = pq.read_table(os.path.join(data, name)).to_pylist()
+        pages = {r["column"]: r["dict"] for r in rows
+                 if r["chunk_id"] == PAGE_CHUNK_ID}
+        chunks = {}
+        for r in rows:
+            if r["chunk_id"] != PAGE_CHUNK_ID:
+                chunks.setdefault(r["chunk_id"], {})[r["column"]] = r
+        for cols in chunks.values():
+            ids = decode_chunk(cols, ["id"], pages).column(0).to_pylist()
+            pairs += [(i, int(name[5:10])) for i in ids]
+    return _pairs_digest(pairs)
+
+
+def test_resume_of_a_char_weighted_table_keeps_its_buckets(spark, tmp_path):
+    """A table whose _meta.json predates byte weights (no weight_unit)
+    resumes with character weights: its parts keep the assignment the
+    old code gave them, and a re-encoded part neither loses nor
+    duplicates rows. A fresh table pins byte weights."""
+    import json
+
+    from fileconvert_spark.plans.manifest import decode_table, encode_table
+
+    df = _mixed_width_frame(spark)
+    out = str(tmp_path / "enc")
+    kw = dict(n_buckets=4, salt_cols=("path",))
+    encode_table(spark, df, out, **kw)
+    meta_path = os.path.join(out, "_meta.json")
+    meta = json.load(open(meta_path))
+    assert meta["weight_unit"] == "bytes"
+    assert _part_assignment(out)[1] == "b7f53208d1acec40"
+
+    # the table as the old code wrote it: no weight_unit, char-weighted
+    # parts (written here by resuming into the emptied table)
+    del meta["weight_unit"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    for sub in ("data", "manifests"):
+        for name in os.listdir(os.path.join(out, sub)):
+            os.remove(os.path.join(out, sub, name))
+    os.remove(os.path.join(out, "_manifest_list.json"))
+    encode_table(spark, df, out, **kw)
+    assert _part_assignment(out) == CHAR_WEIGHT_ASSIGNMENT
+
+    # lose one part and resume again
+    os.remove(os.path.join(out, "data", "part-00001.parquet"))
+    summary = encode_table(spark, df, out, **kw)
+    assert summary["parts_encoded_this_run"] == 1
+    assert _part_assignment(out) == CHAR_WEIGHT_ASSIGNMENT
+    assert decode_table(spark, out).count() == df.count()
+
+
+def test_unclustered_encode_is_byte_reproducible(spark, tmp_path):
+    """Without cluster_by, two encodes of the same input write identical
+    part files: each task streams its buckets in order through one chunk
+    thread, so which bucket trains a worker's FSST tables no longer
+    depends on scheduling. Two buckets per task make the tables trained
+    on one bucket encode the next."""
+    import hashlib
+
+    from fileconvert_spark.corpus import make_codefiles
+    from fileconvert_spark.plans.manifest import encode_table
+
+    df = spark.createDataFrame(make_codefiles(6000, seed=5))
+    n = 2 * spark.sparkContext.defaultParallelism
+    shas = []
+    for i in range(2):
+        out = str(tmp_path / f"enc{i}")
+        encode_table(spark, df, out, n_buckets=n)
+        d = os.path.join(out, "data")
+        shas.append({f: hashlib.sha256(open(os.path.join(d, f), "rb").read()
+                                       ).hexdigest() for f in os.listdir(d)})
+    assert len(shas[0]) == n and shas[0] == shas[1]
