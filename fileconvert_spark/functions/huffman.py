@@ -294,7 +294,9 @@ def encode(vals: np.ndarray, lens: np.ndarray) -> bytes:
 
 
 def decode(buf: memoryview, n: int) -> tuple[np.ndarray, int]:
-    """Inverse of encode; returns (uint64 values, bytes consumed)."""
+    """Inverse of encode; returns (values, bytes consumed). The values
+    are uint32 as the C kernel writes them (uint64 on the NumPy path):
+    every caller indexes or narrows them, so they are not widened."""
     buf = memoryview(buf)
     table_bits = buf[0]
     k = U32.unpack_from(buf, 1)[0]
@@ -324,7 +326,7 @@ def decode(buf: memoryview, n: int) -> tuple[np.ndarray, int]:
     out = native.huff_decode(payload, lut_sym, lut_len, table_bits,
                              seg_off, seg_syms, n)
     if out is not None:
-        return out.astype(np.uint64), consumed
+        return out, consumed
     out = _decode_numpy(payload, lut_sym, lut_len, table_bits, seg_off,
                         seg_syms, n)
     return out, consumed

@@ -197,7 +197,7 @@ def _load() -> None:
     lib.str_gather_join.argtypes = [
         POINTER(c_int32), POINTER(c_uint8),     # dict offsets, dict data
         c_int64,                                # data_len
-        POINTER(c_int64), c_int64,              # idx, n_idx
+        ctypes.c_void_p, c_int64, c_int64,      # idx, idx_width, n_idx
         POINTER(c_int64), c_int64,              # counts (nullable), n_rows
         POINTER(c_uint8), c_int64,              # sep, sep_len
         POINTER(c_int32), POINTER(c_uint8),     # out_offs, out (nullable)
@@ -259,7 +259,7 @@ def _load() -> None:
 
     lib.huff_decode.restype = c_int64
     lib.huff_decode.argtypes = [
-        POINTER(c_uint8),                       # payload (+4 pad readable)
+        POINTER(c_uint8), c_int64,              # payload, nbytes
         POINTER(c_uint32), POINTER(c_uint8),    # lut_sym, lut_len
         c_int64,                                # table_bits
         POINTER(c_int64), c_int64,              # seg_off, n_seg
@@ -466,7 +466,8 @@ def str_gather_join(offsets, data, idx, counts=None, sep: bytes = b""):
     over its run of ``counts[i]`` indices (one index per row when
     ``counts`` is None), or None when the native library is unavailable.
     The dictionary is Arrow's layout: int32 ``offsets`` (k + 1 entries)
-    into uint8 ``data``. Raises ValueError on an index outside 0..k-1,
+    into uint8 ``data``. uint32 ``idx`` is read as is, any other integer
+    type as int64. Raises ValueError on an index outside 0..k-1,
     counts that are negative or do not sum to len(idx), and an output
     past 2**31 - 1 bytes, which it refuses before allocating."""
     import numpy as np
@@ -481,8 +482,13 @@ def str_gather_join(offsets, data, idx, counts=None, sep: bytes = b""):
             or bool((np.diff(offsets) < 0).any())):
         raise ValueError("str_gather_join: dictionary offsets are not "
                          f"non-decreasing within {data.size} data bytes")
-    idx = _as_int64(idx)
-    if idx.size and int(idx.view(np.uint64).max()) >= k:
+    idx = np.ascontiguousarray(idx)
+    if idx.dtype == np.uint32:      # Huffman decode's: read in place
+        top = idx
+    else:
+        idx = _as_int64(idx)
+        top = idx.view(np.uint64)   # a negative index reads as huge
+    if idx.size and int(top.max()) >= k:
         raise ValueError(f"str_gather_join: an index is outside 0..{k - 1}")
     if counts is not None:
         counts = check_runs(counts, idx.size, "str_gather_join")
@@ -491,7 +497,7 @@ def str_gather_join(offsets, data, idx, counts=None, sep: bytes = b""):
     p_i64 = ctypes.POINTER(ctypes.c_int64)
     p_i32 = ctypes.POINTER(ctypes.c_int32)
     args = (offsets.ctypes.data_as(p_i32), _u8p(data), data.size,
-            idx.ctypes.data_as(p_i64), idx.size,
+            idx.ctypes.data, idx.itemsize, idx.size,
             None if counts is None else counts.ctypes.data_as(p_i64),
             n_rows, _u8p(sep_a), sep_a.size)
     total = lib.str_gather_join(*args, None, None)
@@ -889,9 +895,6 @@ def huff_decode(payload, lut_sym, lut_len, table_bits: int, seg_off,
     if lib is None:
         return None
     payload = np.ascontiguousarray(payload, dtype=np.uint8)
-    # the kernel reads 4-byte windows at the tail: give it a padded copy
-    buf = np.zeros(payload.size + 4, dtype=np.uint8)
-    buf[: payload.size] = payload
     lut_sym = np.ascontiguousarray(lut_sym, dtype=np.uint32)
     lut_len = np.ascontiguousarray(lut_len, dtype=np.uint8)
     seg_off = np.ascontiguousarray(seg_off, dtype=np.int64)
@@ -911,7 +914,7 @@ def huff_decode(payload, lut_sym, lut_len, table_bits: int, seg_off,
                          f"of {payload.size} bytes")
     out = np.empty(max(int(n_seg * seg_syms), 1), dtype=np.uint32)
     rc = lib.huff_decode(
-        _u8p(buf),
+        _u8p(payload), payload.size,
         lut_sym.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
         _u8p(lut_len), int(table_bits),
         seg_off.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),

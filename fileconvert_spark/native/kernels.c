@@ -193,7 +193,9 @@ static inline void copy_value(uint8_t *out, const uint8_t *data,
 /* Dictionary gather-join into an Arrow `string` array: row i is
  * sep.join(dict[idx[j]]) over its run of counts[i] consecutive indices
  * (one index per row when counts is NULL, so n_rows == n_idx). dict is
- * the Arrow layout: k + 1 offsets into data_len bytes of data.
+ * the Arrow layout: k + 1 offsets into data_len bytes of data. idx holds
+ * uint32 (idx_width 4, as Huffman decode returns them) or int64 (8)
+ * indices, read in place.
  *
  * Two calls. With out_data NULL, a read-only size pass returns the
  * output byte count (stopping once it passes INT32_MAX). Then the caller
@@ -203,13 +205,17 @@ static inline void copy_value(uint8_t *out, const uint8_t *data,
  * non-decreasing within data; counts are >= 0 and sum to n_idx; the
  * size-pass total fits int32; out_data is writable 32 bytes past it.
  */
-int64_t str_gather_join(const int32_t *doffs, const uint8_t *data,
-                        int64_t data_len,
-                        const int64_t *idx, int64_t n_idx,
-                        const int64_t *counts, int64_t n_rows,
-                        const uint8_t *sep, int64_t sep_len,
-                        int32_t *out_offs, uint8_t *out_data)
+static inline __attribute__((always_inline)) int64_t
+gather_join(const int32_t *doffs, const uint8_t *data, int64_t data_len,
+            const void *idx, int u32, int64_t n_idx,
+            const int64_t *counts, int64_t n_rows,
+            const uint8_t *sep, int64_t sep_len,
+            int32_t *out_offs, uint8_t *out_data)
 {
+    /* u32 is a constant at each call site below, so each copy of this
+     * body reads one index type with no per-index branch */
+#define IDX(j) (u32 ? (int64_t)((const uint32_t *)idx)[j] \
+                    : ((const int64_t *)idx)[j])
     if (!out_data) {
         int64_t total = 0, joins = 0;
         if (counts)
@@ -219,15 +225,15 @@ int64_t str_gather_join(const int32_t *doffs, const uint8_t *data,
             return joins;
         total = joins * sep_len;
         for (int64_t j = 0; j < n_idx && total <= INT32_MAX; j++)
-            total += doffs[idx[j] + 1] - doffs[idx[j]];
+            total += doffs[IDX(j) + 1] - doffs[IDX(j)];
         return total;
     }
     int64_t o = 0, j = 0;
     out_offs[0] = 0;
     if (!counts) {          /* one value per row: a tighter loop */
         for (int64_t i = 0; i < n_rows; i++) {
-            const int64_t a = doffs[idx[i]];
-            const int64_t len = doffs[idx[i] + 1] - a;
+            const int64_t a = doffs[IDX(i)];
+            const int64_t len = doffs[IDX(i) + 1] - a;
             copy_value(out_data + o, data, data_len, a, len);
             o += len;
             out_offs[i + 1] = (int32_t)o;
@@ -244,14 +250,29 @@ int64_t str_gather_join(const int32_t *doffs, const uint8_t *data,
                     memcpy(out_data + o, sep, (size_t)sep_len);
                 o += sep_len;
             }
-            const int64_t a = doffs[idx[j]];
-            const int64_t len = doffs[idx[j] + 1] - a;
+            const int64_t a = doffs[IDX(j)];
+            const int64_t len = doffs[IDX(j) + 1] - a;
             copy_value(out_data + o, data, data_len, a, len);
             o += len;
         }
         out_offs[i + 1] = (int32_t)o;
     }
     return o;
+#undef IDX
+}
+
+int64_t str_gather_join(const int32_t *doffs, const uint8_t *data,
+                        int64_t data_len,
+                        const void *idx, int64_t idx_width, int64_t n_idx,
+                        const int64_t *counts, int64_t n_rows,
+                        const uint8_t *sep, int64_t sep_len,
+                        int32_t *out_offs, uint8_t *out_data)
+{
+    if (idx_width == 4)
+        return gather_join(doffs, data, data_len, idx, 1, n_idx, counts,
+                           n_rows, sep, sep_len, out_offs, out_data);
+    return gather_join(doffs, data, data_len, idx, 0, n_idx, counts,
+                       n_rows, sep, sep_len, out_offs, out_data);
 }
 
 /* Undo PNG row filters (RFC 2083 §6.2-6.6) for 8-bit samples.
@@ -759,15 +780,16 @@ int64_t simhash_batch(const uint64_t *wh, const int64_t *wc, int64_t nd,
 /* ------------------------------------------------------------------ *
  * Canonical Huffman segment decode — mirrors huffman._decode_numpy.
  *
- * payload: concatenated byte-aligned segment bitstreams, readable for
- * seg_off[n_seg] + 4 bytes (caller zero-pads, matching the NumPy
- * window reads). lut_sym/lut_len: the 2^table_bits prefix LUT built by
+ * payload: concatenated byte-aligned segment bitstreams, nbytes long;
+ * a window reaching past the end reads zero bytes there, matching the
+ * NumPy path's zero padding, so the caller passes the payload in place.
+ * lut_sym/lut_len: the 2^table_bits prefix LUT built by
  * huffman._decode_lut (lut_len[w] = 0 marks an invalid window, only
  * reachable on corrupt streams). seg_off: n_seg+1 byte offsets into
  * payload. out must hold n uint32 symbols. Returns n, or -(seg+1) on a
  * corrupt segment (invalid code / bit-cursor overrun).
  * ------------------------------------------------------------------ */
-int64_t huff_decode(const uint8_t *payload,
+int64_t huff_decode(const uint8_t *payload, int64_t nbytes,
                     const uint32_t *lut_sym, const uint8_t *lut_len,
                     int64_t table_bits,
                     const int64_t *seg_off, int64_t n_seg,
@@ -783,12 +805,19 @@ int64_t huff_decode(const uint8_t *payload,
         uint32_t *dst = out + s * seg_syms;
         for (int64_t j = 0; j < count; j++) {
             const uint64_t b = bp >> 3;
-            const uint32_t win =
-                (((uint32_t)payload[b] << 24)
-                 | ((uint32_t)payload[b + 1] << 16)
-                 | ((uint32_t)payload[b + 2] << 8)
-                 | (uint32_t)payload[b + 3])
-                >> (32 - (int)table_bits - (int)(bp & 7u));
+            uint32_t win;
+            if (b + 4 <= (uint64_t)nbytes) {
+                win = ((uint32_t)payload[b] << 24)
+                      | ((uint32_t)payload[b + 1] << 16)
+                      | ((uint32_t)payload[b + 2] << 8)
+                      | (uint32_t)payload[b + 3];
+            } else {        /* the last 3 bytes: zeros past the end */
+                win = 0;
+                for (uint64_t t = 0; t < 4; t++)
+                    win = (win << 8)
+                          | (b + t < (uint64_t)nbytes ? payload[b + t] : 0u);
+            }
+            win >>= 32 - (int)table_bits - (int)(bp & 7u);
             const uint32_t w = win & mask;
             const uint8_t l = lut_len[w];
             if (!l)

@@ -17,7 +17,9 @@ overlap instead of taking turns. Parts stay keyed by bucket.
 
 Decode is one chunk decoder (``decode_chunk``) with two callers:
 plans/manifest.py ``decode_table`` reads an encoded table part by part
-with no shuffle, and ``decode_df`` restores an in-memory ``encode_df``
+with no shuffle, one task per core, its chunks decoding on the chunk
+thread (``decode_chunks``) while the task's thread returns the previous
+one, and ``decode_df`` restores an in-memory ``encode_df``
 result after one shuffle of *compressed* bytes grouped by (part_id,
 chunk_id). Either way each chunk's columns come back bit-identically.
 
@@ -284,9 +286,10 @@ _WORKER_FSST_CACHE = codecs.FsstTableCache()
 # their column's thread: a pool thread never submits, which with two
 # workers could deadlock.
 _COLUMN_THREADS = 2
-# A task's chunks encode one at a time, in order, on one thread per
-# process (make_encode_fn): one chunk thread keeps each worker's FSST
-# cache seeing chunks in input order, whatever the scheduling.
+# A task's chunks encode (make_encode_fn) or decode (decode_chunks) one
+# at a time, in order, on one thread per process: one chunk thread keeps
+# each worker's FSST cache seeing chunks in input order, whatever the
+# scheduling.
 _POOL_THREADS = {"fcs-encode": _COLUMN_THREADS, "fcs-chunk": 1}
 _POOLS: dict[str, ThreadPoolExecutor] = {}
 _POOLS_LOCK = threading.Lock()
@@ -977,8 +980,33 @@ def decode_chunk(rows: dict[str, dict], column_order: list[str],
 
 
 # chunks handed to the chunk thread and not yet yielded, per task: one
-# encoding and one waiting, while the task's thread reads the next one
+# encoding (or decoding) and one waiting, while the task's thread reads
+# the next one
 _CHUNKS_AHEAD = 2
+
+
+def decode_chunks(chunks: Iterator[tuple[dict, dict]],
+                  column_order: list[str]) -> Iterator[pa.RecordBatch]:
+    """``decode_chunk`` over ``chunks``, (rows, pages) pairs, streamed:
+    each chunk decodes on the per-process chunk thread while this
+    thread yields the previous one and pulls the next (for decode_table,
+    reading the next part file when a part ends). At most
+    ``_CHUNKS_AHEAD`` decoded chunks are held, batches come out in chunk
+    order, and the first failing chunk raises in its turn. On any error,
+    or when the consumer stops early, chunks not started are dropped and
+    a running one finishes before the generator returns."""
+    pool = _pool("fcs-chunk")
+    pending: deque[Future] = deque()
+    try:
+        for rows, pages in chunks:
+            yield from _yield_ready(pending, _CHUNKS_AHEAD - 1)
+            pending.append(pool.submit(decode_chunk, rows, column_order,
+                                       pages))
+        yield from _yield_ready(pending, 0)
+    finally:
+        for f in pending:
+            f.cancel()
+        wait(pending)
 
 
 def _bucket_runs(b: pa.RecordBatch, col: str

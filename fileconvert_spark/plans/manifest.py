@@ -873,7 +873,8 @@ def pack_consecutive(sizes: list, target: int) -> list[list[int]]:
     bytes, order kept (consecutive parts keep cluster_by key locality
     and tight zones). An item of ``target`` or more, or of unknown size
     (None), stands alone; smaller items pack until their run reaches
-    ``target``. Shared by decode task groups and compaction merges."""
+    ``target``. Used by compaction merges; decode tasks use
+    ``balanced_runs``, which balances the runs against each other."""
     groups: list[list[int]] = []
     cur: list[int] = []
     cur_b = 0
@@ -894,9 +895,69 @@ def pack_consecutive(sizes: list, target: int) -> list[list[int]]:
     return groups
 
 
-# decode task-group size: consecutive parts pack into tasks of about this
-# many bytes, floored so at least 4 groups per core exist (see
-# decode_table "Task granularity")
+def part_chunk_rows(path: str, filters=None
+                    ) -> Iterator[tuple[dict, dict]]:
+    """A part file's enc rows per chunk, in chunk order, as decode_chunk
+    takes them: (column -> enc row, the part's dictionary pages by
+    column). ``filters``: pyarrow filters on the part's rows (projection,
+    pruned chunks)."""
+    # one C-level conversion for the whole part file instead of per-cell
+    # .as_py() round trips through Python objects
+    by_chunk: dict[int, dict[str, dict]] = {}
+    pages: dict[str, bytes] = {}
+    for row in fsio.read_parquet(path, filters=filters).to_pylist():
+        if row["chunk_id"] == PAGE_CHUNK_ID:
+            if row["dict"] is not None:
+                pages[row["column"]] = row["dict"]
+        else:
+            by_chunk.setdefault(row["chunk_id"], {})[row["column"]] = row
+    for cid in sorted(by_chunk):
+        yield by_chunk[cid], pages
+
+
+def balanced_runs(sizes: list, n: int, cap: int) -> list[list[int]]:
+    """Split items into runs of consecutive indices, order kept: exactly
+    ``min(len(sizes), n)`` runs, with the largest as small as any such
+    split allows, unless ``cap`` or unknown sizes force more. No run
+    passes ``cap`` bytes unless one item alone does, and an item of
+    unknown size (None) stands alone. The runs are the tasks of
+    decode_table. Sizes [1, 5, 1, 3] in 2 runs are [[0, 1], [2, 3]],
+    where ``pack_consecutive`` at target 5 makes 3, because a large item
+    closes the run before it."""
+    w = [None if s is None else max(int(s), 1) for s in sizes]
+
+    def cut(bound: int) -> list[list[int]]:
+        # greedy: a run closes before the item that would take it past
+        # bound (the fewest runs that fit it), and once the items left
+        # can each stand alone within n runs, they do
+        runs: list[list[int]] = []
+        run_b = None
+        for i, s in enumerate(w):
+            if (s is None or run_b is None or run_b + s > bound
+                    or len(runs) + len(w) - i <= n):
+                runs.append([i])
+                run_b = s
+            else:
+                runs[-1].append(i)
+                run_b += s
+        return runs
+
+    known = [s for s in w if s is not None]
+    if not known:
+        return cut(0)
+    n = max(n, -(-sum(known) // cap))
+    lo, hi = max(known), sum(known)
+    while lo < hi:  # the least bound whose greedy cut fits n runs
+        mid = (lo + hi) // 2
+        if len(cut(mid)) <= n:
+            hi = mid
+        else:
+            lo = mid + 1
+    return cut(min(lo, cap))
+
+
+# most bytes of part files one decode task reads, unless one part alone
+# is larger (see decode_table "Task granularity")
 DECODE_TASK_BYTES = 64 << 20
 
 
@@ -959,36 +1020,40 @@ def decode_table(spark, out_dir: str,
 
     Task granularity: every task pays a fixed cost (scheduling, Python
     worker Arrow stream setup, parquet footer read). On ``local[2]``, a
-    no-op ``mapInArrow`` task over ``spark.range`` costs ~53 ms of a
-    core when the worker has already imported the engine, ~270 ms when
-    it has not, against ~4 ms for a JVM-only range task. So the driver
-    packs CONSECUTIVE parts (preserving cluster_by key locality) into
-    task groups of about DECODE_TASK_BYTES with ``pack_consecutive``,
-    using the per-part file sizes the manifest list already carries,
-    with the target floored so at least 4x defaultParallelism groups
-    exist (never under-parallelize a big decode). Measured on ``local[2]`` with the
-    100k-file codefiles corpus, grouped vs one task per part: 1024 parts
-    3.6-4.0 s vs 47.2-48.5 s; 256 parts 1.47-1.53 s vs 9.1-9.4 s; 8
-    parts 0.67-0.86 s vs 0.71-0.84 s. Where a no-op task's time goes:
-    its Python worker waits 39-44 ms for the 1-row input batch over TCP
-    (Linux's delayed ACK), then idles ~45 ms in ``read_int`` until the
-    JVM sends the next task. ``spark.python.unix.domain.socket.enabled``
-    cuts that wait to ~0.5 ms (an 8-task no-op job 0.43 -> 0.30 s) but
-    did not move the codefiles scan (parent 178.5/168.9/174.1 vs
-    172.1/159.5/161.3 MB/s with it, 3 pairs), so it is not set. With the
-    C gather-join and FSST decode kernels, a 2x defaultParallelism floor
-    scanned at 261/255 MB/s against 257/239 MB/s with 4x (2 pairs, seed
-    411), within the run-to-run spread, so the floor stays. The groups
-    are the partitions of ``spark.range(len(groups))``; the kernel looks
-    each id up in the group list, so no exchange stage runs before the
-    decode.
+    no-op ``mapInArrow`` job costs 0.113-0.128 s with 1 task, 0.123-0.139
+    s with 2, 0.169-0.189 s with 4 and 0.275-0.292 s with 8 (medians of
+    11), while a serial in-process decode of the whole 8-part codefiles
+    table takes 0.17 s. So the driver runs at most defaultParallelism
+    decode tasks: ``balanced_runs`` splits the parts into that many runs
+    of CONSECUTIVE parts (cluster_by key locality and row order kept),
+    balanced by the ``file_bytes`` the manifest list already carries,
+    and caps a run at DECODE_TASK_BYTES so a large table still gets many
+    tasks. A part without a manifest has no known size and runs alone.
+    Inside a task, ``decode_chunks`` decodes each chunk on the worker's
+    chunk thread while the task's thread returns the previous one to the
+    JVM and reads the next part file; at most two decoded chunks are
+    held, never a whole decoded part. perfbench codefiles_scan on
+    ``local[2]`` (4-core host), against the floor of 4 groups per core
+    this replaced, 10 interleaved pairs on seeds 1, 2, 3, 5 and the
+    held-out 1000003: median 313.7 -> 498.3 MB/s, 10/10 won; seed 1's 8
+    parts run as 2 tasks instead of 6, and a no-op decode of its table
+    fell from 0.35-0.36 s to 0.21 s (traced).
+    ``spark.python.unix.domain.socket.enabled`` cuts a no-op task's wait
+    for its input batch over TCP (Linux's delayed ACK) and added
+    1.05-1.32x on top of one task per core (4 seeds, sequential runs),
+    but it is not set: the driver binds the socket under
+    ``java.io.tmpdir``, and session start fails with ``OSError: AF_UNIX
+    path too long`` when that directory is long (seen with a
+    103-character one). The groups are the partitions of
+    ``spark.range(len(groups))``; the kernel looks each id up in the
+    group list, so no exchange stage runs before the decode.
 
     The table's _meta.json, _schema.json and manifest list are each
     read once per call.
     """
     from pyspark.sql.types import StructType
 
-    from ..operators.encode import decode_chunk
+    from ..operators.encode import decode_chunks
     from .keyindex import part_may_match
 
     meta = read_table_meta(out_dir)
@@ -1061,22 +1126,21 @@ def decode_table(spark, out_dir: str,
                 ki_types[f.name] = ("string" if tn == "string"
                                     else "int" if tn in _int_t else tn)
 
-    # task groups (see docstring): consecutive parts pack into
-    # ~target-byte tasks so decode wall tracks bytes, not part count. A
-    # part without a manifest has no known size and gets its own group —
-    # grouping is a performance layer, never a correctness one.
+    # task groups (see docstring): at most one run of consecutive parts
+    # per core, balanced by bytes. A part without a manifest has no known
+    # size and gets its own group — grouping is a performance layer,
+    # never a correctness one.
     fsizes = []
     for p in files:
         m = manifests.get(part_id_of(p))
         fsizes.append(None if m is None else int(m.get("file_bytes") or 0))
     par = max(spark.sparkContext.defaultParallelism, 1)
-    known = sum(sz for sz in fsizes if sz is not None)
-    target = max(min(DECODE_TASK_BYTES, known // (4 * par)), 1)
-    groups = [[files[i] for i in g] for g in pack_consecutive(fsizes, target)]
+    groups = [[files[i] for i in g]
+              for g in balanced_runs(fsizes, par, DECODE_TASK_BYTES)]
     flt = [("column", "in", sorted(column_order))] \
         if len(column_order) < len(all_names) else None
 
-    def _decode_part(path):
+    def _part_chunks(path):
         part_flt = flt
         pid = part_id_of(path)
         if ki_cols and pid is not None and not part_may_match(
@@ -1114,27 +1178,16 @@ def decode_table(spark, out_dir: str,
                 # any chunk pruning — dp chunks decode through them
                 part_flt = (part_flt or []) + [
                     ("chunk_id", "in", keep + [PAGE_CHUNK_ID])]
-        # one C-level conversion for the whole part file instead of
-        # per-cell .as_py() round trips through Python objects
-        by_chunk: dict[int, dict[str, dict]] = {}
-        pages: dict[str, bytes] = {}
-        for row in fsio.read_parquet(path, filters=part_flt).to_pylist():
-            if row["chunk_id"] == PAGE_CHUNK_ID:
-                if row["dict"] is not None:
-                    pages[row["column"]] = row["dict"]
-            else:
-                by_chunk.setdefault(row["chunk_id"], {})[row["column"]] = row
-        for cid in sorted(by_chunk):
-            yield decode_chunk(by_chunk[cid], column_order, pages)
+        yield from part_chunk_rows(path, part_flt)
 
     def decode_groups(batches):
         # mapInArrow: decoded chunks go back to the JVM as Arrow batches
         # directly — no pandas materialization on the decode hot path;
         # each incoming id row names one task GROUP of part paths
-        for b in batches:
-            for i in b.column(0).to_pylist():
-                for path in groups[i]:
-                    yield from _decode_part(path)
+        return decode_chunks(
+            (chunk for b in batches for i in b.column(0).to_pylist()
+             for path in groups[i] for chunk in _part_chunks(path)),
+            column_order)
 
     # one task per group, straight from a range: no exchange stage
     dec = spark.range(len(groups), numPartitions=max(len(groups), 1)) \

@@ -60,7 +60,7 @@ def test_plan_groups_packs_consecutive():
 
 
 def test_pack_consecutive_order_big_and_unknown_parts():
-    """The one packer behind decode task groups and compaction merges:
+    """The packer behind compaction merges:
     order kept, a part >= target alone, and a part of unknown size (no
     manifest) in its own group rather than closing the run before it."""
     sizes = [100, 100, 500, 100, None, 100, 100, 100, 100]

@@ -1404,3 +1404,114 @@ def test_streaming_kernel_rejects_a_bucket_after_its_flush():
     again = _bucket_batches([20], 100, start=5)
     with pytest.raises(ValueError, match="bucket 5 reappeared"):
         list(E.make_encode_fn(1000, "bucket")(iter(first + again)))
+
+
+def _part_files(tmp_path, corrupt_part=None):
+    """Two part files of three chunks each, written in process; with
+    ``corrupt_part``, one payload byte of that part's middle chunk is
+    flipped after its sha was taken. Returns (paths, column order)."""
+    import time
+
+    import pyarrow as pa
+
+    from fileconvert_spark.corpus import make_codefiles
+    from fileconvert_spark.operators import encode as E
+    from fileconvert_spark.plans.manifest import write_part_file
+
+    tbl = pa.Table.from_pandas(make_codefiles(600, seed=16),
+                               preserve_index=False)
+    for sub in ("data", "manifests"):
+        (tmp_path / sub).mkdir()
+    paths = []
+    for pid in range(2):
+        rows = []
+        for cid in range(3):
+            rows += E.encode_chunk_table(
+                tbl.slice(300 * pid + 100 * cid, 100), pid, cid).to_pylist()
+        if pid == corrupt_part:
+            row = next(r for r in rows
+                       if r["chunk_id"] == 1 and r["column"] == "content")
+            p = bytearray(row["payload"])
+            p[len(p) // 2] ^= 0x5A
+            row["payload"] = bytes(p)
+        write_part_file(str(tmp_path), pid, rows, time.time())
+        paths.append(str(tmp_path / "data" / f"part-{pid:05d}.parquet"))
+    return paths, tbl.column_names
+
+
+def _group_chunks(paths):
+    from fileconvert_spark.plans.manifest import part_chunk_rows
+
+    return (c for p in paths for c in part_chunk_rows(p))
+
+
+def test_decode_pipeline_matches_sequential_decode(tmp_path):
+    """decode_table's in-task pipeline yields, in order, the batches of
+    decoding each chunk of a group's parts one after another."""
+    from fileconvert_spark.operators import encode as E
+
+    paths, order = _part_files(tmp_path)
+    got = list(E.decode_chunks(_group_chunks(paths), order))
+    want = [E.decode_chunk(rows, order, pages)
+            for rows, pages in _group_chunks(paths)]
+    assert len(want) == 6
+    assert [b.to_pylist() for b in got] == [b.to_pylist() for b in want]
+
+
+def test_decode_pipeline_raises_corrupt_chunk_in_its_turn(tmp_path):
+    """A flipped payload byte in the second part of a group: the first
+    part's batches and the second part's first chunk come out, then a
+    DecodeError naming part 1."""
+    from fileconvert_spark.operators import encode as E
+
+    paths, order = _part_files(tmp_path, corrupt_part=1)
+    got = []
+    with pytest.raises(E.DecodeError, match="part=1 chunk=1 column=content"):
+        for b in E.decode_chunks(_group_chunks(paths), order):
+            got.append(b)
+    assert [b.num_rows for b in got] == [100] * 4
+
+
+def test_decode_pipeline_early_close_leaves_nothing_running(
+        tmp_path, monkeypatch):
+    """Closing the generator after its first batch cancels the chunks
+    not started and waits for the running one: no future is left
+    running, and at most _CHUNKS_AHEAD chunks were ever handed over."""
+    import threading
+    import time
+
+    from fileconvert_spark.operators import encode as E
+
+    paths, order = _part_files(tmp_path)
+    real = E.decode_chunk
+    lock = threading.Lock()
+    state = {"running": 0, "started": 0}
+
+    def slow(rows, column_order, pages=None):
+        with lock:
+            state["running"] += 1
+            state["started"] += 1
+        try:
+            time.sleep(0.05)
+            return real(rows, column_order, pages)
+        finally:
+            with lock:
+                state["running"] -= 1
+
+    monkeypatch.setattr(E, "decode_chunk", slow)
+    futures = []
+    pool = E._pool("fcs-chunk")
+
+    class Recording:
+        def submit(self, *a, **kw):
+            futures.append(pool.submit(*a, **kw))
+            return futures[-1]
+
+    monkeypatch.setattr(E, "_pool", lambda name: Recording())
+    gen = E.decode_chunks(_group_chunks(paths), order)
+    assert next(gen).num_rows == 100
+    gen.close()
+    assert state["running"] == 0
+    assert not any(f.running() for f in futures)
+    assert len(futures) <= 1 + E._CHUNKS_AHEAD
+    assert state["started"] < 6

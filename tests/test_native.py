@@ -99,12 +99,14 @@ _DECODE = settings(max_examples=60, deadline=None, database=None)
        st.lists(st.lists(st.integers(min_value=0), max_size=5), max_size=20),
        st.sampled_from(["\n", "/", ""]),
        st.integers(min_value=0, max_value=3),
-       st.booleans())
-def test_str_gather_join_matches_take_join(values, rows, sep, skip, joined):
+       st.booleans(),
+       st.sampled_from([np.uint32, np.uint64]))
+def test_str_gather_join_matches_take_join(values, rows, sep, skip, joined,
+                                           idx_type):
     """Property: the C gather-join equals Arrow take (+ binary_join) on
     empty and multi-byte values, rows of zero segments, every separator,
-    a sliced dictionary (non-zero Arrow offset) and an empty dictionary
-    with all-empty rows."""
+    a sliced dictionary (non-zero Arrow offset), an empty dictionary
+    with all-empty rows, and uint32 (Huffman-decoded) or uint64 indices."""
     import pyarrow as pa
 
     from fileconvert_spark.functions import codecs
@@ -112,7 +114,7 @@ def test_str_gather_join_matches_take_join(values, rows, sep, skip, joined):
     uniques = pa.array(["pre"] * skip + values, type=pa.string()).slice(skip)
     k = len(values)
     rows = [[i % k for i in r] if k else [] for r in rows]
-    idx = np.array([i for r in rows for i in r], dtype=np.uint64)
+    idx = np.array([i for r in rows for i in r], dtype=idx_type)
     if joined:
         counts = np.array([len(r) for r in rows], dtype=np.uint64)
         want = [sep.join(values[i] for i in r) for r in rows]
@@ -915,6 +917,10 @@ _CRASH_CASES = {
     "str_gather_join_index_past_dictionary":
         "native.str_gather_join(np.array([0, 1, 2], np.int32),"
         " np.zeros(2, np.uint8), np.array([0, 1 << 40]))",
+    # uint32 indices (Huffman decode's) are read in place, unwidened
+    "str_gather_join_uint32_index_past_dictionary":
+        "native.str_gather_join(np.array([0, 1, 2], np.int32),"
+        " np.zeros(2, np.uint8), np.array([0, 1 << 30], np.uint32))",
     "str_gather_join_negative_index":
         "native.str_gather_join(np.array([0, 1, 2], np.int32),"
         " np.zeros(2, np.uint8), np.array([0, -(1 << 40)]))",
@@ -1011,6 +1017,38 @@ def test_native_bad_arguments_raise_value_error(case):
         "    print('ValueError:', e)\n")
     assert r.returncode == 0, (r.returncode, r.stderr[-2000:])
     assert r.stdout.startswith("ValueError:"), r.stdout
+
+
+@requires_native
+def test_huff_decode_reads_no_byte_past_the_payload():
+    """huff_decode reads the payload in place: a stream that ends right
+    before an unreadable page decodes, its tail windows reading zeros
+    past the end as the NumPy path's padding does. In a child process,
+    because a read past the end would kill it."""
+    r = _run_child(
+        "import ctypes, mmap\n"
+        "import numpy as np\n"
+        "from fileconvert_spark.functions import huffman as H\n"
+        "pg = mmap.PAGESIZE\n"
+        "m = mmap.mmap(-1, 2 * pg)\n"
+        "buf = np.frombuffer(m, np.uint8)\n"
+        "libc = ctypes.CDLL(None)\n"
+        "libc.mprotect.argtypes = [ctypes.c_void_p, ctypes.c_size_t,"
+        " ctypes.c_int]\n"
+        "assert libc.mprotect(buf.ctypes.data + pg, pg, 0) == 0\n"
+        "rng = np.random.default_rng(5)\n"
+        "vals = rng.integers(0, 50, 3000).astype(np.uint64)\n"
+        "lens = H.code_lengths(np.bincount(vals.astype(np.int64), minlength=50))\n"
+        "blob = np.frombuffer(H.encode(vals, lens), np.uint8)\n"
+        "assert blob.size < pg\n"
+        "tail = buf[pg - blob.size: pg]\n"
+        "tail[:] = blob\n"
+        "out, used = H.decode(memoryview(tail), vals.size)\n"
+        "assert out.dtype == np.uint32 and used == blob.size\n"
+        "assert np.array_equal(out, vals)\n"
+        "print('ok')\n")
+    assert r.returncode == 0, (r.returncode, r.stderr[-2000:])
+    assert r.stdout.strip() == "ok"
 
 
 _REJECT = settings(max_examples=60, deadline=None, database=None)

@@ -177,6 +177,80 @@ def test_narrow_decode_no_data_exchange(spark, tmp_path):
     assert p.count(") Exchange") <= 1
     assert "MapInArrow" in p or "mapInArrow" in p.lower()
 
+
+def _least_largest_run(sizes, n):
+    """Brute force: the smallest possible largest run over every split
+    of ``sizes`` into at most ``n`` runs of consecutive items."""
+    best = {(0, 0): 0}
+    for g in range(1, n + 1):
+        for i in range(g, len(sizes) + 1):
+            best[(i, g)] = min(
+                max(best[(j, g - 1)], sum(sizes[j:i]))
+                for j in range(g - 1, i) if (j, g - 1) in best)
+    return min(best[(len(sizes), g)]
+               for g in range(1, min(n, len(sizes)) + 1))
+
+
+def test_balanced_runs_split():
+    """Decode task groups: runs of consecutive parts in part order, as
+    many as parts or cores allow (never more under the cap), the largest
+    as small as any such split allows, no run past the cap unless one
+    part alone is, and a part of unknown size (no manifest) alone."""
+    import random
+
+    from fileconvert_spark.plans.manifest import (
+        balanced_runs,
+        pack_consecutive,
+    )
+
+    # a large part flushes pack_consecutive's run: 3 groups for 2 cores
+    assert len(pack_consecutive([1, 5, 1, 3], 5)) == 3
+    assert balanced_runs([1, 5, 1, 3], 2, 1 << 30) == [[0, 1], [2, 3]]
+    assert balanced_runs([], 4, 100) == []
+    # over n * cap bytes: more runs than cores, each within the cap
+    assert balanced_runs([10] * 10, 2, 30) == [[0, 1, 2], [3, 4, 5],
+                                               [6, 7, 8], [9]]
+    rng = random.Random(16)
+    for _ in range(400):
+        n, cap = rng.randrange(1, 6), rng.randrange(20, 400)
+        sizes = [None if rng.random() < 0.08 else rng.randrange(0, 90)
+                 for _ in range(rng.randrange(0, 12))]
+        runs = balanced_runs(sizes, n, cap)
+        assert [i for r in runs for i in r] == list(range(len(sizes)))
+        w = [None if s is None else max(s, 1) for s in sizes]
+        for r in runs:
+            if len(r) > 1:
+                assert None not in [w[i] for i in r]
+                assert sum(w[i] for i in r) <= cap
+        if None not in w and sum(w) <= cap:
+            assert len(runs) == min(len(w), n)
+            if w:
+                assert max(sum(w[i] for i in r) for r in runs) == \
+                    _least_largest_run(w, n)
+
+
+def test_decode_runs_at_most_one_task_per_core(spark, tmp_path):
+    """A multi-part table under DECODE_TASK_BYTES decodes in
+    min(parts, defaultParallelism) tasks, with every row."""
+    from fileconvert_spark.plans.manifest import (
+        decode_table,
+        encode_table,
+        read_all_manifests,
+    )
+
+    docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+    par = spark.sparkContext.defaultParallelism
+    for n_buckets in (3, par + 3):
+        out = str(tmp_path / f"enc{n_buckets}")
+        encode_table(spark, docs, out, n_buckets=n_buckets, key_col="source",
+                     salt_cols=("doc_id",), weight_col="text")
+        n_parts = len(read_all_manifests(out))
+        assert n_parts > 1
+        dec = decode_table(spark, out)
+        assert dec.rdd.getNumPartitions() == min(n_parts, par)
+        assert dec.count() == docs.count()
+
+
 def test_lsh_band_join_carries_no_text(spark):
     """The MinHash-LSH band explode/self-join must shuffle only (id, band,
     band_key) — never the document bodies (VERDICT r1 item 4). Texts may

@@ -82,7 +82,9 @@ def run_encode_job(src: str, out: str, n_buckets: int,
     if kill_at_fraction is not None:
         target = max(1, int(n_buckets * kill_at_fraction))
         while proc.poll() is None:
-            time.sleep(2.0)
+            # a task streams many buckets back to back, so parts land in
+            # bursts: a coarse poll can miss the whole encode
+            time.sleep(0.1)
             if len(scan_done_parts(out)) >= target:
                 break
         proc.send_signal(signal.SIGKILL)
